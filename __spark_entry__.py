@@ -46,7 +46,8 @@ from adenhq_hive_spark.queries import all_queries
 # rows-only, so its oracle-backed gate pl_semdedup_check carries the
 # witness), then the ENTIRE r5-cohort balance (26 rows — the 50-key
 # CORRECTNESS_r05 ledger minus its 17-row head witnessed in r11, the
-# rows-only entries, and the two already in this round's head), then
+# four rows-only entries, the two already in this round's head, and
+# pl_trigram_search, re-witnessed in r11's changed-plans head), then
 # the r6-cohort head (19 oldest not-yet-rotated oracle-backed rows of
 # CORRECTNESS_r06; its balance is the r13 rotation head).
 _CORE = [

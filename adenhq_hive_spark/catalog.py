@@ -245,24 +245,50 @@ def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> Non
     spark.conf.set(_REGISTERED_MARKER, sf_dir)
 
 
-def spread_small_scan(df, min_factor: int = 2):
-    """Round-robin repartition a DataFrame whose scan under-parallelizes
-    the machine — fires ONLY when the current partition count is at
-    least ``min_factor``x below the default parallelism.
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to the default parallelism when its plan reads
+    at most half that many partitions; otherwise return it as it is.
 
     Why it exists: the local testdata tables are single-row-group
     parquet files, and a row group is the unit of split — every
-    downstream map stage (regex batteries, shingle explosion, partial
-    aggregation) inherits a 1-2 task scan no matter how many cores the
-    session has. Spreading costs one small round-robin exchange and buys
-    full-width compute (measured 2.3-2.6x on the regex/shingle tiers at
-    sf0.1). At cluster scale the condition is structurally false —
-     100 TB arrives as thousands of block-sized files, the scan is
-    already wide, and this is a no-op (shuffling a corpus to
-    "parallelize" an already-parallel scan would be an anti-pattern).
+    downstream map stage (regex batteries, shingle explosion, md5
+    ladders, partial aggregation) inherits a 1-2 task scan no matter how
+    many cores the session has. Spreading costs one small round-robin
+    exchange and buys full-width compute (measured 2.3-2.6x on the
+    regex/shingle tiers at sf0.1). At cluster scale the scan is already
+    wide and this is a no-op.
+
+    The width comes from the physical plan, never from ``df.rdd``: under
+    AQE that runs every shuffle, broadcast and cache build below the
+    frame, and the caller's action then runs them again.
     """
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * min_factor <= par:
-        return df.repartition(par)
-    return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    width = _scan_width(df._jdf.queryExecution().executedPlan())
+    return df.repartition(par) if width is not None and width * 2 <= par else df
+
+
+def _scan_width(plan) -> int | None:
+    """Partitions the stream side of a physical plan reads (a union's
+    sum, else its widest child), or None when a shuffle sets it. AQE,
+    cached and reused plans are walked, not run; a broadcast counts 0;
+    a leaf's RDD is built but never run."""
+    cls = plan.getClass().getSimpleName()
+    if cls in ("ShuffleExchangeExec", "ShuffleQueryStageExec", "AQEShuffleReadExec"):
+        return None
+    if cls in ("BroadcastExchangeExec", "BroadcastQueryStageExec"):
+        return 0
+    if cls == "AdaptiveSparkPlanExec":
+        return _scan_width(plan.executedPlan())
+    if cls == "InMemoryTableScanExec":
+        return _scan_width(plan.relation().cachedPlan())
+    if cls == "ReusedExchangeExec":
+        return _scan_width(plan.child())
+    if cls.endswith("QueryStageExec"):
+        return _scan_width(plan.plan())
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    widths = [_scan_width(kids.apply(i)) for i in range(kids.size())]
+    if None in widths:
+        return None
+    return sum(widths) if cls == "UnionExec" else max(widths)

@@ -73,8 +73,7 @@ def contaminated_ids(
         eval_df.select(F.explode(_word_ngrams(F.col(text_col), n)).alias("g"))
         .distinct()
     )
-    # n-gram explosion runs in the train scan stage — spread a narrow
-    # (single-row-group) scan first (2.6x at sf0.1; no-op at scale)
+    # n-gram explosion runs in the train scan stage (spread: 2.6x at sf0.1)
     train_grams = spread_small_scan(train).select(
         F.col(id_col), F.explode(_word_ngrams(F.col(text_col), n)).alias("g")
     )

@@ -193,8 +193,7 @@ def ngram_jaccard_pairs(
     from ..catalog import spread_small_scan
 
     # shingle construction + the map-side of every downstream agg run in
-    # the SCAN stage — spread a narrow (single-row-group) scan first so
-    # they get the whole machine (measured 2.3x at sf0.1; no-op at scale)
+    # the SCAN stage (spreading a narrow scan measured 2.3x at sf0.1)
     sh = spread_small_scan(df).select(
         F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
     )
@@ -1350,7 +1349,6 @@ def _positional_grams(
     text_col: str,
     id_col: str,
     k: int,
-    spread: bool = True,
     cache: bool = True,
 ) -> DataFrame:
     """(id, pos, gram) positional word-k-gram rows, pos 1-based — the
@@ -1362,8 +1360,7 @@ def _positional_grams(
 
     from .ngrams import word_ngrams
 
-    src = spread_small_scan(df) if spread else df
-    ps = src.select(
+    ps = spread_small_scan(df).select(
         F.col(id_col).alias("id"),
         F.posexplode(word_ngrams(F.col(text_col), k)).alias("pos0", "gram"),
     ).select("id", (F.col("pos0") + 1).cast("long").alias("pos"), "gram")

@@ -558,10 +558,7 @@ def winnow_fingerprints(
 
     from ..catalog import spread_small_scan
 
-    # the per-position md5 battery runs in the scan stage — spread a
-    # narrow scan first (single-row-group local parquet otherwise pins
-    # the whole fingerprint pass to 1-2 cores; no-op at cluster scale,
-    # see catalog.spread_small_scan)
+    # the per-position md5 battery runs in the scan stage
     df = spread_small_scan(df)
     low = df.select(
         F.col(id_col), F.lower(F.col(text_col)).alias("_lt")

@@ -1082,8 +1082,9 @@ def pq_staleness(
     (:func:`pq_append_index`) or has the distribution drifted enough
     that a RE-TRAIN (:func:`save_pq_index`) is due?
 
-    TWO orthogonal failure modes, two signals (scripts/
-    probe_pq_retrain.py measured both on the bench corpus):
+    TWO orthogonal failure modes, two signals (measured on the bench
+    corpus; BASELINE.md "Round 10 (second session): PQ re-train policy
+    probe"):
 
     - **Coverage failure** — the delta occupies regions the codebooks
       never trained on. Signal: mean quantization error of the delta

@@ -464,25 +464,6 @@ def hll_estimate_grouped(
 # constant state where GROUP BY token shuffles one record per distinct key.
 
 
-def _spread(narrow: DataFrame) -> DataFrame:
-    """Round-robin a narrow projection across all cores when the source
-    scan yields fewer tasks than the cluster has slots.
-
-    The CMS map side does depth x N md5+conv evaluations — CPU-bound,
-    embarrassingly parallel.  A small parquet input (one ~20 MB file =
-    one input split under the 128 MB maxPartitionBytes default) would
-    run that entire hash pass in ONE task; measured on sf0.1 lineitem
-    this made the sketch 2x SLOWER than the 10x-larger sf1 input, which
-    splits naturally.  The repartition ships only the narrow value
-    column (~10 MB at sf0.1) and is skipped whenever the scan already
-    saturates the cluster — i.e. always, at real scale.
-    """
-    par = narrow.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < par:
-        return narrow.repartition(par)
-    return narrow
-
-
 def _hash32(col: F.Column, hash_mode: str = "md5") -> F.Column:
     """32-bit-space hash of a STRING column under the dual-mode
     portability contract:
@@ -547,9 +528,13 @@ def _cms_sparse_counters(
     """Sparse (row, bucket, cnt) CMS counters — the shared map side of
     cms_counters (which densifies over the grid) and
     cms_point_estimates (which probes it directly)."""
+    from ..catalog import spread_small_scan
+
     seeds = F.array(*[F.lit(j) for j in range(depth)])
+    # depth x N md5+conv evaluations are CPU-bound: one task over a
+    # single-split sf0.1 scan made the sketch 2x SLOWER than sf1
     return (
-        _spread(df.select(F.col(value_col).cast("string").alias("v")))
+        spread_small_scan(df.select(F.col(value_col).cast("string").alias("v")))
         .select(F.explode(seeds).alias("row"), "v")
         .select("row", _cms_bucket(width, hash_mode))
         .groupBy("row", "bucket")
@@ -906,22 +891,18 @@ def kmv_jaccard(
     Emits (src_a, src_b, k_used, n_both, jaccard_r6) for every unordered
     group pair, ordered.  Scale: signatures are O(groups x k) rows
     regardless of corpus size; the pair stage is algebra over
-    signatures — at 1000 executors the corpus is touched once.
+    signatures — at 1000 executors the corpus is touched once.  The
+    hash pass runs in the input's stage, so a caller with a narrow
+    source spreads it before exploding tokens (pipeline
+    ``_kmv_jaccard_q``: the compact docs relation, not the tokens).
     """
     if k < 2:
         raise ValueError("k must be >= 2")
     from pyspark.sql import Window
 
-    # md5 over every token is CPU-bound: spread a single-split scan
-    # across cores before hashing (no-op at real scale)
-    hashed = _spread(
-        df.select(
-            F.col(group_col).cast("string").alias("grp"),
-            F.col(value_col).cast("string").alias("val"),
-        )
-    ).select(
-        "grp",
-        _hash32(F.col("val"), hash_mode).alias("hv"),
+    hashed = df.select(
+        F.col(group_col).cast("string").alias("grp"),
+        _hash32(F.col(value_col).cast("string"), hash_mode).alias("hv"),
     )
 
     def local_kmin_grouped(it):

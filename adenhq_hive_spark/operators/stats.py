@@ -273,10 +273,10 @@ def _bootstrap_partials_arrow(
             }
         )
 
-    from .sketch import _spread
+    from ..catalog import spread_small_scan
 
     return (
-        _spread(
+        spread_small_scan(
             df.select(
                 F.col(group_col).cast("string").alias("grp"),
                 F.col(id_col).cast("string").alias("_id"),
@@ -367,13 +367,10 @@ def poisson_bootstrap_ci(
     for i in range(len(POISSON1_THRESHOLDS) - 1, -1, -1):
         w = F.when(u6 < POISSON1_THRESHOLDS[i], i).otherwise(w)
 
-    from .sketch import _spread
+    from ..catalog import spread_small_scan
 
     # the B-way explode + md5 ladder is CPU-bound and embarrassingly
-    # parallel; a single-file parquet input would run it in ONE task
-    # (the sketch-tier _spread finding) — round-robin the narrow
-    # projection across cores first, a no-op whenever the scan already
-    # saturates the cluster (i.e. always, at real scale)
+    # parallel: spread the narrow projection across cores first
     n_salts = (b + 3) // 4
     if kernel == "arrow":
         agg_rep = _bootstrap_partials_arrow(
@@ -383,7 +380,7 @@ def poisson_bootstrap_ci(
         raise ValueError(f"kernel must be 'jvm' or 'arrow', got {kernel!r}")
     else:
         agg_rep = (
-        _spread(
+        spread_small_scan(
             df.select(
                 # string-cast to match the arrow kernel's mapInPandas
                 # output schema ('grp string') — both kernels emit the
@@ -906,7 +903,7 @@ def srm_check(
             ).cast("long")
             % 2
         )
-    from .sketch import _spread
+    from ..catalog import spread_small_scan
 
     grp = (
         F.col(group_col) if group_col is not None else F.lit("_all")
@@ -914,7 +911,7 @@ def srm_check(
     cols = [unit_col] + ([group_col] if group_col is not None else [])
     agg = (
         # per-row md5 is CPU-bound — spread an under-split scan first
-        _spread(df.select(*cols))
+        spread_small_scan(df.select(*cols))
         .select(grp, arm.alias("arm"))
         .groupBy("grp")
         .agg(

@@ -109,8 +109,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
     from ..catalog import spread_small_scan
 
-    # regex battery runs in the scan stage — spread a narrow scan first
-    # (2.3x at sf0.1; no-op at scale, see catalog.spread_small_scan)
+    # regex battery runs in the scan stage (spread: 2.3x at sf0.1)
     df = spread_small_scan(df)
     return df.select(
         "*",
@@ -317,8 +316,8 @@ def repetition_stats(
     _frac4 = frac4  # module-level portable-rounding helper
 
     grams = word_ngrams(F.col(text_col), n, lowercase=True)
-    # gram explosion + map-side partial agg run in the scan stage —
-    # spread a narrow scan first (1.6x at sf0.1; no-op at scale)
+    # gram explosion + map-side partial agg run in the scan stage
+    # (spread: 1.6x at sf0.1)
     per_gram = (
         spread_small_scan(df).select(F.col(id_col), F.explode(grams).alias("g"))
         .groupBy(id_col, "g")
@@ -438,8 +437,7 @@ def gopher_rules(
     q = F.greatest(n_words, F.lit(1))
     from ..catalog import spread_small_scan
 
-    # the whole battery runs in the scan stage: spread a narrow
-    # single-row-group scan first (2.6x at sf0.1; no-op at scale)
+    # the whole battery runs in the scan stage (spread: 2.6x at sf0.1)
     df = spread_small_scan(df)
     return df.select(
         F.col(id_col),
@@ -809,8 +807,7 @@ def char_entropy(
     """
     from ..catalog import spread_small_scan
 
-    # O(distinct·len) per-row battery runs in the scan stage — spread a
-    # narrow scan first (same adoption as quality/gopher; no-op at scale)
+    # O(distinct·len) per-row battery runs in the scan stage
     df = spread_small_scan(df)
     # split(t, '') yields the per-character array in ONE linear pass;
     # the former transform(sequence(1, length(t)), i -> substring(t,
@@ -1174,7 +1171,7 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     ordered by doc_id.  Scale: embarrassingly parallel map over the
     corpus — no shuffle at all before the output sort.
     """
-    from .sketch import _spread
+    from ..catalog import spread_small_scan
 
     t = F.col(text_col)
     words = F.size(F.regexp_extract_all(t, F.lit("[A-Za-z]+"), 0))
@@ -1182,9 +1179,8 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.lit(1), F.size(F.regexp_extract_all(t, F.lit("[.!?]+"), 0))
     )
     sylls = F.size(F.regexp_extract_all(t, F.lit("[aeiouyAEIOUY]+"), 0))
-    # three regex passes per doc are CPU-bound: spread an under-split
-    # scan across cores first (no-op at real scale)
-    base = _spread(df.select("doc_id", text_col)).select(
+    # three regex passes per doc are CPU-bound
+    base = spread_small_scan(df.select("doc_id", text_col)).select(
         "doc_id",
         words.cast("long").alias("words"),
         sents.cast("long").alias("sentences"),

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, spread_small_scan
 from ..operators.asof import asof_join
 from ..operators.dedup import (
     dedup_exact,
@@ -8054,21 +8054,21 @@ Q(QuerySpec(
 ))
 
 
-def _kmv_jaccard_q(spark, sf):
-    from ..operators.sketch import _spread, kmv_jaccard
+def _kmv_jaccard_q(spark, sf, hash_mode="md5"):
+    from ..operators.sketch import kmv_jaccard
 
     # spread the COMPACT docs relation before the token explode (32x
-    # cheaper shuffle than round-robining the exploded tokens; the
-    # in-operator _spread then no-ops)
+    # cheaper shuffle than round-robining the exploded tokens)
+    docs = load_table(spark, sf, "documents").select("source", "text")
     toks = (
-        _spread(load_table(spark, sf, "documents").select("source", "text"))
+        spread_small_scan(docs)
         .select(
             "source",
             F.explode(F.split(F.col("text"), r"\s+")).alias("token"),
         )
         .filter(F.col("token") != "")
     )
-    return kmv_jaccard(toks, "token", "source", k=256)
+    return kmv_jaccard(toks, "token", "source", k=256, hash_mode=hash_mode)
 
 
 Q(QuerySpec(
@@ -8811,20 +8811,6 @@ Q(QuerySpec(
 ))
 
 
-def _kmv_jaccard_xxh_q(spark, sf):
-    from ..operators.sketch import _spread, kmv_jaccard
-
-    toks = (
-        _spread(load_table(spark, sf, "documents").select("source", "text"))
-        .select(
-            "source",
-            F.explode(F.split(F.col("text"), r"\s+")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-    )
-    return kmv_jaccard(toks, "token", "source", k=256, hash_mode="xxh")
-
-
 Q(QuerySpec(
     name="pl_kmv_jaccard_xxh",
     doc="DEPLOYMENT form of pl_kmv_jaccard: per-source KMV signatures "
@@ -8835,7 +8821,7 @@ Q(QuerySpec(
         "unchanged; tests gate the estimates against the exact "
         "pairwise Jaccard envelope, and the md5 twin carries the "
         "oracle hash row.",
-    builder=_kmv_jaccard_xxh_q,
+    builder=lambda spark, sf: _kmv_jaccard_q(spark, sf, "xxh"),
     has_oracle=False,
 ))
 

@@ -10,6 +10,7 @@ enabled for the pandas/UDF path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -74,6 +75,7 @@ _DEFAULTS = {
         "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
 }
 
+
 # Execution memory OFF the GC heap (r12, guide §5). The heavy shuffle
 # aggregations (pl_editdist/pl_dedup_incremental's pair-stream
 # hash-agg at sf10) grow BytesToBytesMap pages and sorter pointer
@@ -86,10 +88,18 @@ _DEFAULTS = {
 # regions, no GCLocker interplay, and cached/broadcast data keeps the
 # whole heap. On a cluster this is the same flag per executor, sized
 # like memoryOverhead (a few GB per executor core-group).
-_OFFHEAP = os.environ.get("SPARK_GRAFT_OFFHEAP", "8g")
-if _OFFHEAP not in ("", "0", "off"):
-    _DEFAULTS["spark.memory.offHeap.enabled"] = "true"
-    _DEFAULTS["spark.memory.offHeap.size"] = _OFFHEAP
+def _offheap_conf() -> dict[str, str]:
+    """Off-heap settings from ``SPARK_GRAFT_OFFHEAP`` (default 8g). ``''``,
+    off, false, no or a zero size such as 0 or 0g (any case) disable it; a
+    value that is not a Spark size raises instead of falling back silently."""
+    value = os.environ.get("SPARK_GRAFT_OFFHEAP", "8g").strip().lower()
+    size = re.fullmatch(r"(\d+)(?:b|kb?|mb?|gb?|tb?|pb?)?", value)
+    if value in ("", "off", "false", "no") or (size and int(size.group(1)) == 0):
+        return {}
+    if size is None:
+        raise ValueError(f"SPARK_GRAFT_OFFHEAP={value!r} is not a Spark size such "
+                         "as 512m or 8g, nor one of '', 0, off, false, no")
+    return {"spark.memory.offHeap.enabled": "true", "spark.memory.offHeap.size": value}
 
 
 def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSession:
@@ -101,6 +111,7 @@ def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSes
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = dict(_DEFAULTS)
+    conf.update(_offheap_conf())
     conf.update(overrides)
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -24,12 +24,6 @@ import sys
 import time
 
 
-def steal_ticks():
-    with open("/proc/stat") as f:
-        v = [int(x) for x in f.readline().split()[1:]]
-    return v[7], sum(v)
-
-
 def main() -> None:
     sf_dir = sys.argv[1]
     name = sys.argv[2]
@@ -42,22 +36,28 @@ def main() -> None:
             k, v = sys.argv[i + 1].split("=", 1)
             overrides[k] = v
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from adenhq_hive_spark.operators.dedup import release_persisted
     from adenhq_hive_spark.queries import all_queries
     from adenhq_hive_spark.session import get_spark
+    from bench import _cpu_ticks
 
     spark = get_spark(f"time-{name}", **overrides)
     spark.sparkContext.setJobDescription(f"time_query:{name}")
     spec = all_queries()[name]
 
     def one(i, label=""):
-        s0, t0 = steal_ticks()
+        c0 = _cpu_ticks()
         w0 = time.perf_counter()
         spec.run(spark, sf_dir).write.mode("overwrite").format("noop").save()
         dt = time.perf_counter() - w0
-        s1, t1 = steal_ticks()
+        c1 = _cpu_ticks()
+        # same per-query cache scope as bench.py: no run reuses another's
+        # _materialize'd relations
+        release_persisted()
         runs.append(round(dt, 1))
-        steals.append(round(100.0 * (s1 - s0) / max(1, t1 - t0), 1))
+        steal = 100.0 * (c1[0] - c0[0]) / max(1, c1[1] - c0[1]) if c0 and c1 else 0.0
+        steals.append(round(steal, 1))
         print(f"run{i}{label}: {dt:.1f}s steal {steals[-1]}%",
               file=sys.stderr, flush=True)
 

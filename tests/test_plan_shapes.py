@@ -1005,3 +1005,80 @@ def test_bucketed_join_is_shuffle_free_on_the_join_keys(spark):
         assert p2.count("Bucketed: true") >= 2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+# ---- the one scan spread ---------------------------------------------------
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_spread_decides_from_the_plan(spark):
+    """spread_small_scan round-robins a narrow scan to the default
+    parallelism and leaves a wide or shuffled input alone, deciding from
+    the physical plan with zero Spark jobs. A broadcast below the input
+    does not set its width: the stream side is still one scan split."""
+    from adenhq_hive_spark.catalog import spread_small_scan
+
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "source", "text"
+    )
+    nation = load_table(spark, SF_SMOKE, "nation")
+    assert docs.rdd.getNumPartitions() == 1
+    cases = {
+        "scan": (docs, True),
+        "broadcast": (
+            docs.join(F.broadcast(nation), F.col("doc_id") == F.col("n_nationkey")),
+            True,
+        ),
+        "wide": (spark.range(0, 1000, 1, par), False),
+        "shuffled": (docs.groupBy("source").count(), False),
+    }
+    for name, (df, spreads) in cases.items():
+        out, jobs = _jobs_in_group(
+            spark, f"scan-spread-{name}", lambda: spread_small_scan(df)
+        )
+        assert jobs == 0, name
+        if spreads:
+            assert out.rdd.getNumPartitions() == par, name
+        else:
+            assert out is df, name
+
+
+def test_scan_spread_runs_no_job_inside_builders(spark, monkeypatch):
+    """Inputs with shuffles, broadcasts and a persisted relation below
+    them: deciding their width used to execute them (21/21/7/7/1/1 jobs
+    in the helper before the action ran them again). Now 0."""
+    import adenhq_hive_spark.catalog as catalog
+    import adenhq_hive_spark.queries.pipeline as pipeline
+    from adenhq_hive_spark.operators.dedup import release_persisted
+
+    real = catalog.spread_small_scan
+    jobs = {}
+
+    def counted(df):
+        group = f"scan-spread-{len(jobs)}"
+        out, jobs[group] = _jobs_in_group(spark, group, lambda: real(df))
+        return out
+
+    monkeypatch.setattr(catalog, "spread_small_scan", counted)
+    monkeypatch.setattr(pipeline, "spread_small_scan", counted)
+    for name in (
+        "pl_dedup_incremental", "pl_dedup_incr_indexed", "pl_curation_pipeline",
+        "pl_graph_curation", "pl_kmv_jaccard", "pl_kmv_jaccard_xxh",
+    ):
+        before = len(jobs)
+        QUERIES[name].run(spark, SF_SMOKE)
+        release_persisted()
+        assert len(jobs) > before, f"{name} never calls the helper"
+    assert set(jobs.values()) == {0}, jobs

@@ -104,13 +104,3 @@ def oracle_sql() -> dict[str, str]:
         for key, name in _export_names().items()
         if specs[name].oracle is not None
     }
-
-
-def queries_core() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Backwards-compatible alias: same core-first ordering as queries(),
-    under canonical (unprefixed) names."""
-    specs = all_queries()
-    ordered = {n: specs[n].run for n in _CORE if n in specs}
-    for name, spec in sorted(specs.items()):
-        ordered.setdefault(name, spec.run)
-    return ordered

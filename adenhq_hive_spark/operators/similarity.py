@@ -622,7 +622,7 @@ def semdedup(
     # the O(d) norm fold inside the transform LAMBDA — O(d²) interpreted
     # eval per row, measured 5.8 s of the 12.5 s sf1 total (46%) as the
     # scan-stage projection, paid AGAIN by the training sample's
-    # collect. r12 stage breakdown: scripts/exp_semdedup_stages.py.
+    # collect. r12 stage breakdown: OPTIMIZATION_r12.md §semdedup.
     raw = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )

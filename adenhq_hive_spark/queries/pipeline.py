@@ -6969,6 +6969,15 @@ Q(QuerySpec(
 
 # ---- Count-Min / KMV sketch tier (round 7 continuation) ---------------------
 
+def _cms_registers_q(spark, sf, hash_mode="md5"):
+    from ..operators.sketch import cms_counters
+
+    return cms_counters(
+        load_table(spark, sf, "lineitem"), "l_partkey",
+        depth=4, width=256, hash_mode=hash_mode,
+    ).orderBy("row", "bucket")
+
+
 Q(QuerySpec(
     name="pl_cms_registers",
     doc="Engine-portable Count-Min Sketch counter table over lineitem "
@@ -6980,11 +6989,7 @@ Q(QuerySpec(
         "d*w keys with map-side partial aggregation regardless of token "
         "cardinality — constant shuffle state at 100 TB where GROUP BY "
         "token ships one record per distinct key.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch", fromlist=["cms_counters"]
-    ).cms_counters(load_table(spark, sf, "lineitem"), "l_partkey",
-                   depth=4, width=256)
-    .orderBy("row", "bucket"),
+    builder=_cms_registers_q,
     oracle_sql_str="""
         WITH v AS (SELECT CAST(l_partkey AS VARCHAR) AS v FROM lineitem),
         hj AS (
@@ -7007,6 +7012,15 @@ Q(QuerySpec(
 ))
 
 
+def _cms_estimate_q(spark, sf, hash_mode="md5"):
+    from ..operators.sketch import cms_point_estimates
+
+    return cms_point_estimates(
+        load_table(spark, sf, "lineitem"), "l_partkey",
+        depth=4, width=256, top_n=20, hash_mode=hash_mode,
+    )
+
+
 Q(QuerySpec(
     name="pl_cms_estimate",
     doc="CMS point-query accuracy ledger (operators/sketch.py:"
@@ -7016,11 +7030,7 @@ Q(QuerySpec(
         "tests; with 2k parts in 256 buckets the overcount is visible "
         "and measured, which is the point of the ledger. Candidate side "
         "is 80 rows, broadcast; counters side is the d*w-key aggregate.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch",
-        fromlist=["cms_point_estimates"],
-    ).cms_point_estimates(load_table(spark, sf, "lineitem"), "l_partkey",
-                          depth=4, width=256, top_n=20),
+    builder=_cms_estimate_q,
     oracle_sql_str="""
         WITH v AS (SELECT CAST(l_partkey AS VARCHAR) AS v FROM lineitem),
         counters AS (
@@ -7054,6 +7064,16 @@ Q(QuerySpec(
 ))
 
 
+def _kmv_distinct_q(spark, sf, hash_mode="md5"):
+    from ..operators.sketch import kmv_distinct
+
+    # the n_exact audit column rides along on the md5 ledger twin only
+    return kmv_distinct(
+        load_table(spark, sf, "orders"), "o_custkey", k=256,
+        hash_mode=hash_mode, include_exact=hash_mode == "md5",
+    )
+
+
 Q(QuerySpec(
     name="pl_kmv_distinct",
     doc="KMV (K minimum values) distinct-count sketch over o_custkey "
@@ -7067,9 +7087,7 @@ Q(QuerySpec(
         "driver traffic O(k). n_exact rides along as the accuracy "
         "ledger; the test gates the estimator inside the 1/sqrt(k) "
         "error envelope.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch", fromlist=["kmv_distinct"]
-    ).kmv_distinct(load_table(spark, sf, "orders"), "o_custkey", k=256),
+    builder=_kmv_distinct_q,
     oracle_sql_str="""
         WITH h AS (
           SELECT DISTINCT CAST(('0x' || substr(
@@ -8362,11 +8380,12 @@ Q(QuerySpec(
 ))
 
 
-def _srm_q(spark, sf):
+def _srm_q(spark, sf, hash_mode="md5"):
     from ..operators.stats import srm_check
 
     return srm_check(
         load_table(spark, sf, "events"), "user_id", "event_type",
+        hash_mode=hash_mode,
     )
 
 
@@ -8765,11 +8784,7 @@ Q(QuerySpec(
         "twin carries the oracle hash row; this form is what a 100 TB "
         "run should execute (the md5 portability tax is linear in "
         "volume and exists only to let DuckDB replay the sketch).",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch", fromlist=["cms_counters"]
-    ).cms_counters(load_table(spark, sf, "lineitem"), "l_partkey",
-                   depth=4, width=256, hash_mode="xxh")
-    .orderBy("row", "bucket"),
+    builder=lambda spark, sf: _cms_registers_q(spark, sf, "xxh"),
     has_oracle=False,
 ))
 
@@ -8781,12 +8796,7 @@ Q(QuerySpec(
         "one-sided guarantee est >= exact holds for ANY hash choice "
         "and is pinned for this form in tests/test_sketch.py; the md5 "
         "twin carries the oracle hash row.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch",
-        fromlist=["cms_point_estimates"],
-    ).cms_point_estimates(load_table(spark, sf, "lineitem"), "l_partkey",
-                          depth=4, width=256, top_n=20,
-                          hash_mode="xxh"),
+    builder=lambda spark, sf: _cms_estimate_q(spark, sf, "xxh"),
     has_oracle=False,
 ))
 
@@ -8803,10 +8813,7 @@ Q(QuerySpec(
         "hash); the 1/sqrt(k) envelope gate in tests/test_sketch.py "
         "runs against THIS form, and the md5 twin carries the oracle "
         "hash row.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.sketch", fromlist=["kmv_distinct"]
-    ).kmv_distinct(load_table(spark, sf, "orders"), "o_custkey", k=256,
-                   hash_mode="xxh", include_exact=False),
+    builder=lambda spark, sf: _kmv_distinct_q(spark, sf, "xxh"),
     has_oracle=False,
 ))
 
@@ -8835,10 +8842,7 @@ Q(QuerySpec(
         "Chi-square algebra unchanged; tests pin arm-count "
         "conservation and the fair-split non-flag, and the md5 twin "
         "carries the oracle hash row.",
-    builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.stats", fromlist=["srm_check"]
-    ).srm_check(load_table(spark, sf, "events"), "user_id",
-                "event_type", hash_mode="xxh"),
+    builder=lambda spark, sf: _srm_q(spark, sf, "xxh"),
     has_oracle=False,
 ))
 

@@ -1021,7 +1021,8 @@ Q(QuerySpec(
         "[1]/len (DuckDB lists are 1-based like element_at).",
     engine_sql="""
         SELECT label, COUNT(*) AS n,
-               ROUND(AVG(CAST(element_at(embedding, 1) AS DOUBLE)), 4) AS avg_c1,
+               ROUND(AVG(CAST(element_at(embedding, 1) AS DOUBLE)), 4) + 0.0
+                 AS avg_c1,
                CAST(MIN(size(embedding)) AS INT) AS dim
         FROM embeddings
         GROUP BY label
@@ -1029,7 +1030,7 @@ Q(QuerySpec(
     """,
     oracle_sql_str="""
         SELECT label, COUNT(*) AS n,
-               ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4) AS avg_c1,
+               ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4) + 0.0 AS avg_c1,
                CAST(MIN(len(embedding)) AS INT) AS dim
         FROM embeddings
         GROUP BY label
@@ -1263,7 +1264,7 @@ Q(QuerySpec(
         "+1) vs unnest + generate_subscripts (1-based).",
     engine_sql="""
         SELECT vec_id, CAST(pos + 1 AS BIGINT) AS pos,
-               ROUND(CAST(val AS DOUBLE), 4) AS val
+               ROUND(CAST(val AS DOUBLE), 4) + 0.0 AS val
         FROM embeddings
         LATERAL VIEW posexplode(embedding) t AS pos, val
         WHERE vec_id < 3
@@ -1272,7 +1273,7 @@ Q(QuerySpec(
     oracle_sql_str="""
         SELECT vec_id,
                CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
-               ROUND(CAST(unnest(embedding) AS DOUBLE), 4) AS val
+               ROUND(CAST(unnest(embedding) AS DOUBLE), 4) + 0.0 AS val
         FROM embeddings
         WHERE vec_id < 3
         ORDER BY vec_id NULLS LAST, pos NULLS LAST
@@ -1459,7 +1460,7 @@ Q(QuerySpec(
         "(posexplode vs unnest+generate_subscripts).",
     engine_sql="""
         SELECT vec_id, CAST(pos + 1 AS BIGINT) AS pos,
-               ROUND(CAST(val AS DOUBLE), 4) AS max_val
+               ROUND(CAST(val AS DOUBLE), 4) + 0.0 AS max_val
         FROM (
           SELECT vec_id, pos, val,
                  ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1475,7 +1476,8 @@ Q(QuerySpec(
         SELECT vec_id, pos, max_val FROM (
           SELECT vec_id,
                  CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
-                 ROUND(CAST(unnest(embedding) AS DOUBLE), 4) AS max_val,
+                 ROUND(CAST(unnest(embedding) AS DOUBLE), 4) + 0.0
+                   AS max_val,
                  unnest(embedding) AS raw_val
           FROM embeddings
           WHERE vec_id < 100

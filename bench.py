@@ -13,7 +13,8 @@ artifact number instead of being masked by ~45 sub-second entries:
 `relational_floor_total` (q* — scheduling-floor-bound at sf0.1) and
 `compute_tier_total` (pl_* — real per-row compute, the tier that
 separates from the floor).  Per-query times / spread_pct / sf1 / duckdb
-detail goes to BENCH_DETAIL_r{N}.json next to this script.
+detail goes to BENCH_DETAIL_r{N}.json next to this script
+(BENCH_DETAIL_r{N}_c{cpus}.json when SPARK_GRAFT_CPUS is not 32).
 
 Plans are executed with the `noop` sink (full pipeline execution, no
 driver-side collect cost) after one untimed warm-up pass to exclude
@@ -34,6 +35,8 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 HEADLINE = [
     "q01",  # scan + offset/limit
@@ -171,6 +174,183 @@ def _cpu_ticks() -> tuple[int, int] | None:
         return None
 
 
+def _steal_pct(c0: tuple[int, int] | None,
+               c1: tuple[int, int] | None) -> float:
+    """Steal share (%) of the CPU ticks between two ``_cpu_ticks()``
+    readings; 0.0 when either reading failed or no tick elapsed."""
+    if c0 and c1 and c1[1] > c0[1]:
+        return 100.0 * (c1[0] - c0[0]) / (c1[1] - c0[1])
+    return 0.0
+
+
+# ---- measurement core ------------------------------------------------------
+#
+# Every timed run in this file and in scripts/ goes through `measure`:
+# a steal-stamped call (`timed`) repeated while a rule says "take another
+# sample". The result keeps every sample with its steal; the reported
+# number is the min (steady-state cost), next to the steal of that min
+# and the best-3 spread.
+
+@dataclass
+class Samples:
+    """Wall seconds and hypervisor steal % per timed call, in run order."""
+
+    times: list[float] = field(default_factory=list)
+    steals: list[float] = field(default_factory=list)
+
+    def __len__(self) -> int:
+        return len(self.times)
+
+    @property
+    def best(self) -> float:
+        return min(self.times)
+
+    @property
+    def steal_of_best(self) -> float:
+        """Steal of the first fastest sample: if the winning run itself
+        ran under steal, its value is inflated with certainty."""
+        return self.steals[self.times.index(self.best)]
+
+    @property
+    def best3_spread_pct(self) -> float:
+        s = sorted(self.times)[:3]
+        return (s[-1] - s[0]) / s[0] * 100 if s[0] > 0 else 0.0
+
+
+def timed(fn: Callable[[], object]) -> tuple[float, float]:
+    """(wall seconds, steal %) of one call of ``fn``."""
+    c0 = _cpu_ticks()
+    t0 = time.perf_counter()
+    fn()
+    wall = time.perf_counter() - t0
+    return wall, _steal_pct(c0, _cpu_ticks())
+
+
+def measure(fn: Callable[[], object],
+            again: Callable[[Samples], bool]) -> Samples:
+    """Call ``fn`` under ``timed`` for as long as ``again(samples)``
+    asks for another sample."""
+    s = Samples()
+    while again(s):
+        wall, steal = timed(fn)
+        s.times.append(wall)
+        s.steals.append(steal)
+    return s
+
+
+def min_runs(n: int) -> Callable[[Samples], bool]:
+    """Plain min-of-n: exactly ``n`` samples."""
+    return lambda s: len(s) < n
+
+
+def run_noop(df) -> None:
+    """Execute a DataFrame's full plan into the ``noop`` sink (no
+    driver-side collect cost)."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def measure_spec(spec, spark, sf_dir: str,
+                 again: Callable[[Samples], bool]) -> Samples:
+    """Time a registered query into ``noop``. The plan is rebuilt per
+    sample. The ``_materialize``-pinned caches are released once the
+    samples are taken: not between runs, because the persisted-index
+    amortization of e.g. pl_dedup_incr_indexed is part of what is
+    measured, but before the next query, or a full-registry pass would
+    accumulate corpus-sized MEMORY_AND_DISK relations and lean on LRU
+    eviction."""
+    from adenhq_hive_spark.operators.dedup import release_persisted
+
+    try:
+        return measure(lambda: run_noop(spec.run(spark, sf_dir)), again)
+    finally:
+        release_persisted()
+
+
+# Headline protocol (pinned in BASELINE.md): N_RUNS timed passes per
+# query after the global warm-up, report the MIN plus the best-3 spread —
+# machine variance between sessions measured ~25% on identical code, so
+# cross-round comparisons need the dispersion on record.
+#
+# SELF-DEFENDING RE-RUNS (r10 verdict #1): BENCH_r10 shipped with
+# per-entry spreads to 414% and ~20 unchanged entries regressed 2-9x
+# because a noisy co-tenant arrived mid-sweep AFTER the start-of-run load
+# gate passed. The artifact defends itself per entry: when the three
+# fastest samples disagree by more than SPREAD_GATE_PCT, or the min
+# leaves the prior round's value by more than BAND_FACTOR, or the min
+# itself ran under more than STEAL_GATE_PCT steal, take extra samples (up
+# to MAX_EXTRA_RUNS). Extra samples can only REMOVE noise, never fake
+# speed: a genuine regression survives re-sampling and ships with
+# n_samples on record.
+N_RUNS = 3
+SPREAD_GATE_PCT = 50.0
+MAX_EXTRA_RUNS = 5
+BAND_FACTOR = 1.6
+# sub-second entries jitter 30-80% in RELATIVE spread from pure
+# scheduling noise even on an idle host (r11 baseline measured it);
+# re-sampling only pays when the absolute disagreement is material
+MIN_ABS_DELTA_S = 0.3
+STEAL_GATE_PCT = 5.0
+# streaming scale points: min of STREAM_RUNS (the 32-file point moved
+# more than any other headline metric round-to-round, r9), plus up to
+# STREAM_EXTRA_RUNS while the winning run ran under steal
+STREAM_RUNS = 3
+STREAM_EXTRA_RUNS = 3
+
+
+def _noisy(s: Samples, prior: float | None) -> bool:
+    best3 = sorted(s.times)[:3]
+    spread_hit = (s.best3_spread_pct > SPREAD_GATE_PCT
+                  and best3[-1] - best3[0] > MIN_ABS_DELTA_S)
+    band_hit = (prior is not None
+                and s.best > prior * BAND_FACTOR
+                and s.best - prior > MIN_ABS_DELTA_S)
+    steal_hit = s.steal_of_best > STEAL_GATE_PCT
+    return spread_hit or band_hit or steal_hit
+
+
+def headline_rule(name: str,
+                  prior: float | None) -> Callable[[Samples], bool]:
+    """N_RUNS samples, then up to MAX_EXTRA_RUNS more while the samples
+    look noisy against themselves, the prior round or the steal gate."""
+    def again(s: Samples) -> bool:
+        if len(s) < N_RUNS:
+            return True
+        extra = len(s) - N_RUNS + 1
+        if extra > MAX_EXTRA_RUNS or not _noisy(s, prior):
+            return False
+        log(f"{name}: re-sampling ({extra}/{MAX_EXTRA_RUNS}) — "
+            f"best3 spread {s.best3_spread_pct:.0f}%"
+            + (f", min {s.best:.2f}s vs prior {prior:.2f}s"
+               if prior is not None else ""))
+        return True
+    return again
+
+
+def stream_rule(s: Samples) -> bool:
+    return len(s) < STREAM_RUNS or (
+        s.steal_of_best > STEAL_GATE_PCT
+        and len(s) < STREAM_RUNS + STREAM_EXTRA_RUNS
+    )
+
+
+def duck_subprocess(sf_dir: str, oracles: dict[str, str],
+                    runs: int) -> dict[str, float]:
+    """Min-of-``runs`` DuckDB oracle times in a fresh process
+    (scripts/duck_time.py). Call it after ``spark.stop()``: with the
+    JVM resident the oracle timings drifted up to ~2x (r9)."""
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(here, "scripts", "duck_time.py")],
+        input=json.dumps({"sf_dir": sf_dir, "queries": oracles,
+                          "runs": runs}),
+        capture_output=True, text=True, check=True,
+        env={**os.environ, "PYTHONPATH": here},
+    )
+    return json.loads(proc.stdout)
+
+
 def _detail_round(here: str) -> int:
     """The round number this run's detail file will carry: one past the
     newest one-line BENCH_r*.json artifact (the driver writes that file
@@ -207,9 +387,43 @@ def _wait_for_idle_host(threshold: float = 2.0,
         waited += 30.0
 
 
+def detail_name(this_round: int, cpus: int) -> str:
+    """Detail file of a run: ``BENCH_DETAIL_r{N}.json`` at the 32-core
+    default, ``BENCH_DETAIL_r{N}_c{cpus}.json`` otherwise, so a run at
+    another core count never overwrites the round's default detail."""
+    stem = f"BENCH_DETAIL_r{this_round:02d}" if this_round \
+        else "BENCH_DETAIL"
+    return f"{stem}.json" if cpus == 32 else f"{stem}_c{cpus}.json"
+
+
+def band_source(here: str, this_round: int,
+                cpus: int) -> tuple[str, dict[str, float]] | None:
+    """(file, per-query times) of the newest prior-round detail file
+    measured at ``cpus`` cores, or None.
+
+    Band-source lineage (r11 verdict #4): detail files sort by their
+    integer round (lexicographic breaks r9 vs r10); this run's own round
+    never bands an intra-round re-run; and only a detail stamped with the
+    SAME core count qualifies, ``_c{N}`` files included (unstamped
+    historical files were all 32-core sweeps). A mismatched-cpu
+    band can only add samples, but it muddies n_samples."""
+    details = sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(here)
+        if (m := re.match(r"BENCH_DETAIL_r(\d+)(?:_c\d+)?\.json$", f))
+    )
+    for rnd, f in reversed(details):
+        if rnd >= this_round:
+            continue
+        with open(os.path.join(here, f)) as fh:
+            d = json.load(fh)
+        if int(d.get("cpus", 32)) == cpus:
+            return f, d.get("queries", {})
+    return None
+
+
 def main() -> None:
-    global LOAD_AT_START, LOAD_RETRIES
-    LOAD_AT_START, LOAD_RETRIES = _wait_for_idle_host()
+    load_at_start, load_retries = _wait_for_idle_host()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -236,143 +450,35 @@ def main() -> None:
     # per-query cost is the number that scales; first-run JIT noise is
     # not (it amortizes to zero over a long-lived session).
     for name in names:
-        specs[name].run(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        run_noop(specs[name].run(spark, sf_dir))
         log(f"warmup {name} done")
 
-    # Timing protocol (pinned in BASELINE.md): N_RUNS timed passes per
-    # query after the global warm-up, report the MIN plus the per-query
-    # spread — machine variance between sessions measured ~25% on
-    # identical code, so cross-round comparisons need the dispersion on
-    # record to separate variance from regression.
-    #
-    # SELF-DEFENDING RE-RUNS (r10 verdict #1): BENCH_r10 shipped with
-    # per-entry spreads to 414% and ~20 unchanged entries regressed
-    # 2-9x because a noisy co-tenant arrived mid-sweep AFTER the
-    # start-of-run load gate passed. The artifact must defend itself
-    # per entry, not per sweep: when the three fastest samples of an
-    # entry disagree by more than SPREAD_GATE_PCT, or the min leaves
-    # the prior round's recorded value by more than BAND_FACTOR, take
-    # extra samples (up to MAX_EXTRA_RUNS). Extra samples can only
-    # REMOVE noise, never fake speed: the min of more runs converges
-    # to the true steady-state cost, and a genuine code regression
-    # survives re-sampling and ships with n_samples on record. The
-    # per-entry 1-min load average is recorded alongside so a hot
-    # sample is self-identifying even when the retries run out.
-    N_RUNS = 3
-    SPREAD_GATE_PCT = 50.0
-    MAX_EXTRA_RUNS = 5
-    BAND_FACTOR = 1.6
-    # sub-second entries jitter 30-80% in RELATIVE spread from pure
-    # scheduling noise even on an idle host (r11 baseline measured it);
-    # re-sampling only pays when the absolute disagreement is material
-    MIN_ABS_DELTA_S = 0.3
-    STEAL_GATE_PCT = 5.0
     times: dict[str, float] = {}
     spread_pct: dict[str, float] = {}
     n_samples: dict[str, int] = {}
     entry_load: dict[str, float] = {}
     entry_steal: dict[str, float] = {}
-    from adenhq_hive_spark.operators.dedup import release_persisted
 
     here = os.path.dirname(os.path.abspath(__file__))
+    this_round = _detail_round(here)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     prior_times: dict[str, float] = {}
     try:
-        # Band-source lineage (r11 verdict #4 / ADVICE): sort detail
-        # files by their integer round (lexicographic breaks r9 vs
-        # r10), never band against this run's own round on an
-        # intra-round re-run, and only band against a detail measured
-        # at the SAME core count (detail files are cpu-stamped from
-        # this round on; unstamped historical files were all 32-core
-        # driver sweeps). A mismatched-cpu band can only add samples,
-        # but it muddies n_samples — exclude it outright.
-        cpus_now = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        this_round = _detail_round(here)
-        details = sorted(
-            (int(m.group(1)), f)
-            for f in os.listdir(here)
-            if (m := re.match(r"BENCH_DETAIL_r(\d+)\.json$", f))
-        )
-        for rnd, f in reversed(details):
-            if rnd >= this_round:
-                continue
-            with open(os.path.join(here, f)) as fh:
-                d = json.load(fh)
-            if int(d.get("cpus", 32)) != cpus_now:
-                continue
-            prior_times = d.get("queries", {})
-            log(f"prior-round band source: {f} (cpus {cpus_now})")
-            break
+        if src := band_source(here, this_round, cpus):
+            band_file, prior_times = src
+            log(f"prior-round band source: {band_file} (cpus {cpus})")
     except Exception as exc:
         log(f"prior-round band unavailable: {exc}")
 
     for name in names:
-        samples: list[float] = []
-        steals: list[float] = []
-
-        def _run_once() -> None:
-            c0 = _cpu_ticks()
-            t0 = time.perf_counter()
-            specs[name].run(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            samples.append(time.perf_counter() - t0)
-            c1 = _cpu_ticks()
-            if c0 and c1 and c1[1] > c0[1]:
-                steals.append(
-                    100.0 * (c1[0] - c0[0]) / (c1[1] - c0[1])
-                )
-            else:
-                steals.append(0.0)
-
-        def _best3_spread() -> float:
-            s = sorted(samples)[:3]
-            return (s[-1] - s[0]) / s[0] * 100 if s[0] > 0 else 0.0
-
-        def _steal_of_min() -> float:
-            i = min(range(len(samples)), key=samples.__getitem__)
-            return steals[i]
-
-        def _noisy() -> bool:
-            s = sorted(samples)[:3]
-            spread_hit = (
-                _best3_spread() > SPREAD_GATE_PCT
-                and (s[-1] - s[0]) > MIN_ABS_DELTA_S
-            )
-            prior = prior_times.get(name)
-            band_hit = (
-                prior is not None
-                and min(samples) > prior * BAND_FACTOR
-                and min(samples) - prior > MIN_ABS_DELTA_S
-            )
-            # the winning sample itself ran under hypervisor steal:
-            # its value is inflated with certainty, not suspicion
-            steal_hit = _steal_of_min() > STEAL_GATE_PCT
-            return spread_hit or band_hit or steal_hit
-
-        for _ in range(N_RUNS):
-            _run_once()
-        prior = prior_times.get(name)
-        extra = 0
-        while extra < MAX_EXTRA_RUNS and _noisy():
-            extra += 1
-            log(f"{name}: re-sampling ({extra}/{MAX_EXTRA_RUNS}) — "
-                f"best3 spread {_best3_spread():.0f}%"
-                + (f", min {min(samples):.2f}s vs prior {prior:.2f}s"
-                   if prior is not None else ""))
-            _run_once()
-        # release the _materialize-pinned caches BETWEEN queries (not
-        # between runs — the persisted-index amortization stories like
-        # pl_dedup_incremental_indexed are part of what's measured):
-        # a full-registry pass otherwise accumulates corpus-sized
-        # MEMORY_AND_DISK relations and leans on LRU eviction
-        release_persisted()
-        best = min(samples)
-        times[name] = round(best, 4)
-        spread_pct[name] = round(_best3_spread(), 1)
-        n_samples[name] = len(samples)
-        entry_steal[name] = round(_steal_of_min(), 1)
+        s = measure_spec(specs[name], spark, sf_dir,
+                         headline_rule(name, prior_times.get(name)))
+        times[name] = round(s.best, 4)
+        spread_pct[name] = round(s.best3_spread_pct, 1)
+        n_samples[name] = len(s)
+        entry_steal[name] = round(s.steal_of_best, 1)
+        # the per-entry 1-min load average makes a hot sample
+        # self-identifying even when the re-runs run out
         try:
             entry_load[name] = round(os.getloadavg()[0], 2)
         except OSError:
@@ -398,27 +504,18 @@ def main() -> None:
                 log(f"building sf1 dataset at {sf1_dir} ...")
                 subprocess.run(
                     [sys.executable,
-                     os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                  "scripts", "make_sf1.py"),
+                     os.path.join(here, "scripts", "make_sf1.py"),
                      sf_dir, sf1_dir],
                     check=True, capture_output=True, text=True,
                 )
             rel = [n for n in names if n.startswith("q")]
             for name in rel:  # warm-up at sf1
-                specs[name].run(spark, sf1_dir).write.mode(
-                    "overwrite"
-                ).format("noop").save()
+                run_noop(specs[name].run(spark, sf1_dir))
             sf1_times: dict[str, float] = {}
             for name in rel:
-                samples = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    specs[name].run(spark, sf1_dir).write.mode(
-                        "overwrite"
-                    ).format("noop").save()
-                    samples.append(time.perf_counter() - t0)
                 # min-of-3: the first sample doubles as the cache warm-up
-                sf1_times[name] = round(min(samples), 4)
+                sf1_times[name] = round(measure_spec(
+                    specs[name], spark, sf1_dir, min_runs(3)).best, 4)
                 log(f"sf1 {name}: {sf1_times[name]:.3f}s")
             e_tot = round(sum(sf1_times.values()), 4)
             sf1 = {
@@ -452,6 +549,7 @@ def main() -> None:
     # included, the number that scales with executor count.
     streaming = None
     try:
+        import itertools
         import shutil
         import tempfile
 
@@ -461,11 +559,10 @@ def main() -> None:
         )
 
         n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-        ck = tempfile.mkdtemp(prefix="bench_stream_ck_")
-        try:
-            t0 = time.perf_counter()
+
+        def drain(src, ck: str) -> None:
             q = (
-                tumbling_counts(read_event_stream(spark, sf_dir))
+                tumbling_counts(src)
                 .writeStream.outputMode("complete")
                 .format("noop")
                 .option("checkpointLocation", ck)
@@ -475,7 +572,11 @@ def main() -> None:
                 q.processAllAvailable()
             finally:
                 q.stop()  # never rmtree a checkpoint under a live query
-            wall = time.perf_counter() - t0
+
+        ck = tempfile.mkdtemp(prefix="bench_stream_ck_")
+        try:
+            wall, _ = timed(
+                lambda: drain(read_event_stream(spark, sf_dir), ck))
         finally:
             shutil.rmtree(ck, ignore_errors=True)
         streaming = {
@@ -499,9 +600,6 @@ def main() -> None:
         from adenhq_hive_spark.catalog import load_table
 
         REPL = 16
-        STREAM_RUNS = 3  # min-of-N: the 32-file point moved more than
-        # any other headline metric round-to-round (~2x session spread,
-        # r9 What's-wrong #3) — same protocol as the query entries now
         scale: dict[str, int] = {"1": streaming["rows_per_sec"]}
         for n_files in (8, 32):
             data_dir = tempfile.mkdtemp(prefix=f"bench_stream_{n_files}f_")
@@ -529,56 +627,17 @@ def main() -> None:
                     f"{data_dir}/events"
                 )
                 big_rows = n_rows * REPL
-                best_wall = float("inf")
-                best_steal = 0.0
-                runs_done = 0
-                # same self-defense as the query entries (r11): if the
-                # WINNING run itself executed under hypervisor steal,
-                # its wall time is known-inflated — take extra runs
-                # (bounded) until a clean one wins or the budget ends
-                while runs_done < STREAM_RUNS or (
-                    best_steal > 5.0 and runs_done < STREAM_RUNS + 3
-                ):
-                    runs_done += 1
-                    # fresh checkpoint per run — a reused one would
-                    # no-op the stream (everything already committed)
-                    ck2 = tempfile.mkdtemp(prefix="bench_stream_ck_")
-                    try:
-                        src = (
-                            spark.readStream.schema(ev.schema)
-                            .parquet(f"{data_dir}/events")
-                        )
-                        c0 = _cpu_ticks()
-                        t0 = time.perf_counter()
-                        q = (
-                            tumbling_counts(src)
-                            .writeStream.outputMode("complete")
-                            .format("noop")
-                            .option("checkpointLocation", ck2)
-                            .start()
-                        )
-                        try:
-                            q.processAllAvailable()
-                        finally:
-                            q.stop()
-                        wall2 = time.perf_counter() - t0
-                        c1 = _cpu_ticks()
-                        if wall2 < best_wall:
-                            best_wall = wall2
-                            if c0 and c1 and c1[1] > c0[1]:
-                                best_steal = (
-                                    100.0 * (c1[0] - c0[0])
-                                    / (c1[1] - c0[1])
-                                )
-                            else:
-                                best_steal = 0.0
-                    finally:
-                        shutil.rmtree(ck2, ignore_errors=True)
-                scale[str(n_files)] = round(big_rows / best_wall)
+                src = spark.readStream.schema(ev.schema).parquet(
+                    f"{data_dir}/events")
+                # fresh checkpoint per run — a reused one would no-op
+                # the stream (everything already committed)
+                cks = (f"{data_dir}/ck{i}" for i in itertools.count())
+                s = measure(lambda: drain(src, next(cks)), stream_rule)
+                scale[str(n_files)] = round(big_rows / s.best)
                 log(f"streaming {n_files} files x {big_rows} rows: "
                     f"{scale[str(n_files)]} rows/s "
-                    f"(min-of-{runs_done}, steal of min "
-                    f"{best_steal:.0f}%)")
+                    f"(min-of-{len(s)}, steal of min "
+                    f"{s.steal_of_best:.0f}%)")
             finally:
                 shutil.rmtree(data_dir, ignore_errors=True)
         streaming["scale"] = scale
@@ -591,24 +650,9 @@ def main() -> None:
     # timing so the oracle numbers come from an unloaded process tree.
     spark.stop()
 
-    def _duck_subprocess(dir_: str, oracles: dict[str, str],
-                         runs: int) -> dict[str, float]:
-        import subprocess
-
-        here_ = os.path.dirname(os.path.abspath(__file__))
-        proc = subprocess.run(
-            [sys.executable, os.path.join(here_, "scripts", "duck_time.py")],
-            input=json.dumps(
-                {"sf_dir": dir_, "queries": oracles, "runs": runs}
-            ),
-            capture_output=True, text=True, check=True,
-            env={**os.environ, "PYTHONPATH": here_},
-        )
-        return json.loads(proc.stdout)
-
     if sf1 is not None and sf1_oracles:
         try:
-            sf1_duck = _duck_subprocess(sf1_dir, sf1_oracles, 3)
+            sf1_duck = duck_subprocess(sf1_dir, sf1_oracles, 3)
             d_tot = round(sum(sf1_duck.values()), 4)
             sf1["duckdb"] = sf1_duck
             sf1["duckdb_total"] = d_tot
@@ -623,7 +667,7 @@ def main() -> None:
     duck_times: dict[str, float] = {}
     if duck_oracles:
         try:
-            duck_times = _duck_subprocess(sf_dir, duck_oracles, 2)
+            duck_times = duck_subprocess(sf_dir, duck_oracles, 2)
             for name, v in sorted(duck_times.items()):
                 log(f"duckdb {name}: {v:.3f}s")
         except Exception as exc:
@@ -633,9 +677,7 @@ def main() -> None:
 
     # Full per-query detail goes to a local file; stdout carries only the
     # compact scalars (driver tail-capture is 2000 chars).
-    this_round = _detail_round(here)
-    detail_name = f"BENCH_DETAIL_r{this_round:02d}.json" if this_round \
-        else "BENCH_DETAIL.json"
+    detail_file = detail_name(this_round, cpus)
     detail = {
         "queries": times,
         "spread_pct": spread_pct,
@@ -646,7 +688,7 @@ def main() -> None:
         "runs": N_RUNS,
         # cpu-stamp (r11 verdict #4): an 8-core rerun's detail must
         # never become a 32-core sweep's regression band, and vice versa
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus,
     }
     if sf1:
         detail["sf1_relational"] = sf1
@@ -654,9 +696,9 @@ def main() -> None:
         detail["streaming"] = streaming
     if duck_times:
         detail["duckdb"] = duck_times
-    with open(os.path.join(here, detail_name), "w") as f:
+    with open(os.path.join(here, detail_file), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    log(f"per-query detail -> {detail_name}")
+    log(f"per-query detail -> {detail_file}")
 
     out = {
         "metric": "headline_queries_total",
@@ -671,7 +713,7 @@ def main() -> None:
         "compute_tier_total": round(
             sum(v for k, v in times.items() if k.startswith("pl_")), 4
         ),
-        "detail_file": detail_name,
+        "detail_file": detail_file,
     }
     if sf1:
         out["sf1_engine_total"] = sf1["engine_total"]
@@ -685,12 +727,9 @@ def main() -> None:
     # 1-min load average at bench START: host-level contention invisible
     # inside the guest measured +/-25% on identical code (BASELINE.md
     # drift notes) — recording it makes a hot sample self-identifying.
-    try:
-        out["load_1m_at_start"] = LOAD_AT_START
-        if LOAD_RETRIES:
-            out["load_gate_retries"] = LOAD_RETRIES
-    except NameError:
-        pass
+    out["load_1m_at_start"] = load_at_start
+    if load_retries:
+        out["load_gate_retries"] = load_retries
     # Protocol guard (driver tail-capture is 2000 chars): if the compact
     # line ever grows past the budget, shed optional fields rather than
     # aborting after all measurement work is done — an assert here would

@@ -2,22 +2,24 @@
 sql}, "runs"} as JSON on stdin, times each query min-of-runs against
 the parquet views, prints {name: seconds} as JSON on stdout.
 
-Exists so bench.py can time the DuckDB side in a FRESH PROCESS after
-spark.stop(): with the Spark JVM resident in the same process the
-measured DuckDB numbers drifted up to ~2x vs an idle-machine run
-(BASELINE r9 close-out), so the artifact ratio needed a footnote.
-A subprocess after JVM teardown is the honest measurement.
+Exists so bench.py and dual_time.py can time the DuckDB side in a
+FRESH PROCESS after spark.stop(): with the Spark JVM resident in the
+same process the measured DuckDB numbers drifted up to ~2x vs an
+idle-machine run (BASELINE r9 close-out), so the artifact ratio needed
+a footnote. A subprocess after JVM teardown is the honest measurement.
+Run it through ``bench.duck_subprocess``, which sets PYTHONPATH to the
+repo.
 """
 
 from __future__ import annotations
 
 import json
 import sys
-import time
 
 import duckdb
 
 from adenhq_hive_spark.catalog import TABLES
+from bench import measure, min_runs
 
 
 def main() -> None:
@@ -32,12 +34,8 @@ def main() -> None:
         )
     out: dict[str, float] = {}
     for name, sql in spec["queries"].items():
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 4)
+        out[name] = round(measure(lambda: con.execute(sql).fetchall(),
+                                  min_runs(runs)).best, 4)
     con.close()
     json.dump(out, sys.stdout)
 

@@ -21,8 +21,8 @@ two possible walls and measures the control knobs:
                   exceptAll parity check against the uncapped output
                   (both directions) and reports row deltas.
 
-Timing: min-of-N warm (noop sink), per-run /proc/stat steal recorded —
-same protocol as bench.py / dual_time.py. Needs an idle host.
+Timing: min-of-N warm (noop sink), per-run /proc/stat steal recorded,
+through bench.py's measurement core. Needs an idle host.
 
 Usage: PYTHONPATH=/root/repo python scripts/exp_editdist.py <sf_dir>
            [runs] [--caps 256,64,16] [--no-parity] [--arms a,b,...]
@@ -30,35 +30,23 @@ Usage: PYTHONPATH=/root/repo python scripts/exp_editdist.py <sf_dir>
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-
-def steal_ticks():
-    with open("/proc/stat") as f:
-        v = [int(x) for x in f.readline().split()[1:]]
-    return v[7], sum(v)
+from bench import measure, min_runs, run_noop  # noqa: E402
 
 
-def timed(label, df_fn, runs):
-    best, steal_best = None, None
-    for _ in range(runs):
-        s0, t0 = steal_ticks()
-        w0 = time.perf_counter()
-        df_fn().write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - w0
-        s1, t1 = steal_ticks()
-        steal = 100.0 * (s1 - s0) / max(1, t1 - t0)
-        print(f"  {label}: {dt:.3f}s (steal {steal:.1f}%)", flush=True)
-        if best is None or dt < best:
-            best, steal_best = dt, steal
-    print(f"{label}: min {best:.3f}s over {runs} "
-          f"(steal-of-min {steal_best:.1f}%)", flush=True)
-    return best
+def time_arm(label, df_fn, runs):
+    s = measure(lambda: run_noop(df_fn()), min_runs(runs))
+    for t, steal in zip(s.times, s.steals):
+        print(f"  {label}: {t:.3f}s (steal {steal:.1f}%)", flush=True)
+    print(f"{label}: min {s.best:.3f}s over {runs} "
+          f"(steal-of-min {s.steal_of_best:.1f}%)", flush=True)
+    return s.best
 
 
 def verify_body(joined, thr_num, prefilter=True):
@@ -127,9 +115,9 @@ def main() -> None:
 
     results = {}
     if want("cand"):
-        results["cand"] = timed("cand", cand_uncapped, runs)
+        results["cand"] = time_arm("cand", cand_uncapped, runs)
     if want("full"):
-        results["full"] = timed(
+        results["full"] = time_arm(
             "full",
             lambda: editdist_verify(
                 docs, k=K, candidate_threshold=CAND_THR, sim_threshold=SIM_THR
@@ -137,7 +125,7 @@ def main() -> None:
             runs,
         )
     if want("nopre"):
-        results["nopre"] = timed(
+        results["nopre"] = time_arm(
             "nopre",
             lambda: verify_body(texts_joined(cand_uncapped()), thr_num,
                                 prefilter=False),
@@ -163,7 +151,7 @@ def main() -> None:
                 ),
                 thr_num,
             )
-        results[a] = timed(a, capped, runs)
+        results[a] = time_arm(a, capped, runs)
         if parity:
             out = capped().cache()
             missing = base.exceptAll(out).count()

@@ -21,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 
 def main() -> None:
@@ -37,28 +36,21 @@ def main() -> None:
             overrides[k] = v
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from adenhq_hive_spark.operators.dedup import release_persisted
     from adenhq_hive_spark.queries import all_queries
     from adenhq_hive_spark.session import get_spark
-    from bench import _cpu_ticks
+    from bench import measure_spec, min_runs
 
     spark = get_spark(f"time-{name}", **overrides)
     spark.sparkContext.setJobDescription(f"time_query:{name}")
     spec = all_queries()[name]
 
     def one(i, label=""):
-        c0 = _cpu_ticks()
-        w0 = time.perf_counter()
-        spec.run(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - w0
-        c1 = _cpu_ticks()
-        # same per-query cache scope as bench.py: no run reuses another's
-        # _materialize'd relations
-        release_persisted()
-        runs.append(round(dt, 1))
-        steal = 100.0 * (c1[0] - c0[0]) / max(1, c1[1] - c0[1]) if c0 and c1 else 0.0
-        steals.append(round(steal, 1))
-        print(f"run{i}{label}: {dt:.1f}s steal {steals[-1]}%",
+        # one measurement per run: each run releases its _materialize'd
+        # relations, so a warm run never reuses the previous run's
+        s = measure_spec(spec, spark, sf_dir, min_runs(1))
+        runs.append(round(s.best, 1))
+        steals.append(round(s.steal_of_best, 1))
+        print(f"run{i}{label}: {s.best:.1f}s steal {steals[-1]}%",
               file=sys.stderr, flush=True)
 
     runs, steals = [], []

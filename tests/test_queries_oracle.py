@@ -5,8 +5,11 @@ DuckDB oracle at sf0.001; normalized results must hash-match exactly
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from adenhq_hive_spark.catalog import TABLES
 from adenhq_hive_spark.normalize import normalize
 from adenhq_hive_spark.queries import all_queries
 
@@ -17,14 +20,9 @@ ORACLE_CHECKED = sorted(n for n, s in QUERIES.items() if s.oracle is not None)
 ROWS_ONLY = sorted(n for n, s in QUERIES.items() if s.oracle is None)
 
 
-@pytest.mark.parametrize("name", ORACLE_CHECKED)
-def test_oracle_match(spark, ducks, name):
-    spec = QUERIES[name]
-    df = spec.run(spark, SF_SMOKE)
+def _assert_strict_match(name, df, rel):
     spark_cols = df.columns
     spark_rows = [tuple(r) for r in df.collect()]
-
-    rel = ducks.execute(spec.oracle)
     duck_cols = [d[0] for d in rel.description]
     duck_rows = rel.fetchall()
 
@@ -46,6 +44,63 @@ def test_oracle_match(spark, ducks, name):
             f"{name}: result mismatch ({len(s_lines) - 1} vs "
             f"{len(d_lines) - 1} rows)\n" + "\n".join(diffs)
         )
+
+
+@pytest.mark.parametrize("name", ORACLE_CHECKED)
+def test_oracle_match(spark, ducks, name):
+    spec = QUERIES[name]
+    _assert_strict_match(name, spec.run(spark, SF_SMOKE),
+                         ducks.execute(spec.oracle))
+
+
+@pytest.fixture(scope="module")
+def tiny_negative_embeddings(tmp_path_factory):
+    """sf0.001 with its embeddings table replaced by four vectors whose
+    components round to zero from below: a tiny negative first component
+    (q54's per-label average, q66's exploded values) and a vector whose
+    largest component is tiny and negative (q76's argmax)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("neg_zero_sf")
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", d / f"{t}.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array([0, 1, 2, 3], pa.int64()),
+        "embedding": pa.array(
+            [[-1e-5, 0.5, -0.25], [-1e-5, -0.5, -0.9],
+             [0.125, -1e-5, 0.75], [-1e-5, 0.25, 0.5]],
+            pa.list_(pa.float32()),
+        ),
+        "label": pa.array([0, 1, 1, 0], pa.int32()),
+    }), d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["q54", "q66", "q76"])
+def test_round_over_embedding_keeps_sign_of_zero(spark, name,
+                                                 tiny_negative_embeddings):
+    """Spark's ROUND(x, 4) of a tiny negative value is 0.0 where
+    DuckDB's is -0.0, which the strict hash keeps apart; the queries
+    that ROUND embedding components must agree on it."""
+    import duckdb
+
+    from adenhq_hive_spark.catalog import _REGISTERED_MARKER, register_views
+
+    sf = tiny_negative_embeddings
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf}/{t}.parquet')")
+    active = spark.conf.get(_REGISTERED_MARKER, None)
+    try:
+        _assert_strict_match(name, QUERIES[name].run(spark, sf),
+                             con.execute(QUERIES[name].oracle))
+    finally:
+        con.close()
+        if active:
+            register_views(spark, active, force=True)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)

@@ -14,10 +14,18 @@ string containing "DROP" passes, an actual ``DROP TABLE`` cannot.
 Result materialization is capped (``max_rows``, like bigquery_tool.py's
 clamp at 209-214) with a ``truncated`` flag (bigquery_tool.py:233) so the
 API edge never collects an unbounded result to the driver.
+
+This module is the one tool edge behind every SQL and read tool: the
+``MAX_ROWS_CAP`` clamp (``clamp_rows``), the gate (``gated_df``), the
+capped collect (``take_capped`` / ``capped_envelope``) and the
+offset/limit page (``read_page``). ``Engine.sql``, the csv/jsonl/excel
+``*_sql`` tools, ``run_bigquery_query`` and the graph ``sql`` node call
+them; no tool gates, clamps or caps its collect on its own.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field, replace
 from typing import Any
 
@@ -53,6 +61,15 @@ class ResultEnvelope:
         }
         if self.error is not None:
             out["error"] = self.error
+        return out
+
+    def to_tool_dict(self) -> dict[str, Any]:
+        """The file tools' shape (csv_tool.py:368-376): ``to_dict`` with
+        ``query_truncated`` for ``truncated``, or ``{success, error}``."""
+        if not self.success:
+            return {"success": False, "error": self.error}
+        out = self.to_dict()
+        out["query_truncated"] = out.pop("truncated")
         return out
 
 
@@ -91,6 +108,80 @@ def assert_read_only(spark: SparkSession, sql: str) -> None:
             "Write operations (INSERT/UPDATE/DELETE/CREATE/DROP/ALTER/...) "
             "are not permitted."
         )
+
+
+MAX_ROWS_CAP = 10_000  # bigquery_tool.py:209-214
+
+# (spark, sql) -> DataFrame: registers a tool's views, or reads remotely
+Build = Callable[[SparkSession, str], DataFrame]
+
+
+def clamp_rows(max_rows: int) -> int:
+    """``max_rows`` clamped to 1..``MAX_ROWS_CAP``."""
+    return max(1, min(int(max_rows), MAX_ROWS_CAP))
+
+
+def gated_df(spark: SparkSession, sql: str, build: Build | None = None
+             ) -> DataFrame:
+    """Gated SQL → lazy DataFrame. ``build`` runs only after the gate
+    passed, so a rejected statement registers no view and reads no file;
+    without it the statement runs as ``spark.sql``."""
+    assert_read_only(spark, sql)
+    return spark.sql(sql) if build is None else build(spark, sql)
+
+
+def take_capped(df: DataFrame, n: int) -> tuple[list[dict[str, Any]], bool]:
+    """At most ``n`` rows as dicts, and whether more existed: collects
+    ``n + 1`` rows instead of counting the whole result
+    (bigquery_tool.py:227-233)."""
+    taken = df.limit(n + 1).collect()
+    return [r.asDict(recursive=True) for r in taken[:n]], len(taken) > n
+
+
+def capped_envelope(to_df: Callable[[], DataFrame], max_rows: int
+                    ) -> ResultEnvelope:
+    """Clamp, build the gated DataFrame, capped collect, envelope. A gate
+    rejection, a bad ``max_rows`` and an analysis or run failure all come
+    back as an error envelope; ``NotImplementedError`` (a missing
+    connector) propagates."""
+    try:
+        n = clamp_rows(max_rows)
+        df = to_df()
+        rows, truncated = take_capped(df, n)
+    except ReadOnlyViolation as exc:
+        return ResultEnvelope(success=False, error=str(exc))
+    except NotImplementedError:
+        raise
+    except Exception as exc:  # analysis errors (unknown table/column)
+        return ResultEnvelope(success=False, error=f"Query failed: {exc}")
+    return ResultEnvelope(
+        success=True,
+        columns=list(df.columns),
+        column_count=len(df.columns),
+        rows=rows,
+        row_count=len(rows),
+        truncated=truncated,
+    )
+
+
+def read_page(df: DataFrame, limit: int, offset: int) -> dict[str, Any]:
+    """One offset/limit page of ``df`` plus its total row count
+    (csv_tool.py:57-64); negative ``limit``/``offset`` clamp to 0."""
+    limit = max(0, int(limit))
+    offset = max(0, int(offset))
+    sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
+    rows = [r.asDict(recursive=True) for r in sliced.collect()]
+    total = df.count()
+    return {
+        "success": True,
+        "columns": list(df.columns),
+        "column_count": len(df.columns),
+        "rows": rows,
+        "row_count": len(rows),
+        "total_rows": total,
+        "offset": offset,
+        "has_more": offset + len(rows) < total,
+    }
 
 
 class Engine:
@@ -152,16 +243,14 @@ class Engine:
 
     def df(self, sql: str) -> DataFrame:
         """Gated SQL → lazy DataFrame (no materialization)."""
-        assert_read_only(self.spark, sql)
-        return self.spark.sql(sql)
+        return gated_df(self.spark, sql)
 
     def sql(
         self, sql: str, max_rows: int = 1000, use_cache: bool = False
     ) -> ResultEnvelope:
-        """Gated SQL → materialized envelope, capped at ``max_rows``.
+        """Gated SQL → materialized envelope, capped at ``max_rows``
+        (``capped_envelope``).
 
-        Collects ``max_rows + 1`` rows to set the truncation flag without
-        counting the full result (bigquery_tool.py:227-233 pattern).
         ``use_cache=True`` memoizes successful envelopes per normalized
         (sql, max_rows) — the snapshot is immutable, so a repeat of the
         same statement re-reads nothing. Whitespace normalization of the
@@ -172,7 +261,10 @@ class Engine:
         import time as _time
 
         t0 = _time.perf_counter()
-        max_rows = max(1, min(int(max_rows), 10_000))  # bigquery_tool.py:209-214 clamp
+        try:
+            max_rows = clamp_rows(max_rows)
+        except (TypeError, ValueError):
+            use_cache = False  # capped_envelope reports the bad cap
         cache_key = None
         if use_cache:
             normalized = (
@@ -181,49 +273,25 @@ class Engine:
                 else sql
             )
             cache_key = (normalized, max_rows)
-        if cache_key is not None and cache_key in self._result_cache:
+        cached = cache_key in self._result_cache
+        if cached:
             self._result_cache.move_to_end(cache_key)
             self.cache_hits += 1
             env = self._copy_env(self._result_cache[cache_key])
-            self._record(sql, max_rows, t0, env, cached=True)
-            return env
-        if cache_key is not None:
-            self.cache_misses += 1
-        try:
-            df = self.df(sql)
-        except ReadOnlyViolation as exc:
-            env = ResultEnvelope(success=False, error=str(exc))
-            self._record(sql, max_rows, t0, env, cached=False)
-            return env
-        except Exception as exc:  # analysis errors (unknown table/column)
-            env = ResultEnvelope(success=False, error=f"Query failed: {exc}")
-            self._record(sql, max_rows, t0, env, cached=False)
-            return env
-        try:
-            taken = df.limit(max_rows + 1).collect()
-        except Exception as exc:
-            env = ResultEnvelope(success=False, error=f"Query failed: {exc}")
-            self._record(sql, max_rows, t0, env, cached=False)
-            return env
-        truncated = len(taken) > max_rows
-        rows = [r.asDict(recursive=True) for r in taken[:max_rows]]
-        env = ResultEnvelope(
-            success=True,
-            columns=list(df.columns),
-            column_count=len(df.columns),
-            rows=rows,
-            row_count=len(rows),
-            truncated=truncated,
-        )
-        if cache_key is not None:
-            # the cached snapshot must be private: the envelope handed
-            # back on the MISS is as mutable to the caller as a hit copy
-            # (rows hold nested lists/dicts from asDict(recursive=True),
-            # so both store and return sides need deep copies)
-            self._result_cache[cache_key] = self._copy_env(env)
-            while len(self._result_cache) > self._result_cache_size:
-                self._result_cache.popitem(last=False)
-        self._record(sql, max_rows, t0, env, cached=False)
+        else:
+            env = capped_envelope(lambda: self.df(sql), max_rows)
+            if cache_key is not None:
+                self.cache_misses += 1
+                if env.success:
+                    # the cached snapshot must be private: the envelope
+                    # handed back on the MISS is as mutable to the caller
+                    # as a hit copy (rows hold nested lists/dicts from
+                    # asDict(recursive=True), so both store and return
+                    # sides need deep copies)
+                    self._result_cache[cache_key] = self._copy_env(env)
+                    while len(self._result_cache) > self._result_cache_size:
+                        self._result_cache.popitem(last=False)
+        self._record(sql, max_rows, t0, env, cached=cached)
         return env
 
     @staticmethod
@@ -240,23 +308,11 @@ class Engine:
         )
 
     def describe_dataset(self, with_row_counts: bool = True) -> dict:
-        """Catalog listing: tables, column schemas, optional row counts
-        (reference describe_dataset, bigquery_tool.py:277-392)."""
-        tables = []
-        for t in self.spark.catalog.listTables():
-            cols = [
-                {"name": c.name, "type": c.dataType}
-                for c in self.spark.catalog.listColumns(t.name)
-            ]
-            entry = {"table": t.name, "columns": cols}
-            if with_row_counts:
-                entry["row_count"] = self.spark.table(t.name).count()
-            tables.append(entry)
-        return {
-            "success": True,
-            "tables": sorted(tables, key=lambda e: e["table"]),
-            "table_count": len(tables),
-        }
+        """Catalog listing with row counts by default
+        (``bigquery_tool.describe_dataset``)."""
+        from .sources.bigquery_tool import describe_dataset
+
+        return describe_dataset(self.spark, with_row_counts)
 
     def explain(self, sql: str, mode: str = "formatted") -> dict:
         """Gated SQL → optimizer-plan report, no execution.

@@ -12,8 +12,8 @@ SURVEY §3.1).
 
 Node ops:
 
-- ``sql``        — run a gated SQL string; memory DataFrames are visible
-  as temp views under their keys.
+- ``sql``        — run a gated SQL string (``engine.gated_df``); memory
+  DataFrames are visible as temp views under their keys.
 - ``filter``     — safe_eval predicate compiled to Spark SQL
   (functions/safe_eval.compile_predicate) over the input DataFrame.
 - ``select``     — ``{target: source}`` projection/rename — the
@@ -42,7 +42,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import assert_read_only
+from ..engine import gated_df
 from ..functions.safe_eval import compile_predicate, eval_predicate
 
 
@@ -268,9 +268,7 @@ class GraphRunner:
         for k, v in memory.items():
             if isinstance(v, DataFrame):
                 v.createOrReplaceTempView(k)
-        sql = node.params["query"]
-        assert_read_only(self.spark, sql)
-        return self.spark.sql(sql)
+        return gated_df(self.spark, node.params["query"])
 
     def _op_filter(self, node: NodeSpec, memory: dict[str, Any]) -> DataFrame:
         (df,) = self._df_inputs(node, memory)

@@ -2,27 +2,20 @@
 bigquery_tool.py:149-275) and dataset description (277-392).
 
 The Spark BigQuery connector jar (or a JDBC driver) is not in this
-container, so the remote execution path is gated: ``run_bigquery_query``
-validates the statement with the parse-plan read-only gate (replacing the
-reference's regex blocklist with comment-stripping,
-bigquery_tool.py:27-58 — the parser makes comment handling free), clamps
-``max_rows`` (bigquery_tool.py:209-214), and then either executes via a
+container, so ``run_bigquery_query`` runs the engine's gated-SQL core
+(``engine.capped_envelope``) with the remote read as its build step: a
 caller-provided ``reader`` (the injection point a real connector fills)
-or raises NotImplementedError.  Everything around the missing jar —
-validation, clamping, envelope with schema/truncation — is real and
-tested.
+or the connector, which raises NotImplementedError when the jar is
+absent. The gate, the clamp and the envelope are real and tested.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import ReadOnlyViolation, assert_read_only
-
-MAX_ROWS_CAP = 10_000  # bigquery_tool.py:209-214
+from ..engine import Build, capped_envelope, gated_df
 
 
 def _connector_reader(spark: SparkSession, sql: str) -> DataFrame:
@@ -44,31 +37,22 @@ def run_bigquery_query(
     spark: SparkSession,
     sql: str,
     max_rows: int = 1000,
-    reader: Callable[[SparkSession, str], DataFrame] | None = None,
+    reader: Build | None = None,
 ) -> dict[str, Any]:
     """Read-only remote SQL with schema + truncation envelope
     (bigquery_tool.py:235-243 shape)."""
-    try:
-        assert_read_only(spark, sql)
-    except ReadOnlyViolation as exc:
-        return {"success": False, "error": str(exc)}
-    max_rows = max(1, min(int(max_rows), MAX_ROWS_CAP))
-    try:
-        df = (reader or _connector_reader)(spark, sql)
-        taken = df.limit(max_rows + 1).collect()
-    except NotImplementedError:
-        raise
-    except Exception as exc:
-        return {"success": False, "error": f"Query failed: {exc}"}
-    rows = [r.asDict(recursive=True) for r in taken[:max_rows]]
-    return {
-        "success": True,
-        "columns": list(df.columns),
-        "schema": [{"name": n, "type": t} for n, t in df.dtypes],
-        "rows": rows,
-        "row_count": len(rows),
-        "query_truncated": len(taken) > max_rows,
-    }
+    frames: list[DataFrame] = []
+
+    def build(spark: SparkSession, sql: str) -> DataFrame:
+        frames.append((reader or _connector_reader)(spark, sql))
+        return frames[0]
+
+    out = capped_envelope(lambda: gated_df(spark, sql, build), max_rows
+                          ).to_tool_dict()
+    if out["success"]:
+        del out["column_count"]
+        out["schema"] = [{"name": n, "type": t} for n, t in frames[0].dtypes]
+    return out
 
 
 def describe_dataset(

@@ -11,10 +11,9 @@ Semantics matched to the reference:
   (csv_tool.py:147-212).
 - ``csv_info``  — schema + row count + size without materializing rows
   (csv_tool.py:214-271).
-- ``csv_sql``   — registers the file as table ``data`` (csv_tool.py:358)
-  and runs an arbitrary read-only SELECT; the write guard is the parsed-
-  plan gate (engine.assert_read_only) instead of the reference's keyword
-  blocklist (csv_tool.py:333-352).
+- ``csv_sql``   — read-only SELECT over the file as table ``data``
+  (csv_tool.py:358) through the engine's gated-SQL core
+  (``engine.capped_envelope``).
 
 Scan/SQL go through Spark (distributed, schema-inferred like DuckDB's
 read_csv_auto); write/append are driver-side single-file at this API edge
@@ -28,9 +27,9 @@ import csv
 import os
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import ReadOnlyViolation, assert_read_only
+from ..engine import capped_envelope, gated_df, read_page
 
 
 def _envelope(**kw: Any) -> dict[str, Any]:
@@ -57,21 +56,7 @@ def csv_read(
     """Paginated CSV scan: header schema + offset/limit row slice."""
     if not os.path.exists(file_path):
         return _error(f"File not found: {file_path}")
-    df = _read_df(spark, file_path)
-    limit = max(0, int(limit))
-    offset = max(0, int(offset))
-    sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
-    rows = [r.asDict() for r in sliced.collect()]
-    total = df.count()
-    return _envelope(
-        columns=list(df.columns),
-        column_count=len(df.columns),
-        rows=rows,
-        row_count=len(rows),
-        total_rows=total,
-        offset=offset,
-        has_more=offset + len(rows) < total,
-    )
+    return read_page(_read_df(spark, file_path), limit, offset)
 
 
 def csv_write(
@@ -134,22 +119,10 @@ def csv_sql(
     """Read-only SQL over the file registered as table ``data``."""
     if not os.path.exists(file_path):
         return _error(f"File not found: {file_path}")
-    try:
-        assert_read_only(spark, query)
-    except ReadOnlyViolation as exc:
-        return _error(str(exc))
-    _read_df(spark, file_path).createOrReplaceTempView("data")
-    try:
-        df = spark.sql(query)
-        max_rows = max(1, min(int(max_rows), 10_000))
-        taken = df.limit(max_rows + 1).collect()
-    except Exception as exc:
-        return _error(f"Query failed: {exc}")
-    rows = [r.asDict(recursive=True) for r in taken[:max_rows]]
-    return _envelope(
-        columns=list(df.columns),
-        column_count=len(df.columns),
-        rows=rows,
-        row_count=len(rows),
-        query_truncated=len(taken) > max_rows,
-    )
+
+    def build(spark: SparkSession, sql: str) -> DataFrame:
+        _read_df(spark, file_path).createOrReplaceTempView("data")
+        return spark.sql(sql)
+
+    return capped_envelope(
+        lambda: gated_df(spark, query, build), max_rows).to_tool_dict()

@@ -17,6 +17,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..engine import read_page, take_capped
+
 
 class DataStore:
     """Parquet-backed keyed store for intermediate results."""
@@ -48,20 +50,9 @@ class DataStore:
         path = self._path(key)
         if not os.path.exists(path):
             return {"success": False, "error": f"No data for key: {key}"}
-        df = self.spark.read.parquet(path)
-        sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
-        rows = [r.asDict(recursive=True) for r in sliced.collect()]
-        total = df.count()
-        return {
-            "success": True,
-            "key": key,
-            "columns": list(df.columns),
-            "rows": rows,
-            "row_count": len(rows),
-            "total_rows": total,
-            "offset": offset,
-            "has_more": offset + len(rows) < total,
-        }
+        page = read_page(self.spark.read.parquet(path), limit, offset)
+        del page["column_count"]
+        return {"success": True, "key": key, **page}
 
     def load_df(self, key: str) -> DataFrame:
         """The distributed path: hand the intermediate back as a DataFrame."""
@@ -231,12 +222,11 @@ class DataStore:
             if t == "string" else F.col(c)
             for c, t in df.dtypes
         ]
-        preview = df.select(*truncated_cols).limit(max_rows + 1).collect()
-        rows = [r.asDict(recursive=True) for r in preview[:max_rows]]
+        rows, truncated = take_capped(df.select(*truncated_cols), max_rows)
         return {
             "success": True,
             "rows": rows,
             "row_count": len(rows),
-            "truncated": len(preview) > max_rows,
+            "truncated": truncated,
             "spillover_key": key,
         }

@@ -12,7 +12,9 @@ Semantics matched:
 - cell coercion: datetime → ISO-8601 string, other non-primitives → str
   (excel_tool.py:792-801);
 - ``excel_search`` match types contains/exact/starts_with/ends_with with
-  optional case folding (excel_tool.py:748-756).
+  optional case folding (excel_tool.py:748-756);
+- ``excel_sql``/``excel_read`` go through the engine's tool edge
+  (``engine.capped_envelope``, ``engine.read_page``).
 
 File IO runs on the pure-stdlib SpreadsheetML codec (sources/
 xlsx_codec.py — zipfile + xml.etree over the public ECMA-376 format);
@@ -31,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import ReadOnlyViolation, assert_read_only
+from ..engine import capped_envelope, gated_df, read_page
 from . import xlsx_codec
 
 Workbook = dict[str, list[list[Any]]]  # sheet name -> rows of cells
@@ -158,18 +160,9 @@ def excel_read(
     sheet = sheet if sheet is not None else next(iter(workbook), None)
     if sheet not in workbook:
         return {"success": False, "error": f"Sheet not found: {sheet}"}
-    df = sheet_to_df(spark, workbook[sheet])
-    sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
-    rows = [r.asDict() for r in sliced.collect()]
-    return {
-        "success": True,
-        "sheet": sheet,
-        "columns": list(df.columns),
-        "column_count": len(df.columns),
-        "rows": rows,
-        "row_count": len(rows),
-        "total_rows": df.count(),
-    }
+    page = read_page(sheet_to_df(spark, workbook[sheet]), limit, offset)
+    del page["offset"], page["has_more"]
+    return {"success": True, "sheet": sheet, **page}
 
 
 def excel_search(
@@ -305,23 +298,10 @@ def excel_sql(
 
     Cross-sheet joins use the sanitized sheet names as tables.
     """
-    try:
-        assert_read_only(spark, query)
-    except ReadOnlyViolation as exc:
-        return {"success": False, "error": str(exc)}
-    register_workbook(spark, workbook, sheet)
-    try:
-        df = spark.sql(query)
-        max_rows = max(1, min(int(max_rows), 10_000))
-        taken = df.limit(max_rows + 1).collect()
-    except Exception as exc:
-        return {"success": False, "error": f"Query failed: {exc}"}
-    rows = [r.asDict(recursive=True) for r in taken[:max_rows]]
-    return {
-        "success": True,
-        "columns": list(df.columns),
-        "column_count": len(df.columns),
-        "rows": rows,
-        "row_count": len(rows),
-        "query_truncated": len(taken) > max_rows,
-    }
+
+    def build(spark: SparkSession, sql: str) -> DataFrame:
+        register_workbook(spark, workbook, sheet)
+        return spark.sql(sql)
+
+    return capped_envelope(
+        lambda: gated_df(spark, query, build), max_rows).to_tool_dict()

@@ -20,6 +20,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..engine import take_capped
+
 FetchFn = Callable[..., list[dict[str, Any]]]
 
 
@@ -80,8 +82,8 @@ def external_sink(
     inputs — cap with limit()/truncate_with_spillover first; large
     exports belong in parquet (DataStore), not a SaaS API.
     """
-    rows = [r.asDict(recursive=True) for r in df.limit(100_001).collect()]
-    if len(rows) > 100_000:
+    rows, too_many = take_capped(df, 100_000)
+    if too_many:
         raise ValueError(
             "external_sink refuses >100k rows; write parquet instead"
         )

@@ -38,6 +38,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import take_capped
+
 
 def grep_df(
     spark: SparkSession,
@@ -99,8 +101,7 @@ def grep_search(
         if not os.path.exists(path):
             return {"error": f"Directory or file not found: {path}"}
         df = grep_df(spark, path, pattern, recursive=recursive)
-        rows = df.limit(max_matches + 1).collect()
-        truncated = len(rows) > max_matches
+        rows, truncated = take_capped(df, max_matches)
         base = path if os.path.isdir(path) else os.path.dirname(path) or "."
 
         def display(uri: str) -> str:
@@ -110,11 +111,11 @@ def grep_search(
 
         matches = [
             {
-                "file": display(r.file),
-                "line_number": r.line_number,
-                "line_content": r.line_content.strip(),
+                "file": display(r["file"]),
+                "line_number": r["line_number"],
+                "line_content": r["line_content"].strip(),
             }
-            for r in rows[:max_matches]
+            for r in rows
         ]
         return {
             "success": True,

@@ -15,8 +15,8 @@ format a training-data engine actually ingests. Spark-first:
   belongs to ``write_jsonl_dataset``).
 - ``write_jsonl_dataset`` — the distributed sink: ``df.write.json``,
   optionally partitioned — the export path for curated corpora.
-- ``jsonl_sql``   — read-only SQL over the file as table ``data``,
-  gated by the parsed-plan guard (engine.assert_read_only).
+- ``jsonl_sql``   — read-only SQL over the file as table ``data``
+  through the engine's gated-SQL core (``engine.capped_envelope``).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import ReadOnlyViolation, assert_read_only
+from ..engine import capped_envelope, gated_df, read_page
 
 
 def _envelope(**kw: Any) -> dict[str, Any]:
@@ -54,21 +54,7 @@ def jsonl_read(
     """Paginated JSONL scan: inferred schema + offset/limit row slice."""
     if not os.path.exists(file_path):
         return _error(f"File not found: {file_path}")
-    df = _read_df(spark, file_path)
-    limit = max(0, int(limit))
-    offset = max(0, int(offset))
-    sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
-    rows = [r.asDict(recursive=True) for r in sliced.collect()]
-    total = df.count()
-    return _envelope(
-        columns=list(df.columns),
-        column_count=len(df.columns),
-        rows=rows,
-        row_count=len(rows),
-        total_rows=total,
-        offset=offset,
-        has_more=offset + len(rows) < total,
-    )
+    return read_page(_read_df(spark, file_path), limit, offset)
 
 
 def jsonl_write(
@@ -135,25 +121,13 @@ def jsonl_sql(
     """Read-only SQL over the file registered as table ``data``."""
     if not os.path.exists(file_path):
         return _error(f"File not found: {file_path}")
-    try:
-        assert_read_only(spark, query)
-    except ReadOnlyViolation as exc:
-        return _error(str(exc))
-    _read_df(spark, file_path).createOrReplaceTempView("data")
-    try:
-        df = spark.sql(query)
-        max_rows = max(1, min(int(max_rows), 10_000))
-        taken = df.limit(max_rows + 1).collect()
-    except Exception as exc:
-        return _error(f"Query failed: {exc}")
-    rows = [r.asDict(recursive=True) for r in taken[:max_rows]]
-    return _envelope(
-        columns=list(df.columns),
-        column_count=len(df.columns),
-        rows=rows,
-        row_count=len(rows),
-        query_truncated=len(taken) > max_rows,
-    )
+
+    def build(spark: SparkSession, sql: str) -> DataFrame:
+        _read_df(spark, file_path).createOrReplaceTempView("data")
+        return spark.sql(sql)
+
+    return capped_envelope(
+        lambda: gated_df(spark, query, build), max_rows).to_tool_dict()
 
 
 def write_jsonl_dataset(

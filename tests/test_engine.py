@@ -325,3 +325,113 @@ def test_result_cache_miss_return_and_nested_values_are_private(spark):
     hit.rows[0]["xs"].append(77)               # nested mutation via HIT
     clean = eng.sql(stmt, use_cache=True)
     assert clean.rows == [{"n": 5, "xs": [1, 2]}]
+
+
+# ---- the tool edge: one gate, one cap, one capped collect, one page
+
+_K = [{"k": i} for i in range(5)]  # one 5-row table behind every tool
+
+
+@pytest.fixture()
+def files(spark, tmp_path):
+    from adenhq_hive_spark.sources.csv_tool import csv_write
+    from adenhq_hive_spark.sources.jsonl_tool import jsonl_write
+
+    csv_path, jsonl_path = str(tmp_path / "t.csv"), str(tmp_path / "t.jsonl")
+    assert csv_write(spark, csv_path, ["k"], _K)["success"]
+    assert jsonl_write(spark, jsonl_path, _K)["success"]
+    workbook = {"t": [["k"]] + [[r["k"]] for r in _K]}
+    return {"csv": csv_path, "jsonl": jsonl_path, "excel": workbook}
+
+
+def _sql_tool(spark, engine, files, tool):
+    """``run(query, max_rows) -> (success, row_count, truncated, error)``
+    for one of the five SQL entry points, each over the 5-row table."""
+    from adenhq_hive_spark.sources.bigquery_tool import run_bigquery_query
+    from adenhq_hive_spark.sources.csv_tool import csv_sql
+    from adenhq_hive_spark.sources.excel_tool import excel_sql
+    from adenhq_hive_spark.sources.jsonl_tool import jsonl_sql
+
+    def as_tuple(d):
+        return (d["success"], d.get("row_count"), d.get("query_truncated"),
+                d.get("error"))
+
+    if tool == "engine":
+        def run(q, m):
+            env = engine.sql(q.replace("data", "region"), max_rows=m)
+            return env.success, env.row_count, env.truncated, env.error
+        return run
+    if tool == "bigquery":
+        def reader(s, sql):
+            return s.range(5).withColumnRenamed("id", "k")
+        return lambda q, m: as_tuple(
+            run_bigquery_query(spark, q, max_rows=m, reader=reader))
+    call = {"csv": csv_sql, "jsonl": jsonl_sql, "excel": excel_sql}[tool]
+    return lambda q, m: as_tuple(call(spark, files[tool], q, max_rows=m))
+
+
+SQL_TOOLS = ["engine", "csv", "jsonl", "excel", "bigquery"]
+
+
+@pytest.mark.parametrize("tool", SQL_TOOLS)
+def test_one_cap_for_every_sql_tool(spark, engine, files, tool, monkeypatch):
+    from adenhq_hive_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "MAX_ROWS_CAP", 2)
+    run = _sql_tool(spark, engine, files, tool)
+    assert run("SELECT * FROM data", 1000)[:3] == (True, 2, True)
+
+
+@pytest.mark.parametrize("tool", SQL_TOOLS)
+def test_non_integer_max_rows_is_an_error_envelope(spark, engine, files, tool):
+    run = _sql_tool(spark, engine, files, tool)
+    ok, _, _, error = run("SELECT * FROM data", "x")
+    assert not ok and error.startswith("Query failed: ")
+
+
+@pytest.mark.parametrize("tool", ["csv", "jsonl", "excel"])
+def test_gate_runs_before_the_tool_registers_data(spark, engine, files, tool):
+    spark.range(3).createOrReplaceTempView("data")
+    ok, _, _, error = _sql_tool(spark, engine, files, tool)(
+        "DROP TABLE data", 10)
+    assert not ok and "read-only" in error
+    assert spark.table("data").columns == ["id"]  # still the range view
+    assert spark.table("data").count() == 3
+    spark.catalog.dropTempView("data")
+
+
+def test_bigquery_missing_connector_raises_other_reader_errors_envelope(spark):
+    from adenhq_hive_spark.sources.bigquery_tool import run_bigquery_query
+
+    with pytest.raises(NotImplementedError, match="connector"):
+        run_bigquery_query(spark, "SELECT 1 AS one", max_rows=5)
+
+    def broken(s, sql):
+        raise RuntimeError("credentials expired")
+
+    res = run_bigquery_query(spark, "SELECT 1 AS one", reader=broken)
+    assert res == {"success": False,
+                   "error": "Query failed: credentials expired"}
+
+
+@pytest.mark.parametrize("reader", ["csv", "jsonl", "excel", "store"])
+def test_page_readers_clamp_negative_limit_and_offset(spark, files, tmp_path,
+                                                      reader):
+    from adenhq_hive_spark.sources.csv_tool import csv_read
+    from adenhq_hive_spark.sources.data_tools import DataStore
+    from adenhq_hive_spark.sources.excel_tool import excel_read
+    from adenhq_hive_spark.sources.jsonl_tool import jsonl_read
+
+    if reader == "store":
+        store = DataStore(spark, str(tmp_path / "store"))
+        store.save_data("t", spark.createDataFrame(_K).coalesce(1))
+        read = lambda limit, offset: store.load_data("t", limit, offset)
+    else:
+        call = {"csv": csv_read, "jsonl": jsonl_read, "excel": excel_read}
+        read = lambda limit, offset: call[reader](
+            spark, files[reader], limit=limit, offset=offset)
+    empty = read(-1, -2)
+    assert empty["success"] and empty["rows"] == []
+    first = read(2, -2)
+    assert [int(r["k"]) for r in first["rows"]] == [0, 1]
+    assert first["total_rows"] == 5

@@ -114,7 +114,8 @@ def test_describe_dataset(spark):
     names = {t["table"] for t in d["tables"]}
     assert {"orders", "lineitem", "events", "documents"} <= names
     orders = next(t for t in d["tables"] if t["table"] == "orders")
-    assert {"name": "o_orderkey", "type": "bigint"} in orders["columns"]
+    assert {"name": "o_orderkey", "type": "bigint", "nullable": True} \
+        in orders["columns"]
 
 
 def test_ngram_cap_keeps_high_jaccard_pairs(spark):

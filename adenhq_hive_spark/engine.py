@@ -38,6 +38,13 @@ class ReadOnlyViolation(Exception):
     """Raised when a statement is not a read-only query."""
 
 
+class MissingConnector(NotImplementedError):
+    """Raised by a build step whose data source is not installed (the
+    BigQuery connector jar). The one error ``capped_envelope`` lets
+    through: every other failure, Spark's own ``NotImplementedError``
+    subclasses included, becomes an error envelope."""
+
+
 @dataclass
 class ResultEnvelope:
     """The reference's tabular result-set shape (csv_tool.py:71-81)."""
@@ -142,15 +149,14 @@ def capped_envelope(to_df: Callable[[], DataFrame], max_rows: int
                     ) -> ResultEnvelope:
     """Clamp, build the gated DataFrame, capped collect, envelope. A gate
     rejection, a bad ``max_rows`` and an analysis or run failure all come
-    back as an error envelope; ``NotImplementedError`` (a missing
-    connector) propagates."""
+    back as an error envelope; only ``MissingConnector`` propagates."""
     try:
         n = clamp_rows(max_rows)
         df = to_df()
         rows, truncated = take_capped(df, n)
     except ReadOnlyViolation as exc:
         return ResultEnvelope(success=False, error=str(exc))
-    except NotImplementedError:
+    except MissingConnector:
         raise
     except Exception as exc:  # analysis errors (unknown table/column)
         return ResultEnvelope(success=False, error=f"Query failed: {exc}")
@@ -164,24 +170,25 @@ def capped_envelope(to_df: Callable[[], DataFrame], max_rows: int
     )
 
 
-def read_page(df: DataFrame, limit: int, offset: int) -> dict[str, Any]:
-    """One offset/limit page of ``df`` plus its total row count
-    (csv_tool.py:57-64); negative ``limit``/``offset`` clamp to 0."""
+def read_page(df: DataFrame, limit: int, offset: int
+              ) -> tuple[dict[str, Any], dict[str, Any]]:
+    """One offset/limit page of ``df`` (csv_tool.py:57-64) as the keys
+    every reader returns, ``{success, columns, rows, row_count,
+    total_rows}``, and its cursor ``{offset, has_more}`` for the readers
+    that report one. Negative ``limit``/``offset`` clamp to 0."""
     limit = max(0, int(limit))
     offset = max(0, int(offset))
     sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
     rows = [r.asDict(recursive=True) for r in sliced.collect()]
     total = df.count()
-    return {
+    page = {
         "success": True,
         "columns": list(df.columns),
-        "column_count": len(df.columns),
         "rows": rows,
         "row_count": len(rows),
         "total_rows": total,
-        "offset": offset,
-        "has_more": offset + len(rows) < total,
     }
+    return page, {"offset": offset, "has_more": offset + len(rows) < total}
 
 
 class Engine:
@@ -261,10 +268,6 @@ class Engine:
         import time as _time
 
         t0 = _time.perf_counter()
-        try:
-            max_rows = clamp_rows(max_rows)
-        except (TypeError, ValueError):
-            use_cache = False  # capped_envelope reports the bad cap
         cache_key = None
         if use_cache:
             normalized = (

@@ -5,8 +5,9 @@ The Spark BigQuery connector jar (or a JDBC driver) is not in this
 container, so ``run_bigquery_query`` runs the engine's gated-SQL core
 (``engine.capped_envelope``) with the remote read as its build step: a
 caller-provided ``reader`` (the injection point a real connector fills)
-or the connector, which raises NotImplementedError when the jar is
-absent. The gate, the clamp and the envelope are real and tested.
+or the connector, which raises ``MissingConnector`` (a
+NotImplementedError) when the jar is absent. The gate, the clamp and
+the envelope are real and tested.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import Build, capped_envelope, gated_df
+from ..engine import Build, MissingConnector, capped_envelope, gated_df
 
 
 def _connector_reader(spark: SparkSession, sql: str) -> DataFrame:
@@ -27,7 +28,7 @@ def _connector_reader(spark: SparkSession, sql: str) -> DataFrame:
             .load()
         )
     except Exception as exc:
-        raise NotImplementedError(
+        raise MissingConnector(
             "spark-bigquery connector jar not on the classpath; pass a "
             "`reader` (e.g. JDBC) or install the connector."
         ) from exc
@@ -41,18 +42,24 @@ def run_bigquery_query(
 ) -> dict[str, Any]:
     """Read-only remote SQL with schema + truncation envelope
     (bigquery_tool.py:235-243 shape)."""
-    frames: list[DataFrame] = []
+    df: DataFrame | None = None
 
     def build(spark: SparkSession, sql: str) -> DataFrame:
-        frames.append((reader or _connector_reader)(spark, sql))
-        return frames[0]
+        nonlocal df
+        df = (reader or _connector_reader)(spark, sql)
+        return df
 
-    out = capped_envelope(lambda: gated_df(spark, sql, build), max_rows
-                          ).to_tool_dict()
-    if out["success"]:
-        del out["column_count"]
-        out["schema"] = [{"name": n, "type": t} for n, t in frames[0].dtypes]
-    return out
+    env = capped_envelope(lambda: gated_df(spark, sql, build), max_rows)
+    if not env.success:
+        return env.to_tool_dict()
+    return {
+        "success": True,
+        "columns": env.columns,
+        "schema": [{"name": n, "type": t} for n, t in df.dtypes],
+        "rows": env.rows,
+        "row_count": env.row_count,
+        "query_truncated": env.truncated,
+    }
 
 
 def describe_dataset(

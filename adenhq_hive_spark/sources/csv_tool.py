@@ -56,7 +56,8 @@ def csv_read(
     """Paginated CSV scan: header schema + offset/limit row slice."""
     if not os.path.exists(file_path):
         return _error(f"File not found: {file_path}")
-    return read_page(_read_df(spark, file_path), limit, offset)
+    page, cursor = read_page(_read_df(spark, file_path), limit, offset)
+    return {**page, "column_count": len(page["columns"]), **cursor}
 
 
 def csv_write(

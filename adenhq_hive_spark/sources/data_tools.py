@@ -50,9 +50,8 @@ class DataStore:
         path = self._path(key)
         if not os.path.exists(path):
             return {"success": False, "error": f"No data for key: {key}"}
-        page = read_page(self.spark.read.parquet(path), limit, offset)
-        del page["column_count"]
-        return {"success": True, "key": key, **page}
+        page, cursor = read_page(self.spark.read.parquet(path), limit, offset)
+        return {**page, "key": key, **cursor}
 
     def load_df(self, key: str) -> DataFrame:
         """The distributed path: hand the intermediate back as a DataFrame."""

@@ -160,9 +160,8 @@ def excel_read(
     sheet = sheet if sheet is not None else next(iter(workbook), None)
     if sheet not in workbook:
         return {"success": False, "error": f"Sheet not found: {sheet}"}
-    page = read_page(sheet_to_df(spark, workbook[sheet]), limit, offset)
-    del page["offset"], page["has_more"]
-    return {"success": True, "sheet": sheet, **page}
+    page, _ = read_page(sheet_to_df(spark, workbook[sheet]), limit, offset)
+    return {**page, "sheet": sheet, "column_count": len(page["columns"])}
 
 
 def excel_search(

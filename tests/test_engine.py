@@ -362,8 +362,8 @@ def _sql_tool(spark, engine, files, tool):
             return env.success, env.row_count, env.truncated, env.error
         return run
     if tool == "bigquery":
-        def reader(s, sql):
-            return s.range(5).withColumnRenamed("id", "k")
+        def reader(s, sql):  # the remote side runs the query itself
+            return s.sql(sql.replace("data", "(SELECT id AS k FROM range(5))"))
         return lambda q, m: as_tuple(
             run_bigquery_query(spark, q, max_rows=m, reader=reader))
     call = {"csv": csv_sql, "jsonl": jsonl_sql, "excel": excel_sql}[tool]
@@ -400,11 +400,18 @@ def test_gate_runs_before_the_tool_registers_data(spark, engine, files, tool):
     spark.catalog.dropTempView("data")
 
 
-def test_bigquery_missing_connector_raises_other_reader_errors_envelope(spark):
-    from adenhq_hive_spark.sources.bigquery_tool import run_bigquery_query
+@pytest.mark.parametrize("tool", SQL_TOOLS)
+def test_spark_not_implemented_error_is_an_error_envelope(spark, engine,
+                                                         files, tool):
+    """Collecting a year-month interval raises Spark's own
+    NotImplementedError subclass; only a missing connector propagates."""
+    ok, _, _, error = _sql_tool(spark, engine, files, tool)(
+        "SELECT INTERVAL '1' YEAR AS y", 10)
+    assert not ok and error.startswith("Query failed: ")
 
-    with pytest.raises(NotImplementedError, match="connector"):
-        run_bigquery_query(spark, "SELECT 1 AS one", max_rows=5)
+
+def test_bigquery_reader_errors_are_an_error_envelope(spark):
+    from adenhq_hive_spark.sources.bigquery_tool import run_bigquery_query
 
     def broken(s, sql):
         raise RuntimeError("credentials expired")

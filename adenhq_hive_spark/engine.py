@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import DEFAULT_SF_DIR, register_views
+from .session import codegen_compile_counter
 
 
 class ReadOnlyViolation(Exception):
@@ -222,9 +223,10 @@ class Engine:
         # side, sibling of operators/logs.py's runtime-log queries
         self._history: list[dict] = []
         self._history_size = 1000
+        self._compiles = codegen_compile_counter(spark)
         register_views(spark, sf_dir)
 
-    def _record(self, sql: str, max_rows: int, t0: float,
+    def _record(self, sql: str, max_rows: int, t0: float, compiles0: int,
                 env: "ResultEnvelope", cached: bool) -> None:
         import time as _time
 
@@ -232,6 +234,7 @@ class Engine:
             "sql": sql,
             "max_rows": max_rows,
             "ms": round((_time.perf_counter() - t0) * 1000, 1),
+            "codegen_compiles": self._compiles() - compiles0,
             "success": env.success,
             "row_count": env.row_count,
             "truncated": env.truncated,
@@ -243,7 +246,11 @@ class Engine:
 
     def history(self, limit: int = 50) -> list[dict]:
         """The most recent ``limit`` sql() invocations, oldest first —
-        statement, wall ms, row count, truncation, cache hit, error."""
+        statement, wall ms, row count, truncation, cache hit, error, and
+        ``codegen_compiles``: how many generated classes Janino compiled
+        during the call (0 when every class came from Spark's cache).
+        That count is JVM-wide, so a call that overlaps other queries in
+        the same JVM also counts their compiles."""
         if limit <= 0:  # [-0:] would be the FULL list
             return []
         return list(self._history[-limit:])
@@ -268,6 +275,7 @@ class Engine:
         import time as _time
 
         t0 = _time.perf_counter()
+        compiles0 = self._compiles()
         cache_key = None
         if use_cache:
             normalized = (
@@ -294,7 +302,7 @@ class Engine:
                     self._result_cache[cache_key] = self._copy_env(env)
                     while len(self._result_cache) > self._result_cache_size:
                         self._result_cache.popitem(last=False)
-        self._record(sql, max_rows, t0, env, cached=cached)
+        self._record(sql, max_rows, t0, compiles0, env, cached=cached)
         return env
 
     @staticmethod

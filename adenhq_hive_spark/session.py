@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -73,7 +74,30 @@ _DEFAULTS = {
     # same posture per executor on a real cluster (no-op in local mode)
     "spark.executor.extraJavaOptions":
         "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
+    # Generated-class cache sized to the registry's working set (r13,
+    # BASELINE.md "Round 13: codegen cache"). Spark's stock 100 is an
+    # LRU, and an LRU smaller than a cyclic working set misses on EVERY
+    # access: the 12-statement interactive pool needs 124 classes, the
+    # five-entry pipeline pass 129 (the event stream's 54 fit), so each
+    # repeat pass re-ran Janino on ~116 classes and the JIT on the new
+    # bytecode. One pass over the whole 278-entry registry compiles
+    # 3,433 distinct classes; with this cap a second pass compiles under
+    # 200 (their code embeds run-dependent values), against ~5,700 at
+    # 100, for +21 MB of Metaspace and code heap. A static conf: it is
+    # JVM-wide and the first session in the process sets it.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
+
+
+def codegen_compile_counter(spark: SparkSession) -> Callable[[], int]:
+    """A reader of the Janino compiles so far in this JVM: the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram, which grows
+    once per generated-class cache miss (driver and, in local mode,
+    tasks). The histogram is looked up once, since every package step of
+    a gateway lookup is a round trip; each read is then one call."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    histogram = metrics.METRIC_COMPILATION_TIME()
+    return lambda: int(histogram.getCount())
 
 
 # Execution memory OFF the GC heap (r12, guide §5). The heavy shuffle

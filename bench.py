@@ -13,7 +13,8 @@ artifact number instead of being masked by ~45 sub-second entries:
 `relational_floor_total` (q* — scheduling-floor-bound at sf0.1) and
 `compute_tier_total` (pl_* — real per-row compute, the tier that
 separates from the floor).  Per-query times / spread_pct / sf1 / duckdb
-detail goes to BENCH_DETAIL_r{N}.json next to this script
+detail and the effective session settings (``conf``) go to
+BENCH_DETAIL_r{N}.json next to this script
 (BENCH_DETAIL_r{N}_c{cpus}.json when SPARK_GRAFT_CPUS is not 32).
 
 Plans are executed with the `noop` sink (full pipeline execution, no
@@ -396,6 +397,22 @@ def detail_name(this_round: int, cpus: int) -> str:
     return f"{stem}.json" if cpus == 32 else f"{stem}_c{cpus}.json"
 
 
+# Effective settings stamped into every detail file: two details compare
+# only when they ran under the same master, memory, shuffle width, AQE
+# and generated-class cache.
+STAMP_CONF = (
+    "spark.master", "spark.driver.memory", "spark.memory.offHeap.enabled",
+    "spark.memory.offHeap.size", "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled", "spark.sql.codegen.cache.maxEntries",
+)
+
+
+def conf_stamp(spark) -> dict[str, str | None]:
+    """The session's effective value of each ``STAMP_CONF`` key, None
+    where it is unset."""
+    return {k: spark.conf.get(k, None) for k in STAMP_CONF}
+
+
 def band_source(here: str, this_round: int,
                 cpus: int) -> tuple[str, dict[str, float]] | None:
     """(file, per-query times) of the newest prior-round detail file
@@ -689,6 +706,7 @@ def main() -> None:
         # cpu-stamp (r11 verdict #4): an 8-core rerun's detail must
         # never become a 32-core sweep's regression band, and vice versa
         "cpus": cpus,
+        "conf": conf_stamp(spark),
     }
     if sf1:
         detail["sf1_relational"] = sf1

@@ -201,3 +201,21 @@ def test_detail_round_ignores_cpu_suffixed_artifacts(tmp_path):
               "BENCH_r13_c4.json"):
         (tmp_path / f).write_text("{}")
     assert bench._detail_round(str(tmp_path)) == 13
+
+
+# ---- conf stamp -----------------------------------------------------------
+
+def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
+    class Conf:
+        def get(self, key, default):
+            return {"spark.master": "local[4]",
+                    "spark.sql.codegen.cache.maxEntries": "4096"}.get(key, default)
+
+    class Spark:
+        conf = Conf()
+
+    stamp = bench.conf_stamp(Spark())
+    assert list(stamp) == list(bench.STAMP_CONF)
+    assert stamp["spark.master"] == "local[4]"
+    assert stamp["spark.sql.codegen.cache.maxEntries"] == "4096"
+    assert stamp["spark.memory.offHeap.size"] is None

@@ -285,16 +285,22 @@ def test_query_history_records_all_paths(spark):
     from adenhq_hive_spark.engine import Engine
 
     eng = Engine(spark, SF_SMOKE)
-    eng.sql("SELECT COUNT(*) AS n FROM region", use_cache=True)
-    eng.sql("SELECT COUNT(*) AS n FROM region", use_cache=True)  # hit
-    eng.sql("DROP TABLE region")                                 # gated
+    # the literals make the statement's generated code new to this JVM
+    q = "SELECT COUNT(*) + 7919 AS n FROM region WHERE r_regionkey < 7907"
+    eng.sql(q, use_cache=True)
+    eng.sql(q, use_cache=True)             # hit
+    eng.sql("DROP TABLE region")           # gated
+    eng.sql(q)                             # re-run, classes cached
     h = eng.history()
-    assert len(h) == 3
-    assert [e["cached"] for e in h] == [False, True, False]
+    assert len(h) == 4
+    assert [e["cached"] for e in h] == [False, True, False, False]
     assert h[0]["success"] and h[0]["row_count"] == 1
     assert h[1]["ms"] <= h[0]["ms"]        # cache hit is not slower
     assert not h[2]["success"] and h[2]["error"]
-    assert eng.history(limit=1)[0]["sql"] == "DROP TABLE region"
+    assert eng.history(limit=2)[0]["sql"] == "DROP TABLE region"
+    # Janino compiles per call: only the first run generates classes
+    assert h[0]["codegen_compiles"] > 0
+    assert [e["codegen_compiles"] for e in h[1:]] == [0, 0, 0]
 
 
 def test_sql_analysis_error_enveloped_and_recorded(spark):

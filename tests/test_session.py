@@ -1,11 +1,21 @@
 """SPARK_GRAFT_OFFHEAP parsing: off words and zero sizes disable the
-off-heap pool, Spark sizes enable it, anything else fails fast."""
+off-heap pool, Spark sizes enable it, anything else fails fast. The
+generated-class cache holds a repeated pool of statements."""
 
 from __future__ import annotations
 
 import pytest
 
-from adenhq_hive_spark.session import _offheap_conf, get_spark
+from adenhq_hive_spark.engine import Engine
+from adenhq_hive_spark.queries import all_queries
+from adenhq_hive_spark.session import _offheap_conf, codegen_compile_counter, get_spark
+
+from .conftest import SF_SMOKE
+
+# The interactive benchmark's pool: every eighth relational registry
+# entry that has an engine_sql form.
+CODEGEN_POOL = ("q01", "q09", "q17", "q26", "q34", "q42", "q50", "q58",
+                "q66", "q74", "q82", "q91")
 
 
 @pytest.mark.parametrize(
@@ -38,3 +48,19 @@ def test_get_spark_rejects_bad_offheap(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_OFFHEAP", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_OFFHEAP"):
         get_spark("offheap-validation")
+
+
+def test_repeated_pool_reuses_its_compiled_classes(spark):
+    """A second pass over the same statements compiles no class. On a
+    fresh JVM one pass of this pool at sf0.001 compiles 124 generated
+    classes (4 cores); Spark's stock LRU cache of 100 is smaller than
+    that cycle, so there every repeat pass recompiled 95 to 116 of them."""
+    assert get_spark().conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    specs = all_queries()
+    eng = Engine(spark, SF_SMOKE)
+    compiles = codegen_compile_counter(spark)
+    for _ in range(2):
+        before = compiles()
+        for name in CODEGEN_POOL:
+            assert eng.sql(specs[name].engine_sql).success, name
+    assert compiles() - before == 0

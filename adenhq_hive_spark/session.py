@@ -86,6 +86,19 @@ _DEFAULTS = {
     # 100, for +21 MB of Metaspace and code heap. A static conf: it is
     # JVM-wide and the first session in the process sets it.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # Python workers that re-read a zip archive only when it changed
+    # (r13, BASELINE.md "Round 13: Python worker zip re-reads"). Every
+    # Python task calls importlib.invalidate_caches(), and before
+    # CPython 3.13 that re-reads the whole directory of pyspark.zip once
+    # per package importer: ~285 ms of worker CPU per task, before a row.
+    # The daemon keeps a directory while the archive's inode, size and
+    # mtime stay the same, so an archive that was rewritten is still
+    # re-read; on CPython >= 3.13 it only runs pyspark's daemon. Workers
+    # start as `python -m` of this module, so the package must be on
+    # their PYTHONPATH. A session built without get_spark (as a caller
+    # of __spark_entry__ may) keeps pyspark's daemon: same results, the
+    # re-read stays.
+    "spark.python.daemon.module": "adenhq_hive_spark.worker_daemon",
 }
 
 

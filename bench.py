@@ -404,6 +404,7 @@ STAMP_CONF = (
     "spark.master", "spark.driver.memory", "spark.memory.offHeap.enabled",
     "spark.memory.offHeap.size", "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled", "spark.sql.codegen.cache.maxEntries",
+    "spark.python.daemon.module",
 )
 
 

@@ -209,7 +209,9 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
     class Conf:
         def get(self, key, default):
             return {"spark.master": "local[4]",
-                    "spark.sql.codegen.cache.maxEntries": "4096"}.get(key, default)
+                    "spark.sql.codegen.cache.maxEntries": "4096",
+                    "spark.python.daemon.module": "adenhq_hive_spark.worker_daemon",
+                    }.get(key, default)
 
     class Spark:
         conf = Conf()
@@ -218,4 +220,5 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
     assert list(stamp) == list(bench.STAMP_CONF)
     assert stamp["spark.master"] == "local[4]"
     assert stamp["spark.sql.codegen.cache.maxEntries"] == "4096"
+    assert stamp["spark.python.daemon.module"] == "adenhq_hive_spark.worker_daemon"
     assert stamp["spark.memory.offHeap.size"] is None

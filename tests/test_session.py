@@ -1,10 +1,15 @@
 """SPARK_GRAFT_OFFHEAP parsing: off words and zero sizes disable the
 off-heap pool, Spark sizes enable it, anything else fails fast. The
-generated-class cache holds a repeated pool of statements."""
+generated-class cache holds a repeated pool of statements. Python
+workers start through the package's worker daemon."""
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from adenhq_hive_spark.engine import Engine
 from adenhq_hive_spark.queries import all_queries
@@ -64,3 +69,24 @@ def test_repeated_pool_reuses_its_compiled_classes(spark):
         for name in CODEGEN_POOL:
             assert eng.sql(specs[name].engine_sql).success, name
     assert compiles() - before == 0
+
+
+def test_python_workers_run_the_package_zip_wrapper(spark):
+    """Inside a Python worker, zipimporter.invalidate_caches is the
+    worker daemon's wrapper (CPython < 3.13) or the stock method."""
+
+    @F.pandas_udf("string")
+    def which(ids: pd.Series) -> pd.Series:
+        import sys
+        import zipimport
+
+        fn = zipimport.zipimporter.invalidate_caches
+        before_313 = sys.version_info[:2] < (3, 13)
+        return ids.map(lambda _: f"{before_313}|{fn.__code__.co_filename}|{fn.__qualname__}")
+
+    before_313, filename, qualname = spark.range(1).select(which("id")).first()[0].split("|")
+    if before_313 == "True":
+        assert filename.endswith(os.path.join("adenhq_hive_spark", "worker_daemon.py"))
+        assert qualname == "reread_when_changed.<locals>.invalidate_caches"
+    else:
+        assert qualname == "zipimporter.invalidate_caches"

@@ -181,7 +181,10 @@ def read_page(df: DataFrame, limit: int, offset: int
     offset = max(0, int(offset))
     sliced = df.offset(offset).limit(limit) if offset else df.limit(limit)
     rows = [r.asDict(recursive=True) for r in sliced.collect()]
-    total = df.count()
+    # A short page that is non-empty, or starts at 0, reached the end of
+    # the data: its total is exact without a second (count) job.
+    ended = len(rows) < limit and (len(rows) > 0 or offset == 0)
+    total = offset + len(rows) if ended else df.count()
     page = {
         "success": True,
         "columns": list(df.columns),

@@ -1,18 +1,30 @@
 """Similarity search over embedding columns (driver north star).
 
-Two tiers:
+Tiers, each ranked per query by (cosine desc, cand_id asc):
 
-- ``cosine_topk``     — exact brute-force: broadcast the (small) query set,
-  compute cosine with JVM-side array lambdas (zip_with + aggregate — no
-  Python UDF), rank per query. The correctness baseline.
-- ``lsh_cosine_topk`` — random-hyperplane LSH: sign-bit signatures from a
-  fixed-seed projection matrix, candidates = same-bucket vectors, exact
-  cosine re-rank within buckets. The scale path: candidate generation is
-  bucket-local, so the pair space is sub-quadratic; multiple hash tables
-  recover recall.
+- ``cosine_topk``       exact brute force: the query side is broadcast as
+  one numpy matrix and every Arrow batch of the candidate scan scores
+  all queries with one BLAS matmul. The correctness baseline.
+- ``lsh_cosine_topk``   random-hyperplane LSH: same-bucket candidates,
+  exact cosine re-rank within buckets (fixed-seed projections).
+- ``ivf_cosine_topk``   IVF: spherical k-means cells, probe the
+  ``n_probe`` nearest cells, exact re-rank of their posting lists.
+- ``pq_cosine_topk``    product quantization with ADC scoring (Jégou
+  2011); ``save_pq_index`` / ``pq_append_index`` / ``pq_query_index``
+  / ``pq_staleness`` persist, grow, probe and gate the same index.
+- ``ivfpq_cosine_topk`` the FAISS ``IVF,PQ`` composite: PQ-coded
+  residuals inside IVF cells.
 
-Determinism: projection matrix from numpy ``default_rng(42)``; all ranking
-ties broken by vec_id.
+One ANN core: each idea has one private helper that every tier shares —
+``_rank_topk`` (top-k ranker + exact ``refine``), ``_bucket_topk`` /
+``_batch_topk`` (bucket-mate / Arrow-batch top-k), ``_top_cells`` (IVF
+probes), ``_require_integral`` (id/label guard), ``_collect_capped``
+(driver-capped collect), ``_ordered_sample`` (training sample),
+``_nearest_centroid`` / ``_pq_assign`` (PQ kernel), ``_adc_tables``
+(ADC lookup tables) and ``_read_books`` (codebook reader).
+
+Determinism: projection matrices and k-means seeds come from numpy
+``default_rng(seed)``; every ranking tie is broken by id.
 """
 
 from __future__ import annotations
@@ -21,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import _materialize
 
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
@@ -81,6 +95,123 @@ def _unit_vectors(
     )
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _require_integral(msg: str, *checks: tuple) -> None:
+    """Raise ``ValueError`` unless every ``(df, col, side)`` column is
+    integral: broadcast ids and labels ride as int64 arrays, and a
+    string or float column would otherwise fail as an opaque
+    executor-side numpy cast inside mapInPandas. ``msg`` is the
+    caller's text, formatted with ``side``, ``col`` and ``dtype``."""
+    for df, col, side in checks:
+        dtype = dict(df.dtypes).get(col)
+        if dtype not in _INTEGRAL:
+            raise ValueError(msg.format(side=side, col=col, dtype=dtype))
+
+
+def _collect_capped(
+    df: DataFrame, cap: int, who: str, cap_name: str, hint: str
+) -> list:
+    """The rows of a broadcast side, at most ``cap`` of them: one
+    ``limit(cap + 1)`` collect that raises past the cap instead of
+    silently OOMing the driver. The caller turns the rows into its own
+    arrays (and applies its own row normaliser)."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(f"{who} exceeds {cap_name}={cap}; {hint}")
+    return rows
+
+
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    refine: int = 0,
+    v: DataFrame | None = None,
+    q: DataFrame | None = None,
+) -> DataFrame:
+    """Top-``k`` of ``scored`` (query_id, cand_id, cosine) per query by
+    (cosine desc, cand_id asc), as (query_id, rank, cand_id, cosine).
+
+    ``refine`` > 0 treats ``scored`` as approximate: keep a shortlist of
+    ``refine * k`` per query, re-score it exactly against the unit
+    vectors ``v`` (cand_id, cand_id_v) and the broadcast queries ``q``
+    (query_id, query_id_v), then rank again — the FAISS
+    ``IndexRefineFlat`` pattern; the exact pass touches only
+    shortlist-many vectors."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("cand_id")
+    )
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    if refine <= 0:
+        return ranked.filter(F.col("rank") <= k).select(
+            "query_id", "rank", "cand_id", "cosine"
+        )
+    shortlist = ranked.filter(F.col("rank") <= refine * k).select(
+        "query_id", "cand_id"
+    )
+    cosine = F.round(_dot(F.col("query_id_v"), F.col("cand_id_v")), 4)
+    exact = (
+        shortlist.join(v, "cand_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "cand_id", cosine.alias("cosine"))
+    )
+    return _rank_topk(exact, k)
+
+
+def _bucket_topk(
+    cands: DataFrame, probes: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Exact top-``k`` over bucket-mates: join the candidates
+    (cand_id, cand_id_v, key) to the broadcast probes (query_id,
+    query_id_v, key), drop self and repeated pairs, score each pair with
+    :func:`_pair_cosine` and rank — the re-rank of the LSH and IVF
+    tiers."""
+    cand = (
+        cands.join(F.broadcast(probes), on=key)
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "cand_id"])
+    )
+    scored = cand.select(
+        "query_id",
+        "cand_id",
+        _pair_cosine(F.col("query_id_v"), F.col("cand_id_v")).alias("cosine"),
+    )
+    return _rank_topk(scored, k)
+
+
+def _batch_topk(
+    q_ids: np.ndarray,
+    ids: np.ndarray,
+    sims: np.ndarray,
+    keep: np.ndarray,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Batch-local top-``k`` of a broadcast-side x Arrow-batch score
+    matrix ``sims`` (one row per ``q_ids`` entry, one column per
+    ``ids`` entry) over the columns ``keep`` allows, by (score desc,
+    id asc): the global winner is in some batch's local top-k, so a
+    final window over these rows is exact. Returns the concatenated
+    (query ids, candidate ids, scores)."""
+    out_q, out_c, out_s = [], [], []
+    for qi in range(len(q_ids)):
+        cand_ids, cand_sims = ids[keep[qi]], sims[qi][keep[qi]]
+        order = np.lexsort((cand_ids, -cand_sims))[:k]
+        out_q.append(np.full(len(order), q_ids[qi]))
+        out_c.append(cand_ids[order])
+        out_s.append(cand_sims[order])
+    return np.concatenate(out_q), np.concatenate(out_c), np.concatenate(out_s)
+
+
+def _top_cells(scores: np.ndarray, n_probe: int) -> np.ndarray:
+    """Per row, the ``n_probe`` best columns of ``scores`` by (score
+    desc, column asc) — the probed IVF cells of each query."""
+    return np.lexsort(
+        (np.broadcast_to(np.arange(scores.shape[1]), scores.shape), -scores),
+        axis=1,
+    )[:, :n_probe]
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -94,8 +225,9 @@ def cosine_topk(
     ``queries`` has the same (id_col, vec_col) shape. The (small) query
     side is broadcast as one numpy matrix; the candidate scan stays
     distributed, each Arrow batch scores ALL queries with one BLAS
-    matmul and keeps a batch-local top-k, and a final window pass merges
-    the per-batch winners (k·n_batches rows, not n·q).
+    matmul (not an interpreted higher-order dot per pair) and keeps a
+    batch-local top-k, and a final window pass merges the per-batch
+    winners (k·n_batches rows, not n·q).
 
     The query side must be driver-bounded: ids must be integral (the
     broadcast matrix contract) and at most ``max_queries`` rows are
@@ -104,24 +236,19 @@ def cosine_topk(
     which keep the query side distributed.
     """
     spark = vectors.sparkSession
-    id_type = dict(queries.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            f"cosine_topk requires an integral query id column; "
-            f"{id_col!r} is {id_type!r}"
-        )
-    # The query side must be bounded-small (it rides a broadcast either
-    # way); materializing it as one numpy matrix lets every Arrow batch
-    # of the DISTRIBUTED candidate scan do a single BLAS matmul against
-    # all queries at once, instead of evaluating an interpreted
-    # (non-codegen) higher-order dot per (candidate, query).
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"cosine_topk query side exceeds max_queries={max_queries}; "
-            "raise the cap explicitly or use lsh_cosine_topk/"
-            "ivf_cosine_topk, which keep the query side distributed"
-        )
+    _require_integral(
+        "cosine_topk requires an integral query id column; "
+        "{col!r} is {dtype!r}",
+        (queries, id_col, "queries"),
+    )
+    qrows = _collect_capped(
+        queries.select(id_col, vec_col),
+        max_queries,
+        "cosine_topk query side",
+        "max_queries",
+        "raise the cap explicitly or use lsh_cosine_topk/ivf_cosine_topk, "
+        "which keep the query side distributed",
+    )
     if not qrows:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
@@ -135,7 +262,6 @@ def cosine_topk(
 
     def partial_topk(it):
         ids_q, mat_q = bq.value
-        nq = len(ids_q)
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -143,36 +269,14 @@ def cosine_topk(
             mat = np.array(list(pdf["cv"]), dtype=np.float64)
             mat /= np.linalg.norm(mat, axis=1, keepdims=True)
             sims = np.round(mat_q @ mat.T, 4)           # (nq, batch)
-            out_q, out_c, out_s = [], [], []
-            for qi in range(nq):
-                row = sims[qi]
-                mask = ids != ids_q[qi]                  # drop self-match
-                cand_ids, cand_sims = ids[mask], row[mask]
-                # batch-local top-k by (cosine desc, cand_id asc): the
-                # global winner is in some batch's local top-k
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), ids_q[qi]))
-                out_c.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
+            keep = ids[None, :] != ids_q[:, None]        # drop self-match
+            q, c, cos = _batch_topk(ids_q, ids, sims, keep, k)
+            yield pd.DataFrame({"query_id": q, "cand_id": c, "cosine": cos})
 
     scored = v.mapInPandas(
         partial_topk, schema="query_id long, cand_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplane_buckets(df: DataFrame, vec_col: str, tensor: np.ndarray):
@@ -238,25 +342,9 @@ def lsh_cosine_topk(
             F.explode(_hyperplane_buckets(df, vec_col, tensor)).alias("bucket"),
         )
 
-    vb = bucketize(vectors, "cand_id")
-    qb = bucketize(queries, "query_id")
-    cand = (
-        vb.join(F.broadcast(qb), on="bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "cand_id",
-        _pair_cosine(F.col("query_id_v"), F.col("cand_id_v")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
+    return _bucket_topk(
+        bucketize(vectors, "cand_id"), bucketize(queries, "query_id"),
+        "bucket", k,
     )
 
 
@@ -330,33 +418,12 @@ def ivf_cosine_topk(
 
     @F.pandas_udf("array<int>")
     def probe_list(vcol: pd.Series) -> pd.Series:
-        s = scores_of(vcol)
-        # top n_probe by (score desc, centroid_id asc)
-        order = np.lexsort(
-            (np.broadcast_to(np.arange(s.shape[1]), s.shape), -s), axis=1
-        )[:, :n_probe]
+        order = _top_cells(scores_of(vcol), n_probe)
         return pd.Series(order.astype(np.int32).tolist())
 
     postings = v.withColumn("centroid_id", nearest("cand_id_v"))
     probes = q.withColumn("centroid_id", F.explode(probe_list("query_id_v")))
-    cand = (
-        postings.join(F.broadcast(probes), on="centroid_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "cand_id",
-        _pair_cosine(F.col("query_id_v"), F.col("cand_id_v")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
-    )
+    return _bucket_topk(postings, probes, "centroid_id", k)
 
 
 def cosine_dedup_pairs(
@@ -718,8 +785,6 @@ def semdedup(
     # most expensive stage in the tree. Per-invocation persist only —
     # released by dedup.release_persisted() between queries; nothing
     # survives a run.
-    from .dedup import _materialize
-
     return _materialize(result.select(
         F.col("id").alias(id_col), "cluster_id", "keep", "dup_of"
     ))
@@ -794,28 +859,20 @@ def hard_negatives(
     spark = df.sparkSession
     if anchors is None:
         anchors = df
-    # Validate BOTH sides: a string/float id or label on the candidate
-    # df would otherwise surface as an opaque executor-side numpy cast
-    # error inside mapInPandas instead of this ValueError.
-    for col, side in (
-        (id_col, anchors),
-        (label_col, anchors),
-        (id_col, df),
-        (label_col, df),
-    ):
-        dt = dict(side.dtypes).get(col)
-        if dt not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"hard_negatives requires integral {col!r}; got {dt!r}"
-            )
-    rows = anchors.select(id_col, label_col, vec_col).limit(
-        max_anchors + 1
-    ).collect()
-    if len(rows) > max_anchors:
-        raise ValueError(
-            f"hard_negatives anchor side exceeds max_anchors="
-            f"{max_anchors}; mine per IVF bucket instead"
-        )
+    _require_integral(
+        "hard_negatives requires integral {col!r}; got {dtype!r}",
+        (anchors, id_col, "anchors"),
+        (anchors, label_col, "anchors"),
+        (df, id_col, "df"),
+        (df, label_col, "df"),
+    )
+    rows = _collect_capped(
+        anchors.select(id_col, label_col, vec_col),
+        max_anchors,
+        "hard_negatives anchor side",
+        "max_anchors",
+        "mine per IVF bucket instead",
+    )
     if not rows:
         return spark.createDataFrame(
             [], "anchor_id long, rank int, neg_id long, cosine double"
@@ -834,7 +891,6 @@ def hard_negatives(
 
     def partial(it):
         ids_a, labels_a, mat_a = ba.value
-        na = len(ids_a)
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -843,33 +899,18 @@ def hard_negatives(
             mat = np.array(list(pdf["cv"]), dtype=np.float64)
             mat /= _safe_norms(mat)
             sims = np.round(mat_a @ mat.T, 4)            # (na, batch)
-            out_a, out_c, out_s = [], [], []
-            for ai in range(na):
-                mask = labels != labels_a[ai]            # negatives only
-                cand_ids, cand_sims = ids[mask], sims[ai][mask]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_a.append(np.full(len(order), ids_a[ai]))
-                out_c.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "anchor_id": np.concatenate(out_a),
-                        "neg_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
+            keep = labels[None, :] != labels_a[:, None]  # negatives only
+            a, c, cos = _batch_topk(ids_a, ids, sims, keep, k)
+            yield pd.DataFrame({"query_id": a, "cand_id": c, "cosine": cos})
 
     scored = v.mapInPandas(
-        partial, schema="anchor_id long, neg_id long, cosine double"
+        partial, schema="query_id long, cand_id long, cosine double"
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("neg_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", "rank", "neg_id", "cosine")
+    return _rank_topk(scored, k).select(
+        F.col("query_id").alias("anchor_id"),
+        "rank",
+        F.col("cand_id").alias("neg_id"),
+        "cosine",
     )
 
 
@@ -890,8 +931,7 @@ def _train_pq_codebooks(
         k = min(n_codes, len(sub))
         cent = sub[rng.choice(len(sub), size=k, replace=False)].copy()
         for _ in range(iters):
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
+            assign, _ = _nearest_centroid(sub, cent)
             for c in range(k):
                 members = sub[assign == c]
                 if len(members):
@@ -900,6 +940,32 @@ def _train_pq_codebooks(
             cent = np.vstack([cent, np.repeat(cent[:1], n_codes - k, axis=0)])
         books[j] = cent
     return books
+
+
+def _nearest_centroid(
+    sub: np.ndarray, cent: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Nearest row of ``cent`` to each row of ``sub`` by squared L2:
+    (argmin, min squared distance) — the per-subvector kernel of PQ
+    training, encoding and quantization error."""
+    d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+    return np.argmin(d2, axis=1), d2.min(axis=1)
+
+
+def _pq_assign(
+    mat: np.ndarray, books: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """PQ-encode the rows of ``mat``: (codes (n, m) int32, squared
+    quantization error summed over the ``m`` subspaces)."""
+    dsub = books.shape[2]
+    codes = np.empty((len(mat), len(books)), dtype=np.int32)
+    err = np.zeros(len(mat), dtype=np.float64)
+    for j, cent in enumerate(books):
+        codes[:, j], d2min = _nearest_centroid(
+            mat[:, j * dsub : (j + 1) * dsub], cent
+        )
+        err += d2min
+    return codes, err
 
 
 def pq_cosine_topk(
@@ -917,13 +983,9 @@ def pq_cosine_topk(
 ) -> DataFrame:
     """Approximate top-k cosine via product quantization (Jégou,
     Douze, Schmid 2011 — the FAISS ``PQ`` index) with asymmetric
-    distance computation (ADC), optionally with an exact re-rank
-    refinement stage (``refine`` > 0: ADC retrieves a shortlist of
-    ``refine * k`` candidates per query, which are re-scored with
-    their FULL vectors — the FAISS ``IndexRefineFlat`` pattern; the
-    exact pass touches only shortlist-many vectors, so the scan
-    economics survive while recall climbs from code-resolution-bound
-    to shortlist-bound).
+    distance computation (ADC), optionally with the exact re-rank of
+    a ``refine * k`` shortlist (:func:`_rank_topk`), which lifts recall
+    from code-resolution-bound to shortlist-bound.
 
     THE memory story for ANN at 100 TB: each unit-normalized vector is
     compressed to ``m`` sub-codes (here 8 codes x 16 centroids = 8
@@ -940,26 +1002,24 @@ def pq_cosine_topk(
     tier (pl_pq_recall), the same contract as the LSH/IVF tiers.
     """
     spark = vectors.sparkSession
-    for side, name in ((queries, "queries"), (vectors, "vectors")):
-        id_type = dict(side.dtypes).get(id_col)
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"pq_cosine_topk requires an integral id column; "
-                f"{name} {id_col!r} is {id_type!r}"
-            )
+    _require_integral(
+        "pq_cosine_topk requires an integral id column; "
+        "{side} {col!r} is {dtype!r}",
+        (queries, id_col, "queries"),
+        (vectors, id_col, "vectors"),
+    )
 
     v = _unit_vectors(vectors, id_col, vec_col, "cand_id")
     # reused by up to three jobs (training-sample collect, encode pass,
     # refine join) — materialize once instead of re-scanning + re-
     # normalizing the corpus per job
-    from .dedup import _materialize
-
     v = _materialize(v)
     q = _unit_vectors(queries, id_col, vec_col, "query_id")
 
-    books = _pq_fit(v, m, n_codes, seed, max_train_rows)
-    if books is None:
+    sample = _ordered_sample(v, max_train_rows)
+    if sample.size == 0:
         return spark.createDataFrame([], _TOPK_SCHEMA)
+    books = _train_pq_codebooks(sample, m, n_codes, seed)
     collected = _pq_collect_queries(q, max_queries, "pq_cosine_topk")
     if collected is None:
         return spark.createDataFrame([], _TOPK_SCHEMA)
@@ -967,46 +1027,15 @@ def pq_cosine_topk(
 
     codes_df = _pq_encode(v, books)
     scored = _pq_adc_scores(codes_df, qids, qmat, books)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    if refine <= 0:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "cand_id", "cosine")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= refine * k)
-        .select("query_id", "cand_id")
-    )
-    exact = (
-        shortlist.join(v, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(_dot(F.col("query_id_v"), F.col("cand_id_v")), 4).alias(
-                "cosine"
-            ),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
-    )
+    return _rank_topk(scored, k, refine, v, q)
 
 
-def _pq_fit(
-    v: DataFrame, m: int, n_codes: int, seed: int, max_train_rows: int
-):
-    """Train codebooks on a bounded, DETERMINISTIC sample (TakeOrdered
-    by id — partition order cannot change the codebooks once the
-    corpus exceeds the cap). Returns (m, n_codes, dsub) or None on an
-    empty corpus."""
-    sample = np.array(
+def _ordered_sample(v: DataFrame, max_train_rows: int) -> np.ndarray:
+    """At most ``max_train_rows`` unit vectors of ``v`` (cand_id,
+    cand_id_v) as a float64 matrix: a bounded, DETERMINISTIC sample
+    (TakeOrdered by id — partition order cannot change what is trained
+    on once the corpus exceeds the cap)."""
+    return np.array(
         [
             r[0]
             for r in v.select("cand_id", "cand_id_v")
@@ -1017,27 +1046,18 @@ def _pq_fit(
         ],
         dtype=np.float64,
     )
-    if sample.size == 0:
-        return None
-    return _train_pq_codebooks(sample, m, n_codes, seed)
 
 
 def _pq_encode(v: DataFrame, books: np.ndarray) -> DataFrame:
     """Distributed encode: (cand_id, codes array<int>) — one Arrow-batch
-    argmin per subvector against the broadcast codebooks."""
-    dsub = books.shape[2]
+    :func:`_pq_assign` against the broadcast codebooks."""
     bc = v.sparkSession.sparkContext.broadcast(books)
 
     @F.pandas_udf("array<int>")
     def encode(vcol: pd.Series) -> pd.Series:
         if len(vcol) == 0:
             return pd.Series([], dtype=object)
-        mat = np.array(list(vcol), dtype=np.float64)
-        codes = np.empty((len(mat), len(bc.value)), dtype=np.int32)
-        for j, cent in enumerate(bc.value):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
+        codes, _ = _pq_assign(np.array(list(vcol), dtype=np.float64), bc.value)
         return pd.Series(codes.tolist())
 
     return v.select("cand_id", encode("cand_id_v").alias("codes"))
@@ -1047,21 +1067,15 @@ def _pq_qerr(v: DataFrame, books: np.ndarray) -> DataFrame:
     """Distributed quantization error: (cand_id, qerr) where qerr =
     sum over subspaces of the squared distance to the NEAREST centroid
     — exactly the error the encoder commits for that vector. Same
-    Arrow-batch argmin as :func:`_pq_encode`, keeping the min instead
-    of the argmin."""
-    dsub = books.shape[2]
+    Arrow-batch :func:`_pq_assign` as :func:`_pq_encode`, keeping the
+    min instead of the argmin."""
     bc = v.sparkSession.sparkContext.broadcast(books)
 
     @F.pandas_udf("double")
     def qerr(vcol: pd.Series) -> pd.Series:
         if len(vcol) == 0:
             return pd.Series([], dtype=np.float64)
-        mat = np.array(list(vcol), dtype=np.float64)
-        err = np.zeros(len(mat), dtype=np.float64)
-        for j, cent in enumerate(bc.value):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            err += d2.min(axis=1)
+        _, err = _pq_assign(np.array(list(vcol), dtype=np.float64), bc.value)
         return pd.Series(err)
 
     return v.select("cand_id", qerr("cand_id_v").alias("qerr"))
@@ -1114,17 +1128,8 @@ def pq_staleness(
     if not meta:
         raise ValueError(f"no PQ meta at {path}/meta")
     train_qerr = float(meta[0]["train_qerr"])
-    brows = spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
-    mm = max(r["j"] for r in brows) + 1
-    nc = max(r["c"] for r in brows) + 1
-    dsub = len(brows[0]["vals"])
-    books = np.empty((mm, nc, dsub), dtype=np.float64)
-    for r in brows:
-        books[r["j"], r["c"]] = r["vals"]
-    v = _unit_vectors(new_vectors, id_col, vec_col, "cand_id")
-    from .dedup import _materialize
-
-    v = _materialize(v)
+    books = _read_books(spark, path)
+    v = _materialize(_unit_vectors(new_vectors, id_col, vec_col, "cand_id"))
     # Empty delta: every signal below is an average over zero rows (and
     # dup/share divide by n_delta=0) — the row would read NULL and a
     # caller gating re-trains would silently read NULL as "no retrain".
@@ -1168,21 +1173,51 @@ def pq_staleness(
     )
 
 
+def _read_books(spark, path: str) -> np.ndarray:
+    """The codebooks of the PQ index at ``path`` (``<path>/books``, one
+    (j, c, vals) row per centroid) as one (m, n_codes, dsub) array."""
+    brows = spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
+    if not brows:
+        raise ValueError(f"no PQ codebooks at {path}/books")
+    books = np.empty(
+        (
+            max(r["j"] for r in brows) + 1,
+            max(r["c"] for r in brows) + 1,
+            len(brows[0]["vals"]),
+        ),
+        dtype=np.float64,
+    )
+    for r in brows:
+        books[r["j"], r["c"]] = r["vals"]
+    return books
+
+
 def _pq_collect_queries(q: DataFrame, max_queries: int, who: str):
-    """Bounded query-side collect (raise, never silently OOM the
-    driver). Returns (qids, qmat) or None when the query side is
+    """The unit query side (query_id, query_id_v) as (qids, qmat)
+    arrays through :func:`_collect_capped`, or None when it is
     empty."""
-    qrows = q.limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"{who} query side exceeds max_queries={max_queries}; "
-            "raise the cap explicitly or batch the query set"
-        )
+    qrows = _collect_capped(
+        q,
+        max_queries,
+        f"{who} query side",
+        "max_queries",
+        "raise the cap explicitly or batch the query set",
+    )
     if not qrows:
         return None
     qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["query_id_v"] for r in qrows], dtype=np.float64)
     return qids, qmat
+
+
+def _adc_tables(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Per-query ADC lookup tables: (n_queries, m, n_codes) partial dots
+    of each query subvector with each centroid of its subspace."""
+    return np.einsum(
+        "qjd,jcd->qjc",
+        qmat.reshape(len(qmat), len(books), books.shape[2]),
+        books,
+    )
 
 
 def _pq_adc_scores(
@@ -1191,10 +1226,7 @@ def _pq_adc_scores(
     """ADC scoring of stored codes against broadcast per-query lookup
     tables ((n_queries, m, n_codes) partial dots — tiny); one
     vectorized numpy gather per Arrow batch. Self-matches excluded."""
-    dsub = books.shape[2]
-    tabs = np.einsum(
-        "qjd,jcd->qjc", qmat.reshape(len(qmat), len(books), dsub), books
-    )
+    tabs = _adc_tables(qmat, books)
     bt = codes_df.sparkSession.sparkContext.broadcast((qids, tabs))
 
     def score_batches(it):
@@ -1241,9 +1273,10 @@ def save_pq_index(
     spark = vectors.sparkSession
     v = _unit_vectors(vectors, id_col, vec_col, "cand_id")
     v = _materialize(v)
-    books = _pq_fit(v, m, n_codes, seed, max_train_rows)
-    if books is None:
+    sample = _ordered_sample(v, max_train_rows)
+    if sample.size == 0:
         raise ValueError("cannot build a PQ index over an empty corpus")
+    books = _train_pq_codebooks(sample, m, n_codes, seed)
     _pq_encode(v, books).write.mode("overwrite").parquet(f"{path}/codes")
     rows = [
         (j, c, [float(x) for x in books[j, c]])
@@ -1289,23 +1322,10 @@ def pq_append_index(
 
     Returns the number of code rows appended.
     """
-    brows = (
-        spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
-    )
-    if not brows:
-        raise ValueError(f"no PQ codebooks at {path}/books")
-    mm = max(r["j"] for r in brows) + 1
-    nc = max(r["c"] for r in brows) + 1
-    dsub = len(brows[0]["vals"])
-    books = np.empty((mm, nc, dsub), dtype=np.float64)
-    for r in brows:
-        books[r["j"], r["c"]] = r["vals"]
-
+    books = _read_books(spark, path)
     existing = spark.read.parquet(f"{path}/codes").select("cand_id")
     v = _unit_vectors(new_vectors, id_col, vec_col, "cand_id")
     delta = v.join(existing, "cand_id", "left_anti")
-    from .dedup import _materialize
-
     codes = _materialize(_pq_encode(delta, books))
     n = codes.count()
     if n:
@@ -1338,18 +1358,7 @@ def pq_query_index(
             "refine > 0 requires the original `vectors` DataFrame — the "
             "index stores only the compressed codes"
         )
-    brows = (
-        spark.read.parquet(f"{path}/books")
-        .orderBy("j", "c")
-        .collect()
-    )
-    mm = max(r["j"] for r in brows) + 1
-    nc = max(r["c"] for r in brows) + 1
-    dsub = len(brows[0]["vals"])
-    books = np.empty((mm, nc, dsub), dtype=np.float64)
-    for r in brows:
-        books[r["j"], r["c"]] = r["vals"]
-
+    books = _read_books(spark, path)
     codes_df = spark.read.parquet(f"{path}/codes")
     q = _unit_vectors(queries, id_col, vec_col, "query_id")
     collected = _pq_collect_queries(q, max_queries, "pq_query_index")
@@ -1357,67 +1366,9 @@ def pq_query_index(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     qids, qmat = collected
     scored = _pq_adc_scores(codes_df, qids, qmat, books)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    if refine <= 0:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "cand_id", "cosine")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= refine * k)
-        .select("query_id", "cand_id")
-    )
-    v = _unit_vectors(vectors, id_col, vec_col, "cand_id")
-    exact = (
-        shortlist.join(v, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(_dot(F.col("query_id_v"), F.col("cand_id_v")), 4).alias(
-                "cosine"
-            ),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
-    )
-
-
-def update_pq_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental PQ index maintenance: encode a new vector batch with
-    the FROZEN stored codebooks and append the codes — the operation
-    that keeps a 100 TB ANN index current as data arrives (a rebuild
-    re-trains and re-encodes everything; the delta encode touches only
-    the batch). The codebooks are deliberately not refreshed: PQ
-    centroids drift slowly, and FAISS practice is periodic re-train +
-    full re-encode as a separate maintenance event, not per batch.
-
-    Idempotence is the caller's contract (the update_trigram_postings
-    precedent): re-appending the same batch duplicates ids — feed each
-    batch once (foreachBatch epoch-id pattern) or dedup downstream.
-    """
-    brows = spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
-    mm = max(r["j"] for r in brows) + 1
-    nc = max(r["c"] for r in brows) + 1
-    dsub = len(brows[0]["vals"])
-    books = np.empty((mm, nc, dsub), dtype=np.float64)
-    for r in brows:
-        books[r["j"], r["c"]] = r["vals"]
-    v = _unit_vectors(new_vectors, id_col, vec_col, "cand_id")
-    _pq_encode(v, books).write.mode("append").parquet(f"{path}/codes")
+    if vectors is not None:
+        vectors = _unit_vectors(vectors, id_col, vec_col, "cand_id")
+    return _rank_topk(scored, k, refine, vectors, q)
 
 
 def ivfpq_cosine_topk(
@@ -1455,37 +1406,21 @@ def ivfpq_cosine_topk(
     original vectors. Quality gated by recall@k vs the exact tier.
     """
     spark = vectors.sparkSession
-    for side, name in ((queries, "queries"), (vectors, "vectors")):
-        id_type = dict(side.dtypes).get(id_col)
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"ivfpq_cosine_topk requires an integral id column; "
-                f"{name} {id_col!r} is {id_type!r}"
-            )
-    from .dedup import _materialize
-
+    _require_integral(
+        "ivfpq_cosine_topk requires an integral id column; "
+        "{side} {col!r} is {dtype!r}",
+        (queries, id_col, "queries"),
+        (vectors, id_col, "vectors"),
+    )
     v = _materialize(_unit_vectors(vectors, id_col, vec_col, "cand_id"))
     q = _unit_vectors(queries, id_col, vec_col, "query_id")
 
-    sample = np.array(
-        [
-            r[0]
-            for r in v.select("cand_id", "cand_id_v")
-            .orderBy("cand_id")
-            .limit(max_train_rows)
-            .select("cand_id_v")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
+    sample = _ordered_sample(v, max_train_rows)
     if sample.size == 0:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     coarse = _train_spherical_kmeans(sample, n_centroids, seed)
     assign = np.argmax(sample @ coarse.T, axis=1)
-    books = _train_pq_codebooks(
-        sample - coarse[assign], m, n_codes, seed
-    )
-    dsub = books.shape[2]
+    books = _train_pq_codebooks(sample - coarse[assign], m, n_codes, seed)
     bc = spark.sparkContext.broadcast((coarse, books))
 
     def encode_batches(it):
@@ -1495,12 +1430,7 @@ def ivfpq_cosine_topk(
                 continue
             mat = np.array(list(pdf["cand_id_v"]), dtype=np.float64)
             cell = np.argmax(mat @ C.T, axis=1)
-            resid = mat - C[cell]
-            codes = np.empty((len(mat), len(B)), dtype=np.int32)
-            for j, cent in enumerate(B):
-                sub = resid[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
+            codes, _ = _pq_assign(mat - C[cell], B)
             yield pd.DataFrame({
                 "cand_id": pdf["cand_id"].to_numpy(),
                 "cell": cell.astype(np.int32),
@@ -1516,14 +1446,10 @@ def ivfpq_cosine_topk(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     qids, qmat = collected
     # per-query ADC tables over RESIDUAL codebooks (cell-independent)
-    tabs = np.einsum(
-        "qjd,jcd->qjc", qmat.reshape(len(qmat), len(books), dsub), books
-    )
+    tabs = _adc_tables(qmat, books)
     # probed cells per query by q·c desc (centroid-id tie-break)
     qc = qmat @ coarse.T                      # (nq, n_centroids)
-    order = np.lexsort(
-        (np.broadcast_to(np.arange(qc.shape[1]), qc.shape), -qc), axis=1
-    )[:, :n_probe]
+    order = _top_cells(qc, n_probe)
     probe_rows = [
         (int(qids[i]), int(c), float(qc[i, c]))
         for i in range(len(qids))
@@ -1559,36 +1485,7 @@ def ivfpq_cosine_topk(
     scored = joined.select("query_id", "cand_id", "codes", "qdotc").mapInPandas(
         score_batches, "query_id long, cand_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    if refine <= 0:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "cand_id", "cosine")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= refine * k)
-        .select("query_id", "cand_id")
-    )
-    exact = (
-        shortlist.join(v, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(_dot(F.col("query_id_v"), F.col("cand_id_v")), 4).alias(
-                "cosine"
-            ),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "cosine")
-    )
+    return _rank_topk(scored, k, refine, v, q)
 
 
 def semantic_decontaminate(
@@ -1616,19 +1513,19 @@ def semantic_decontaminate(
     Returns (id_col, eval_id, cosine) for flagged corpus rows only.
     """
     spark = corpus.sparkSession
-    for side, sdf in (("eval", eval_df), ("corpus", corpus)):
-        id_type = dict(sdf.dtypes).get(id_col)
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"semantic_decontaminate requires an integral {side} id "
-                f"column; {id_col!r} is {id_type!r}"
-            )
-    erows = eval_df.select(id_col, vec_col).limit(max_eval + 1).collect()
-    if len(erows) > max_eval:
-        raise ValueError(
-            f"semantic_decontaminate eval side exceeds max_eval={max_eval}; "
-            "shard the eval set or raise the cap explicitly"
-        )
+    _require_integral(
+        "semantic_decontaminate requires an integral {side} id column; "
+        "{col!r} is {dtype!r}",
+        (eval_df, id_col, "eval"),
+        (corpus, id_col, "corpus"),
+    )
+    erows = _collect_capped(
+        eval_df.select(id_col, vec_col),
+        max_eval,
+        "semantic_decontaminate eval side",
+        "max_eval",
+        "shard the eval set or raise the cap explicitly",
+    )
     out_schema = f"{id_col} long, eval_id long, cosine double"
     if not erows:
         return spark.createDataFrame([], out_schema)
@@ -1786,9 +1683,9 @@ def _knn_vote(
     caller: str,
 ):
     """Shared kNN majority-vote builder for knn_label_purity /
-    label_error_candidates: returns (pred, votes-kept) — per query_id
-    the winning neighbor label with its vote count — or None when the
-    input is empty.  See knn_label_purity for the quantization /
+    label_error_candidates: returns (query_id, label, pred_label,
+    votes) — per vector its own label and the winning neighbor label
+    with its vote count — or None when the input is empty.  See knn_label_purity for the quantization /
     determinism / scale contract; this helper IS that contract, the
     public functions are rollups over it."""
     if k < 1:
@@ -1805,16 +1702,13 @@ def _knn_vote(
         out = np.floor(mat * 127.0 / safe)
         return np.where(mx == 0, 0.0, out)
 
-    rows = (
-        vectors.select(id_col, vec_col, label_col)
-        .limit(max_vectors + 1)
-        .collect()
+    rows = _collect_capped(
+        vectors.select(id_col, vec_col, label_col),
+        max_vectors,
+        caller,
+        "max_vectors",
+        "use the IVF/LSH tiers for larger corpora",
     )
-    if len(rows) > max_vectors:
-        raise ValueError(
-            f"{caller} exceeds max_vectors={max_vectors}; "
-            "use the IVF/LSH tiers for larger corpora"
-        )
     if not rows:
         return None
     q_ids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -1897,7 +1791,7 @@ def _knn_vote(
     w_vote = Window.partitionBy("query_id").orderBy(
         F.col("votes").desc(), F.col("cand_label")
     )
-    return (
+    pred = (
         votes.withColumn("vr", F.row_number().over(w_vote))
         .filter(F.col("vr") == 1)
         .select(
@@ -1906,6 +1800,11 @@ def _knn_vote(
             F.col("votes").cast("long").alias("votes"),
         )
     )
+    own = vectors.select(
+        F.col(id_col).alias("query_id"),
+        F.col(label_col).cast("int").alias("label"),
+    )
+    return own.join(pred, "query_id")
 
 
 def knn_label_purity(
@@ -1949,13 +1848,8 @@ def knn_label_purity(
         return vectors.sparkSession.createDataFrame(
             [], "label int, n bigint, n_correct bigint, purity_ppm bigint"
         )
-    own = vectors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).cast("int").alias("label"),
-    )
     return (
-        own.join(pred, "query_id")
-        .groupBy("label")
+        pred.groupBy("label")
         .agg(
             F.count("*").alias("n"),
             F.sum(
@@ -2006,13 +1900,8 @@ def label_error_candidates(
             [],
             f"{id_col} long, {label_col} int, pred_label int, votes bigint",
         )
-    own = vectors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).cast("int").alias("label"),
-    )
     return (
-        own.join(pred, "query_id")
-        .filter(
+        pred.filter(
             (F.col("pred_label") != F.col("label"))
             & (F.col("votes") >= min_votes)
         )

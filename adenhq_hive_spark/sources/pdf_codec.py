@@ -340,10 +340,6 @@ def _literal_bytes(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_literal(raw: bytes) -> str:
-    return _literal_bytes(raw).decode("latin-1")
-
-
 def _tokenize_strings(segment: bytes):
     """Yield (kind, value) for string/hex-string/name/operator tokens in
     a content-stream slice. String values are RAW bytes — the caller

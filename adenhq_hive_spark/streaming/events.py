@@ -15,7 +15,8 @@ Mapping from the reference runtime (SURVEY §2.9):
   ``running_user_state``: per-key state via applyInPandasWithState,
   checkpointed by the engine.
 - OutcomeAggregator progress rollups (outcome_aggregator.py:59-311) →
-  ``foreach_batch_parquet``: exactly-once-ish batch sink.
+  ``foreach_batch_parquet``: epoch-partitioned batch sink, idempotent
+  under foreachBatch's at-least-once replay.
 
 Batch/stream parity: every windowed operator here has a batch image in
 the declared query set (q56/q57/q58) — tests assert the streaming results
@@ -194,19 +195,28 @@ def running_user_state(stream: DataFrame) -> DataFrame:
     )
 
 
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write one foreachBatch micro-batch as the ``epoch_id=N`` partition
+    of the parquet dataset at ``path``. foreachBatch is at-least-once;
+    with dynamic partition overwrite a replayed epoch REPLACES its own
+    partition instead of appending a second copy of every row."""
+    (
+        df.withColumn("epoch_id", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(path)
+    )
+
+
 def foreach_batch_parquet(stream: DataFrame, out_dir: str):
-    """Exactly-once-ish sink: append each micro-batch to parquet with the
-    epoch id recorded (foreachBatch; OutcomeAggregator write-through
-    image)."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    return stream.writeStream.foreachBatch(write)
+    """Exactly-once sink: each micro-batch lands in parquet as its own
+    ``epoch_id`` partition (:func:`_write_epoch`), so a replayed epoch
+    replaces rather than duplicates its rows (foreachBatch;
+    OutcomeAggregator write-through image)."""
+    return stream.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: _write_epoch(batch_df, epoch_id, out_dir)
+    )
 
 
 def run_to_completion(
@@ -516,14 +526,7 @@ def decontaminate_stream(
             .select(id_col)
             .distinct()
         )
-        (
-            batch_df.join(bad, id_col, "left_anti")
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
+        _write_epoch(batch_df.join(bad, id_col, "left_anti"), epoch_id, out_dir)
 
     return doc_stream.writeStream.foreachBatch(write)
 
@@ -554,8 +557,7 @@ def contract_gate_stream(
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         report = validate_contract(batch_df, rules).collect()
         ok = all(r.ok for r in report)
-        target = out_dir if ok else quarantine_dir
-        out = batch_df.withColumn("epoch_id", F.lit(epoch_id))
+        out = batch_df
         if not ok:
             out = out.withColumn(
                 "contract_report",
@@ -563,12 +565,7 @@ def contract_gate_stream(
                     {r.rule: r.n_violations for r in report if not r.ok}
                 )),
             )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(target)
-        )
+        _write_epoch(out, epoch_id, out_dir if ok else quarantine_dir)
 
     return stream.writeStream.foreachBatch(write)
 
@@ -604,13 +601,10 @@ def postings_maintain_stream(
     from ..operators.dedup import build_shingle_postings
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            build_shingle_postings(batch_df, text_col, id_col, k)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(index_dir)
+        _write_epoch(
+            build_shingle_postings(batch_df, text_col, id_col, k),
+            epoch_id,
+            index_dir,
         )
 
     return doc_stream.writeStream.foreachBatch(write)
@@ -843,20 +837,11 @@ def span_scrub_stream(
         clean = scrub_spans(
             batch_df, spans, text_col, id_col, carry_cols=carry
         )
-        (
-            clean.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
-        (
-            build_gram_postings(batch_df, text_col, id_col, k)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(index_dir)
+        _write_epoch(clean, epoch_id, out_dir)
+        _write_epoch(
+            build_gram_postings(batch_df, text_col, id_col, k),
+            epoch_id,
+            index_dir,
         )
 
     return doc_stream.writeStream.foreachBatch(write)

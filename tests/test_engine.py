@@ -445,6 +445,47 @@ def test_page_readers_clamp_negative_limit_and_offset(spark, files, tmp_path,
             spark, files[reader], limit=limit, offset=offset)
     empty = read(-1, -2)
     assert empty["success"] and empty["rows"] == []
+    assert empty["total_rows"] == 5
     first = read(2, -2)
     assert [int(r["k"]) for r in first["rows"]] == [0, 1]
     assert first["total_rows"] == 5
+    # the short last page, a page past the end, and one covering it all
+    for limit, offset, keys in ((10, 3, [3, 4]), (2, 7, []),
+                                (9, 0, [0, 1, 2, 3, 4])):
+        page = read(limit, offset)
+        assert [int(r["k"]) for r in page["rows"]] == keys
+        assert page["total_rows"] == 5
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("limit, offset, counted, has_more", [
+    (10, 0, False, False),  # the slice reaches the end: its total is exact
+    (10, 3, False, False),
+    (2, 0, True, True),     # a full page cannot tell what follows it
+    (2, 7, True, False),    # nor can an empty page past the end
+])
+def test_read_page_counts_only_when_the_slice_cannot_tell_the_total(
+        spark, tmp_path, limit, offset, counted, has_more):
+    """One job (the slice) when the page ends the data; the slice plus
+    ``df.count()``'s jobs otherwise."""
+    from adenhq_hive_spark.engine import read_page
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(_K).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    _, count_jobs = _jobs_in_group(spark, f"count-{limit}-{offset}", df.count)
+    (page, cursor), jobs = _jobs_in_group(
+        spark, f"page-{limit}-{offset}", lambda: read_page(df, limit, offset))
+    assert jobs == 1 + (count_jobs if counted else 0)
+    assert page["total_rows"] == 5
+    assert page["row_count"] == len(page["rows"])
+    assert cursor == {"offset": offset, "has_more": has_more}

@@ -13,11 +13,13 @@ from adenhq_hive_spark.operators.guard import filter_suspicious, flag_suspicious
 from adenhq_hive_spark.operators.logs import (
     NODE_DETAIL_SCHEMA,
     RUN_SUMMARY_SCHEMA,
+    TOOL_LOG_SCHEMA,
     failure_patterns,
     goal_progress,
     node_performance,
     query_node_details,
     query_runs,
+    query_tool_logs,
 )
 from adenhq_hive_spark.sources.data_tools import DataStore
 
@@ -58,6 +60,26 @@ def test_query_runs_l1(runs):
 def test_query_node_details_l2(details):
     got = query_node_details(details, "r2", needs_attention=True).collect()
     assert [(r.node_id, r.status) for r in got] == [("act", "failed")]
+
+
+def test_query_tool_logs_l3(spark):
+    # steps arrive out of order and interleaved across runs and nodes
+    rows = [
+        ("r1", "act", 3, "search", True, 40),
+        ("r2", "act", 1, "search", False, 90),
+        ("r1", "plan", 2, "read", True, 10),
+        ("r1", "act", 1, "fetch", True, 25),
+        ("r1", "plan", 4, "write", False, 70),
+    ]
+    logs = spark.createDataFrame(rows, TOOL_LOG_SCHEMA)
+    run = query_tool_logs(logs, "r1").collect()
+    assert [(r.step, r.node_id, r.tool) for r in run] == [
+        (1, "act", "fetch"), (2, "plan", "read"),
+        (3, "act", "search"), (4, "plan", "write"),
+    ]
+    node = query_tool_logs(logs, "r1", node_id="act").collect()
+    assert [(r.step, r.tool) for r in node] == [(1, "fetch"), (3, "search")]
+    assert query_tool_logs(logs, "r9").collect() == []
 
 
 def test_node_performance_rollup(details):

@@ -454,16 +454,19 @@ def test_pq_index_incremental_update_matches_rebuild_probe(spark, emb, tmp_path)
     probe see the new vectors exactly as a full encode would (the
     codebooks are identical, so the codes are identical)."""
     from adenhq_hive_spark.operators.similarity import (
+        pq_append_index,
         pq_query_index,
         save_pq_index,
-        update_pq_index,
     )
 
     base = emb.filter(F.col("vec_id") >= 100)
     delta = emb.filter(F.col("vec_id") < 100)
     path = str(tmp_path / "pq_incr")
     save_pq_index(base, path, m=16)
-    update_pq_index(spark, path, delta)
+    assert pq_append_index(spark, path, delta) == delta.count()
+    # a replayed batch appends nothing: its ids are already indexed
+    assert pq_append_index(spark, path, delta) == 0
+    assert spark.read.parquet(f"{path}/codes").count() == emb.count()
 
     # a full index whose codebooks were trained on the same sample: the
     # deterministic TakeOrdered sample of `base` (ids >= 100) differs
@@ -1035,3 +1038,86 @@ def test_semdedup_blocked_gram_block_size_invariant(spark, monkeypatch):
     assert default == tiny
     # sanity: the fixture actually has drops, so the loop ran
     assert any(not r[2] for r in default)
+
+
+# ---- guard contracts of the shared ANN helpers ----------------------------
+
+
+def _double_ids(df):
+    return df.withColumn("vec_id", F.col("vec_id").cast("double"))
+
+
+_ID_GUARD_CALLERS = {
+    "cosine_topk": lambda S, emb, q: S.cosine_topk(emb, q),
+    "hard_negatives": lambda S, emb, q: S.hard_negatives(emb, anchors=q),
+    "pq_cosine_topk": lambda S, emb, q: S.pq_cosine_topk(emb, q),
+    "ivfpq_cosine_topk": lambda S, emb, q: S.ivfpq_cosine_topk(emb, q),
+    "semantic_decontaminate":
+        lambda S, emb, q: S.semantic_decontaminate(emb, q),
+}
+
+
+@pytest.mark.parametrize("who", sorted(_ID_GUARD_CALLERS))
+def test_ann_id_guard_rejects_non_integral_ids(emb, who):
+    """Every broadcast-side caller refuses a double id column, and the
+    message names the caller, the column and its type."""
+    from adenhq_hive_spark.operators import similarity as S
+
+    q = _double_ids(emb.filter(F.col("vec_id") < 5))
+    with pytest.raises(
+        ValueError, match=rf"^{who} requires .*integral .*'vec_id'.*'double'"
+    ):
+        _ID_GUARD_CALLERS[who](S, emb, q)
+
+
+@pytest.mark.parametrize("dtype", ["tinyint", "smallint", "int", "bigint"])
+def test_ann_id_guard_accepts_every_integral_type(emb, dtype):
+    from adenhq_hive_spark.operators.similarity import _require_integral
+
+    ids = emb.withColumn("vec_id", F.col("vec_id").cast(dtype))
+    _require_integral("{col!r} is {dtype!r}", (ids, "vec_id", "queries"))
+    with pytest.raises(ValueError, match=r"^queries 'vec_id' is 'double'$"):
+        _require_integral(
+            "{side} {col!r} is {dtype!r}",
+            (ids, "vec_id", "queries"),
+            (_double_ids(emb), "vec_id", "queries"),
+        )
+
+
+# (caller, cap keyword, call with that cap, rows on the capped side)
+_CAP_CALLERS = {
+    "cosine_topk query side": (
+        "max_queries",
+        lambda S, emb, q, cap: S.cosine_topk(emb, q, max_queries=cap), 5),
+    "hard_negatives anchor side": (
+        "max_anchors",
+        lambda S, emb, q, cap: S.hard_negatives(
+            emb, anchors=q, max_anchors=cap), 5),
+    "pq_cosine_topk query side": (
+        "max_queries",
+        lambda S, emb, q, cap: S.pq_cosine_topk(emb, q, max_queries=cap), 5),
+    "semantic_decontaminate eval side": (
+        "max_eval",
+        lambda S, emb, q, cap: S.semantic_decontaminate(
+            emb, q, max_eval=cap), 5),
+    "knn_label_purity": (
+        "max_vectors",
+        lambda S, emb, q, cap: S.knn_label_purity(emb, max_vectors=cap),
+        None),
+}
+
+
+@pytest.mark.parametrize("who", sorted(_CAP_CALLERS))
+def test_ann_driver_cap_raises_one_row_past_the_cap(emb, who):
+    """Each driver-capped collect accepts exactly ``cap`` rows and raises
+    at ``cap + 1``, naming its caller and cap."""
+    from adenhq_hive_spark.operators import similarity as S
+
+    cap_name, call, n = _CAP_CALLERS[who]
+    q = emb.filter(F.col("vec_id") < 5)
+    n = n if n is not None else emb.count()
+    call(S, emb, q, n)  # at the cap: no error
+    with pytest.raises(
+        ValueError, match=rf"^{who} exceeds {cap_name}={n - 1}; \S"
+    ):
+        call(S, emb, q, n - 1)

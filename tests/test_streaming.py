@@ -172,6 +172,47 @@ def test_foreach_batch_sink_and_resume(spark, stream, tmp_path):
     assert spark.read.parquet(out).count() == n1
 
 
+def test_foreach_batch_sink_replayed_epoch_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: an epoch whose commit never landed
+    runs again on restart with the same epoch id. Dropping the last
+    commit and restarting must leave the row count unchanged."""
+    import os
+
+    import pandas as pd_
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for j in range(2):
+        pd_.DataFrame(
+            {"k": range(j * 10, (j + 1) * 10)}
+        ).to_parquet(str(src / f"p{j}.parquet"))
+        os.utime(str(src / f"p{j}.parquet"), (1_000_000 * (j + 1),) * 2)
+    out, ck = str(tmp_path / "sink"), tmp_path / "ck"
+
+    def run():
+        stream = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = foreach_batch_parquet(stream, out).option(
+            "checkpointLocation", str(ck)
+        ).start()
+        q.processAllAvailable()
+        q.stop()
+
+    run()
+    assert spark.read.parquet(out).count() == 20
+    last = max(int(f) for f in os.listdir(ck / "commits") if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if (ck / "commits" / f).exists():
+            (ck / "commits" / f).unlink()
+    run()
+    written = spark.read.parquet(out)
+    assert written.count() == 20
+    assert sorted(r.k for r in written.collect()) == list(range(20))
+
+
 def test_processing_time_trigger_cadence(spark, stream, tmp_path):
     # timer/cron entry-point image (agent_runtime.py:382-516): a
     # processing-time trigger drains the available input on a cadence

@@ -34,6 +34,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sketch import _hash32
+
 # Redaction patterns: RE2-compatible (no lookaround/backrefs) so the exact
 # same pattern string runs on Spark (java.util.regex) and DuckDB (RE2) —
 # the oracle contract depends on this.
@@ -760,38 +762,6 @@ def dsir_score(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    shard_hex_chars: int = 1,
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the corpus as reproducibly-shuffled training shards.
-
-    Routing and within-shard order come from :func:`shuffle_shard`
-    (md5-deterministic), so re-running the pipeline rewrites identical
-    shards — the property checkpoint-resumable training loaders need.
-    Layout: one ``shard_id=N`` directory per shard (16**k total), rows
-    carrying their ``pos`` address; a loader reads one shard directory
-    and sorts by ``pos`` — shard-local work, never a global order.
-
-    Physical shape: ONE hash shuffle (repartition by shard) with a
-    shard-local sort, then a partitioned write — each shard lands as a
-    single sorted file per task. The join back to the payload stays
-    co-partitioned on ``id_col``.
-    """
-    address = shuffle_shard(df, shard_hex_chars, id_col=id_col)
-    out = address.join(df, id_col)
-    (
-        out.repartition("shard_id")
-        .sortWithinPartitions("pos")
-        .write.mode(mode)
-        .partitionBy("shard_id")
-        .parquet(path)
-    )
-
-
 def pack_efficiency(
     df: DataFrame,
     context_lengths: list[int] | None = None,
@@ -883,9 +853,7 @@ def quality_weighted_sample(
     from .text import quality_score as _quality
 
     scored = _quality(df, text_col=text_col)
-    h32 = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    h32 = _hash32(F.col(id_col).cast("string"))
     qs10 = F.round(F.col("quality_score") * 10).cast("bigint")
     return (
         scored.select(
@@ -894,45 +862,6 @@ def quality_weighted_sample(
             (h32 * 10 < qs10 * F.lit(4294967296)).alias("kept"),
         )
         .orderBy(id_col)
-    )
-
-
-def shard_manifest(
-    spark,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Integrity manifest for a :func:`write_training_shards` export:
-    one row per shard with row count, the id range, and an
-    ORDER-INSENSITIVE content checksum (bit-XOR of per-row
-    xxhash64(id, pos, md5(text))) — the artifact a training loader
-    checks before trusting a shard, and the cheap diff key for
-    re-validating a re-export (identical corpus => identical manifest,
-    by the rewrite-identical shard contract).
-
-    XOR aggregation makes the checksum independent of read order and
-    partitioning — no sort is needed to verify a shard, only a scan.
-    Computed distributed per shard partition; the manifest is
-    shard-count-sized.
-
-    Output: (shard_id, n_rows, min_pos, max_pos, min_id, max_id,
-    checksum), ordered by shard_id.
-    """
-    rows = spark.read.parquet(path)
-    return (
-        rows.groupBy("shard_id")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("pos").alias("min_pos"),
-            F.max("pos").alias("max_pos"),
-            F.min(id_col).alias("min_id"),
-            F.max(id_col).alias("max_id"),
-            # true aggregate (map-side partial XOR), never an array
-            F.expr(f"bit_xor(xxhash64({id_col}, pos, md5({text_col})))")
-            .alias("checksum"),
-        )
-        .orderBy("shard_id")
     )
 
 
@@ -1344,56 +1273,6 @@ def dataset_card(
     )
 
 
-def verify_shards(
-    spark,
-    path: str,
-    expected_manifest: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Close the shard-integrity loop: recompute :func:`shard_manifest`
-    over the export on disk and diff it against the expected manifest
-    (the one written at export time).  One row per shard in either
-    manifest with a ``status``:
-
-    - ``ok``        — all fields match;
-    - ``corrupt``   — shard exists on both sides but any of count /
-      ranges / checksum differs (a flipped row, truncated file, or
-      reordered+rewritten content);
-    - ``missing``   — in the expected manifest, absent on disk;
-    - ``unexpected``— on disk, absent from the expected manifest.
-
-    Full-outer join on shard_id, manifest-sized — the check is a scan
-    of the export (the XOR checksum needs no sort) plus a tiny join.
-    """
-    actual = shard_manifest(spark, path, id_col=id_col, text_col=text_col)
-    fields = ["n_rows", "min_pos", "max_pos", "min_id", "max_id", "checksum"]
-    e = expected_manifest.select(
-        "shard_id", *[F.col(c).alias(f"e_{c}") for c in fields]
-    )
-    a = actual.select(
-        "shard_id", *[F.col(c).alias(f"a_{c}") for c in fields]
-    )
-    same = None
-    for c in fields:
-        eq = F.col(f"e_{c}").eqNullSafe(F.col(f"a_{c}"))
-        same = eq if same is None else (same & eq)
-    return (
-        e.join(a, "shard_id", "full")
-        .select(
-            "shard_id",
-            F.when(F.col("e_n_rows").isNull(), "unexpected")
-            .when(F.col("a_n_rows").isNull(), "missing")
-            .when(same, "ok")
-            .otherwise("corrupt")
-            .alias("status"),
-            F.col("e_n_rows").alias("expected_rows"),
-            F.col("a_n_rows").alias("actual_rows"),
-        )
-        .orderBy("shard_id")
-    )
-
-
 def pack_ffd(
     df: DataFrame,
     max_tokens: int,
@@ -1429,9 +1308,7 @@ def pack_ffd(
         F.col(id_col).alias("id"),
         ws_token_count(F.col(text_col)).cast("long").alias("n_tokens"),
         F.pmod(
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                   16, 10).cast("long"),
-            F.lit(n_shards),
+            _hash32(F.col(id_col).cast("string")), F.lit(n_shards)
         ).cast("int").alias("shard"),
     )
 

@@ -14,7 +14,11 @@ Design contract:
 - The manifest is computable WITHOUT writing (``shard_manifest`` — the
   oracle-checkable surface) and recomputable FROM the written files
   (``verify_shards``), so corruption or a partial write is detected by
-  comparing two independently-derived manifests.
+  comparing two independently-derived manifests.  Both sides run the
+  same aggregate (``_shard_aggregate``) over different inputs, and the
+  batch and streaming exports share one writer (``_write_export``).
+- This is the package's only shard-export path; curation.shuffle_shard
+  computes training-order addresses and writes nothing.
 - The content checksum is an order-independent SUM of per-row 32-bit
   md5 slices mod 2^32 — commutative, so shard-internal row order
   (which Spark does not guarantee) cannot flap it, and both engines
@@ -28,53 +32,42 @@ Design contract:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .sketch import _hash32
 
 _M32 = 1 << 32
 
 
-def _shard_col(id_col: str, n_shards: int) -> F.Column:
-    return (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % n_shards
-    ).alias("shard")
+def _shard_col(id_col: str, n_shards: int) -> Column:
+    # checked here, before any job: the writer calls this first
+    if n_shards < 1:
+        raise ValueError("n_shards must be >= 1")
+    return (_hash32(F.col(id_col).cast("string")) % n_shards).alias("shard")
 
 
-def _row_crc(text_col: str) -> F.Column:
-    """32-bit md5 slice of the row CONTENT (not the id), summed mod 2^32
-    by the manifest — flags content corruption even when ids survive."""
-    return F.conv(
-        F.substring(F.md5(F.col(text_col)), 1, 8), 16, 10
-    ).cast("long")
-
-
-def shard_manifest(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 8,
+def _shard_aggregate(
+    df: DataFrame, shard: Column, text_col: str
 ) -> DataFrame:
-    """Per-shard manifest WITHOUT writing: (shard, n_docs, n_tokens,
-    content_crc32) ordered by shard — the oracle-checkable image of
-    what :func:`write_shards` materializes.
+    """(shard, n_docs, n_tokens, content_crc32) per ``shard`` value —
+    the ONE per-shard aggregate, computed from the corpus by
+    :func:`shard_manifest` and from the written files by
+    :func:`verify_shards`, so the two sides cannot drift apart.
 
     n_tokens is the whitespace token count (the pl_tokens contract);
     content_crc32 = SUM of per-row 32-bit md5 content slices mod 2^32.
-    Scale: one map-only projection + one n_shards-key aggregation.
     """
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
     rows = df.select(
-        _shard_col(id_col, n_shards),
+        shard,
         F.size(
             F.filter(
                 F.split(F.col(text_col), r"\s+"), lambda t: t != ""
             )
         ).cast("long").alias("_toks"),
-        _row_crc(text_col).alias("_crc"),
+        # the row CONTENT's slice, not the id's: a tampered text whose
+        # id survives still moves the shard's checksum
+        _hash32(F.col(text_col)).alias("_crc"),
     )
     return (
         rows.groupBy("shard")
@@ -91,8 +84,54 @@ def shard_manifest(
             F.col("n_tokens").cast("long").alias("n_tokens"),
             F.col("content_crc32").cast("long").alias("content_crc32"),
         )
-        .orderBy("shard")
     )
+
+
+def shard_manifest(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_shards: int = 8,
+) -> DataFrame:
+    """Per-shard manifest WITHOUT writing: (shard, n_docs, n_tokens,
+    content_crc32) ordered by shard — the oracle-checkable image of
+    what :func:`write_shards` materializes.
+
+    Scale: one map-only projection + one n_shards-key aggregation.
+    """
+    return _shard_aggregate(
+        df, _shard_col(id_col, n_shards), text_col
+    ).orderBy("shard")
+
+
+def _write_export(
+    df: DataFrame,
+    data_path: str,
+    manifest_path: str,
+    id_col: str,
+    text_col: str,
+    n_shards: int,
+) -> DataFrame:
+    """The ONE shard writer: ``shard=N/`` parquet partitions of
+    (id_col, text_col) under ``data_path`` and the manifest of ``df``
+    under ``manifest_path``; returns the manifest.
+
+    partitionBy(shard) gives one directory per shard — the layout a
+    training loader shards workers over — and repartition(shard) keeps
+    it to one task's files per shard directory.
+    """
+    shards = df.select(
+        _shard_col(id_col, n_shards), F.col(id_col), F.col(text_col)
+    )
+    (
+        shards.repartition(n_shards, "shard")
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(data_path)
+    )
+    manifest = shard_manifest(df, id_col, text_col, n_shards)
+    manifest.write.mode("overwrite").parquet(manifest_path)
+    return manifest
 
 
 def write_shards(
@@ -102,28 +141,20 @@ def write_shards(
     text_col: str = "text",
     n_shards: int = 8,
 ) -> DataFrame:
-    """Write the corpus as ``shard=N/`` parquet partitions plus a
+    """Write the corpus as ``data/shard=N/`` parquet partitions plus a
     ``_manifest`` parquet next to them; returns the manifest.
 
-    partitionBy(shard) gives one directory per shard — the layout a
-    training loader shards workers over — and repartition(shard) keeps
-    it to one task's files per shard directory.  The manifest is
-    computed from the SAME DataFrame in the same job graph, so a
-    divergence found later by :func:`verify_shards` isolates the fault
-    to storage, not the export.
+    The manifest is a SECOND pass over ``df``, run after the write job
+    (not the same job graph), so it describes the written files only if
+    ``df`` is deterministic: recomputing it must yield the same rows
+    (no rand(), no nondeterministic source, no limit over an unordered
+    input — cache or checkpoint such a ``df`` first).  Under that
+    condition a divergence found later by :func:`verify_shards`
+    isolates the fault to storage, not the export.
     """
-    shards = df.select(
-        _shard_col(id_col, n_shards), F.col(id_col), F.col(text_col)
+    return _write_export(
+        df, f"{path}/data", f"{path}/_manifest", id_col, text_col, n_shards
     )
-    (
-        shards.repartition(n_shards, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(f"{path}/data")
-    )
-    manifest = shard_manifest(df, id_col, text_col, n_shards)
-    manifest.write.mode("overwrite").parquet(f"{path}/_manifest")
-    return manifest
 
 
 def write_shards_stream(
@@ -133,8 +164,10 @@ def write_shards_stream(
     text_col: str = "text",
     n_shards: int = 8,
 ):
-    """Streaming shard export: ``foreachBatch`` writes each micro-batch
-    into the SAME shard layout as :func:`write_shards` plus a per-epoch
+    """Streaming shard export (reference layer 4, sources and sinks:
+    the streaming twin of the data_tools save_data sink):
+    ``foreachBatch`` writes each micro-batch through the same writer as
+    :func:`write_shards`, into the same shard layout, plus a per-epoch
     manifest DELTA; :func:`finalize_manifest` folds the deltas into the
     ``_manifest`` that :func:`verify_shards` checks.  Returns the
     writeStream builder (caller sets checkpointLocation and starts).
@@ -158,28 +191,21 @@ def write_shards_stream(
     """
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        shards = batch_df.select(
-            _shard_col(id_col, n_shards),
-            F.col(id_col), F.col(text_col),
-        )
-        (
-            shards.repartition(n_shards, "shard")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{path}/data/epoch={epoch_id}")
-        )
-        (
-            shard_manifest(batch_df, id_col, text_col, n_shards)
-            .write.mode("overwrite")
-            .parquet(f"{path}/_manifest_deltas/epoch={epoch_id}")
+        _write_export(
+            batch_df,
+            f"{path}/data/epoch={epoch_id}",
+            f"{path}/_manifest_deltas/epoch={epoch_id}",
+            id_col, text_col, n_shards,
         )
 
     return doc_stream.writeStream.foreachBatch(write)
 
 
 def finalize_manifest(spark, path: str) -> DataFrame:
-    """Fold the per-epoch manifest deltas into ``_manifest`` (the file
-    :func:`verify_shards` compares against) and return it.  n_docs and
+    """Close a :func:`write_shards_stream` export (reference layer 4,
+    sources and sinks): fold the per-epoch manifest deltas into
+    ``_manifest`` (the file :func:`verify_shards` compares against) and
+    return it.  n_docs and
     n_tokens sum; content_crc32 folds as SUM mod 2^32 (modular sums
     compose).  DECIMAL(38,0) accumulators, same overflow discipline as
     the per-shard sums."""
@@ -209,24 +235,13 @@ def verify_shards(spark, path: str, text_col: str = "text") -> DataFrame:
     missing shard, a lost row, or a flipped byte in ``text_col`` shows
     up as ok = false (or a NULL side on a wholly missing shard)."""
     data = spark.read.parquet(f"{path}/data")
-    actual = (
-        data.select(
-            F.col("shard").cast("long").alias("shard"),
-            F.size(
-                F.filter(
-                    F.split(F.col(text_col), r"\s+"), lambda t: t != ""
-                )
-            ).cast("long").alias("_toks"),
-            _row_crc(text_col).alias("_crc"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("a_docs"),
-            F.sum("_toks").alias("a_tokens"),
-            (
-                F.sum(F.col("_crc").cast("decimal(38,0)")) % F.lit(_M32)
-            ).cast("long").alias("a_crc"),
-        )
+    actual = _shard_aggregate(
+        data, F.col("shard").cast("long").alias("shard"), text_col
+    ).select(
+        "shard",
+        F.col("n_docs").alias("a_docs"),
+        F.col("n_tokens").alias("a_tokens"),
+        F.col("content_crc32").alias("a_crc"),
     )
     stored = spark.read.parquet(f"{path}/_manifest")
     return (

@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sketch import _hash32
+
 
 def k_anonymity(
     df: DataFrame,
@@ -114,11 +116,7 @@ def dp_counts(
             for c in group_cols
         ]
     )
-    u6 = (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-        % 1999999
-        - 999999
-    )
+    u6 = _hash32(key) % 1999999 - 999999
     u = u6.cast("double") / 1e6
     b = 1.0 / epsilon
     noise = -F.lit(b) * F.signum(u) * F.log(F.lit(1.0) - F.abs(u))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sketch import _hash32
+
 
 def _trigrams_of(text: str) -> list[str]:
     return sorted({text[i : i + 3] for i in range(len(text) - 2)})
@@ -569,12 +571,9 @@ def winnow_fingerprints(
     )
     hashed = pos.select(
         id_col, "i",
-        F.conv(
-            F.substring(
-                F.md5(F.substring(F.col("_lt"), F.col("i").cast("int"), k)),
-                1, 8,
-            ), 16, 10,
-        ).cast("long").alias("_hh"),
+        _hash32(
+            F.substring(F.col("_lt"), F.col("i").cast("int"), k)
+        ).alias("_hh"),
         (F.length("_lt") - k + 1).alias("_n"),
     )
     wspec = Window.partitionBy(id_col).orderBy("i").rowsBetween(0, w - 1)

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1124,11 +1125,11 @@ def pq_staleness(
     share_threshold). Distributed: one Arrow-batch encode pass reused
     by all three signals; the driver never sees vectors.
     """
+    books = _read_books(spark, path)
     meta = spark.read.parquet(f"{path}/meta").collect()
     if not meta:
         raise ValueError(f"no PQ meta at {path}/meta")
     train_qerr = float(meta[0]["train_qerr"])
-    books = _read_books(spark, path)
     v = _materialize(_unit_vectors(new_vectors, id_col, vec_col, "cand_id"))
     # Empty delta: every signal below is an average over zero rows (and
     # dup/share divide by n_delta=0) — the row would read NULL and a
@@ -1175,8 +1176,17 @@ def pq_staleness(
 
 def _read_books(spark, path: str) -> np.ndarray:
     """The codebooks of the PQ index at ``path`` (``<path>/books``, one
-    (j, c, vals) row per centroid) as one (m, n_codes, dsub) array."""
-    brows = spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
+    (j, c, vals) row per centroid) as one (m, n_codes, dsub) array.  A
+    path that was never built reads like an empty one: the ValueError
+    callers catch to trigger a first build."""
+    try:
+        brows = (
+            spark.read.parquet(f"{path}/books").orderBy("j", "c").collect()
+        )
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        brows = []
     if not brows:
         raise ValueError(f"no PQ codebooks at {path}/books")
     books = np.empty(

@@ -48,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sketch import _hash32
+
 # Inverse-CDF thresholds for Poisson(1) on a uniform integer in
 # [0, 1e6): weight w is the first index whose cumulative floor exceeds
 # the draw.  floor(1e6 * cum_pmf) — keep in sync with the oracle CASE
@@ -887,20 +889,9 @@ def srm_check(
         )
     else:
         arm = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col(unit_col).cast("string"),
-                            F.lit("#" + salt),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            _hash32(
+                F.concat(F.col(unit_col).cast("string"), F.lit("#" + salt))
+            )
             % 2
         )
     from ..catalog import spread_small_scan

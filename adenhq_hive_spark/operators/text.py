@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sketch import _hash32
+
 # Tiny per-language marker lexicons (order matters: first max wins ties via
 # the greatest() + CASE cascade below, so keep a fixed order).
 LANG_MARKERS: dict[str, list[str]] = {
@@ -1051,10 +1053,7 @@ def feature_hash(
         )
         .withColumn(
             "dim",
-            F.pmod(
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long"),
-                F.lit(dims),
-            ).cast("int"),
+            F.pmod(_hash32(F.col("term")), F.lit(dims)).cast("int"),
         )
     )
     return (

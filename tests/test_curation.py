@@ -468,12 +468,16 @@ def test_shuffle_shard_stable_address_and_contiguous_positions(spark):
     out = shuffle_shard(df, shard_hex_chars=1).collect()
     assert len(out) == 200
     assert {r.doc_id for r in out} == set(range(200))
-    by_shard: dict[int, list[int]] = {}
+    by_shard: dict[int, list[tuple[int, str]]] = {}
     for r in out:
         assert 0 <= r.shard_id < 16
-        by_shard.setdefault(r.shard_id, []).append(r.pos)
-    for positions in by_shard.values():
-        assert sorted(positions) == list(range(1, len(positions) + 1))
+        h = hashlib.md5(str(r.doc_id).encode()).hexdigest()
+        by_shard.setdefault(r.shard_id, []).append((r.pos, h))
+    for rows in by_shard.values():
+        rows.sort()
+        # pos is contiguous from 1 and walks the shard in md5 order
+        assert [p for p, _ in rows] == list(range(1, len(rows) + 1))
+        assert [h for _, h in rows] == sorted(h for _, h in rows)
     # shard routing follows md5(id) — independently recomputable
     for r in out[:20]:
         h = hashlib.md5(str(r.doc_id).encode()).hexdigest()
@@ -543,51 +547,6 @@ def test_dsir_score_stable_under_repartition(spark):
         for r in dsir_score(raw.repartition(13), target).collect()
     }
     assert a == b
-
-
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from adenhq_hive_spark.operators.curation import write_training_shards
-
-    df = (
-        spark.range(0, 120)
-        .withColumnRenamed("id", "doc_id")
-        .withColumn("text", F.concat(F.lit("doc "), F.col("doc_id")))
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(df, out)
-    back = spark.read.parquet(out)
-    assert back.count() == 120
-    assert {r.doc_id for r in back.collect()} == set(range(120))
-    # shard routing is the md5 address; payload survives the join
-    for r in back.limit(30).collect():
-        h = hashlib.md5(str(r.doc_id).encode()).hexdigest()
-        assert int(r.shard_id) == int(h[0], 16)
-        assert r.text == f"doc {r.doc_id}"
-    # reading one shard partition-prunes (scan, not post-filter)
-    one = back.filter(F.col("shard_id") == 3)
-    plan = one._sc._jvm.PythonSQLUtils.explainString(
-        one._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [isnotnull(shard_id" in plan
-    # within a shard, pos is contiguous from 1 and follows md5 order
-    rows = sorted(
-        (r.pos, str(r.doc_id)) for r in back.filter("shard_id = 3").collect()
-    )
-    assert [p for p, _ in rows] == list(range(1, len(rows) + 1))
-    hs = [hashlib.md5(d.encode()).hexdigest() for _, d in rows]
-    assert hs == sorted(hs)
-    # deterministic re-run: writing again yields identical addresses
-    first = {(r.shard_id, r.pos, r.doc_id) for r in back.collect()}
-    write_training_shards(df, out)
-    again = {
-        (r.shard_id, r.pos, r.doc_id)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == first
 
 
 def test_quality_classifier_learns_rule_battery(spark):
@@ -680,42 +639,6 @@ def test_quality_weighted_sample_extremes(spark):
     out = {r.doc_id: r for r in quality_weighted_sample(df).collect()}
     assert all(out[i].kept for i in range(50))
     assert not any(out[100 + i].kept for i in range(50))
-
-
-def test_shard_manifest_validates_and_detects_change(spark, tmp_path):
-    from adenhq_hive_spark.catalog import load_table
-    from adenhq_hive_spark.operators.curation import (
-        shard_manifest,
-        write_training_shards,
-    )
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out)
-    m1 = shard_manifest(spark, out).collect()
-    assert sum(r.n_rows for r in m1) == docs.count()
-    for r in m1:
-        assert (r.min_pos, r.max_pos) == (1, r.n_rows)  # contiguous
-
-    # rewrite-identical export => identical manifest
-    write_training_shards(docs, out)
-    m2 = shard_manifest(spark, out).collect()
-    assert [tuple(r) for r in m1] == [tuple(r) for r in m2]
-
-    # a changed corpus changes the affected shard's checksum
-    changed = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 7, F.lit("tampered")).otherwise(
-            F.col("text")
-        ),
-    )
-    write_training_shards(changed, out)
-    m3 = {r.shard_id: r for r in shard_manifest(spark, out).collect()}
-    base = {r.shard_id: r for r in m1}
-    diff = [s for s in base if m3[s].checksum != base[s].checksum]
-    assert len(diff) == 1                  # exactly doc 7's shard moved
-    assert m3[diff[0]].n_rows == base[diff[0]].n_rows
 
 
 def test_curriculum_order_stages_and_determinism(spark):
@@ -1002,48 +925,6 @@ def test_drop_ledger_kept_set_matches_capstone(spark):
     stages = {r.drop_stage for r in ledger.select("drop_stage").distinct().collect()}
     assert stages <= {"quality", "duplicate", "eval_holdout",
                       "contaminated", "kept"}
-
-
-def test_verify_shards_statuses(spark, tmp_path):
-    import shutil
-
-    from adenhq_hive_spark.catalog import load_table
-    from adenhq_hive_spark.operators.curation import (
-        shard_manifest,
-        verify_shards,
-        write_training_shards,
-    )
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    out = str(tmp_path / "vshards")
-    write_training_shards(docs, out)
-    expected = shard_manifest(spark, out).collect()
-    expected_df = spark.createDataFrame(expected)
-
-    # untouched export: every shard ok
-    v = verify_shards(spark, out, expected_df).collect()
-    assert v and all(r.status == "ok" for r in v)
-
-    # tamper one doc -> exactly that shard goes corrupt, rest stay ok
-    tampered = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 7, F.lit("tampered")).otherwise(
-            F.col("text")
-        ),
-    )
-    write_training_shards(tampered, out)
-    v2 = {r.shard_id: r.status for r in verify_shards(spark, out, expected_df).collect()}
-    assert list(v2.values()).count("corrupt") == 1
-    assert all(s in ("ok", "corrupt") for s in v2.values())
-
-    # delete a shard directory -> missing
-    write_training_shards(docs, out)
-    victim = expected[0].shard_id
-    shutil.rmtree(f"{out}/shard_id={victim}")
-    v3 = {r.shard_id: r.status for r in verify_shards(spark, out, expected_df).collect()}
-    assert v3[victim] == "missing"
-    assert all(s == "ok" for k, s in v3.items() if k != victim)
 
 
 def test_pack_ffd_python_replay_and_invariants(spark):

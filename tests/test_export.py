@@ -3,6 +3,8 @@ assignment, manifest round-trip, and corruption detection."""
 
 from __future__ import annotations
 
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -32,26 +34,90 @@ def test_manifest_partitions_the_corpus_exactly(spark):
     assert m == m2
 
 
-def test_write_verify_roundtrip_and_corruption_detection(spark, tmp_path):
+def _md5_shard(n_shards):
+    """The export's shard address, retyped independently of the code
+    under test: first-8-hex md5 of the id, mod n_shards."""
+    return (
+        F.conv(
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
+        ).cast("long")
+        % n_shards
+    )
+
+
+def _drop_one_row(docs, path):
+    s0 = docs.filter(_md5_shard(4) == 0)
+    victim = s0.agg(F.min("doc_id")).first()[0]
+    s0.filter(F.col("doc_id") != victim).write.mode("overwrite").parquet(
+        f"{path}/data/shard=0"
+    )
+
+
+def _tamper_one_text(docs, path):
+    s0 = docs.filter(_md5_shard(4) == 0)
+    victim = s0.agg(F.min("doc_id")).first()[0]
+    s0.withColumn(
+        "text",
+        F.when(F.col("doc_id") == victim, F.lit("tampered")).otherwise(
+            F.col("text")
+        ),
+    ).write.mode("overwrite").parquet(f"{path}/data/shard=0")
+
+
+def _delete_shard_dir(docs, path):
+    shutil.rmtree(f"{path}/data/shard=0")
+
+
+_CORRUPTIONS = {
+    "row_dropped": _drop_one_row,
+    "text_tampered": _tamper_one_text,
+    "shard_deleted": _delete_shard_dir,
+}
+
+
+@pytest.mark.parametrize("kind", list(_CORRUPTIONS))
+def test_write_verify_roundtrip_and_corruption_detection(
+    spark, tmp_path, kind
+):
     docs = _docs(spark)
     path = str(tmp_path / "shards")
     written = write_shards(docs, path, n_shards=4).collect()
     assert sum(r.n_docs for r in written) == docs.count()
     v = verify_shards(spark, path).collect()
     assert len(v) == 4 and all(r.ok for r in v)
-    # corrupt one shard: rewrite shard=0's data with one doc dropped
-    s0 = spark.read.parquet(f"{path}/data").filter("shard = 0")
-    s0.limit(s0.count() - 1).write.mode("overwrite").parquet(
-        f"{path}/data/shard=0"
+    # the payload survives the export, each row under its md5 address
+    back = spark.read.parquet(f"{path}/data")
+    assert sorted(back.select("doc_id", "text", "shard").collect()) == sorted(
+        docs.select("doc_id", "text", _md5_shard(4).alias("shard")).collect()
     )
-    v2 = {r.shard: r.ok for r in verify_shards(spark, path).collect()}
-    assert v2[0] is False
-    assert all(ok for s, ok in v2.items() if s != 0)
+    # reading one shard partition-prunes (scan, not post-filter)
+    one = back.filter(F.col("shard") == 3)
+    plan = one._sc._jvm.PythonSQLUtils.explainString(
+        one._jdf.queryExecution(), "formatted"
+    )
+    assert "PartitionFilters: [isnotnull(shard" in plan
+
+    # corrupt shard 0 only: every other shard still verifies
+    _CORRUPTIONS[kind](docs, path)
+    v2 = {r.shard: r for r in verify_shards(spark, path).collect()}
+    assert v2[0].ok is False
+    assert all(r.ok for s, r in v2.items() if s != 0)
+    if kind == "text_tampered":
+        assert v2[0].a_docs == v2[0].n_docs
+        assert v2[0].a_crc != v2[0].content_crc32
+    elif kind == "shard_deleted":
+        assert v2[0].a_docs is None
+    else:
+        assert v2[0].a_docs == v2[0].n_docs - 1
 
 
-def test_manifest_rejects_bad_shard_count(spark):
+def test_manifest_rejects_bad_shard_count(spark, tmp_path):
     with pytest.raises(ValueError):
         shard_manifest(_docs(spark), n_shards=0)
+    # the writer refuses before it writes anything
+    with pytest.raises(ValueError, match="n_shards must be >= 1"):
+        write_shards(_docs(spark), str(tmp_path / "out"), n_shards=0)
+    assert not (tmp_path / "out").exists()
 
 
 def test_shard_assignment_is_row_pure(spark):
@@ -61,17 +127,7 @@ def test_shard_assignment_is_row_pure(spark):
     full = {
         r.doc_id: r.shard
         for r in docs.select(
-            "doc_id",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("doc_id").cast("string")), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 8
-            ).alias("shard"),
+            "doc_id", _md5_shard(8).alias("shard")
         ).collect()
     }
     half = docs.filter("doc_id % 2 = 0")

@@ -478,6 +478,29 @@ def test_pq_index_incremental_update_matches_rebuild_probe(spark, emb, tmp_path)
     assert {r.vec_id for r in delta.collect()} - {0, 1, 2} <= cands
 
 
+_INDEX_READERS = {
+    "pq_append_index": lambda S, spark, path, v: S.pq_append_index(
+        spark, path, v
+    ),
+    "pq_query_index": lambda S, spark, path, v: S.pq_query_index(
+        spark, path, v
+    ),
+    "pq_staleness": lambda S, spark, path, v: S.pq_staleness(spark, path, v),
+}
+
+
+@pytest.mark.parametrize("who", sorted(_INDEX_READERS))
+def test_pq_index_never_built_raises_no_codebooks(spark, emb, tmp_path, who):
+    """A path with no index yet raises the same ValueError as an empty
+    codebook directory — the signal a caller catches to build the index
+    first — not Spark's PATH_NOT_FOUND AnalysisException."""
+    from adenhq_hive_spark.operators import similarity as S
+
+    path = str(tmp_path / "never_built")
+    with pytest.raises(ValueError, match="^no PQ codebooks at .*/books$"):
+        _INDEX_READERS[who](S, spark, path, emb.limit(3))
+
+
 # ---- IVFPQ composite ------------------------------------------------------
 
 

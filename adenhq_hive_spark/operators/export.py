@@ -55,7 +55,10 @@ def _shard_aggregate(
     :func:`shard_manifest` and from the written files by
     :func:`verify_shards`, so the two sides cannot drift apart.
 
-    n_tokens is the whitespace token count (the pl_tokens contract);
+    n_tokens counts the non-empty pieces of a ``\\s+`` split, a rule of
+    its own: ``text.ws_token_count`` splits on single spaces and
+    ``text.token_counts`` (pl_tokens) keeps the empty piece of a blank
+    text (tests/test_export.py pins all three);
     content_crc32 = SUM of per-row 32-bit md5 content slices mod 2^32.
     """
     rows = df.select(

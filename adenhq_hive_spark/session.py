@@ -9,11 +9,21 @@ enabled for the pandas/UDF path.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
 import re
+import shutil
+import subprocess
+import tempfile
 from collections.abc import Callable
 
+import pyspark
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
 
 # Tuned for the current host at test scale; on a real cluster these are
 # deploy-time settings (shuffle partitions ~ 2-3x total cores, driver/executor
@@ -99,7 +109,24 @@ _DEFAULTS = {
     # of __spark_entry__ may) keeps pyspark's daemon: same results, the
     # re-read stays.
     "spark.python.daemon.module": "adenhq_hive_spark.worker_daemon",
+    # Local files written without a shell (r13, BASELINE.md "Round 13:
+    # fork-free local FS"). Without libhadoop, Hadoop's local filesystem
+    # starts `chmod` for every file, .crc and directory it creates and
+    # `readlink` for the link checks of every FileContext rename: a seed-1
+    # perfbench event_stream run started 526 and 1,440 of them, ~3.7 ms
+    # of CPU each. ForkFreeLocalFs.java sets plain modes in the JVM and
+    # answers a path that is not a symlink without readlink; the checksum
+    # wrappers, checkpoint manager and renames are Hadoop's own. get_spark
+    # compiles it on first use (local_fs_classes) and drops these keys
+    # where it cannot; only the file scheme changes.
+    "spark.hadoop.fs.file.impl": "adenhq_hive_spark.ForkFreeLocalFs$Local",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "adenhq_hive_spark.ForkFreeLocalFs$Fs",
 }
+_LOCAL_FS_KEYS = tuple(k for k in _DEFAULTS if k.startswith("spark.hadoop.fs."))
+_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(__file__), "ForkFreeLocalFs.java")
+# Not under TMPDIR: perfbench points it at a per-run directory, and every
+# run would pay javac's ~4 s of CPU again.
+_LOCAL_FS_BUILD = os.path.join(os.path.dirname(__file__), ".jvm_build")
 
 
 def codegen_compile_counter(spark: SparkSession) -> Callable[[], int]:
@@ -139,6 +166,43 @@ def _offheap_conf() -> dict[str, str]:
     return {"spark.memory.offHeap.enabled": "true", "spark.memory.offHeap.size": value}
 
 
+@functools.cache
+def local_fs_classes() -> str | None:
+    """Class directory of ``ForkFreeLocalFs.java``, compiled with javac
+    against pyspark's jars on first use and cached under a key of the
+    source and the Hadoop jar's name; None, after one warning, where it
+    cannot be built (no javac, no Hadoop jar, a failed compile or an
+    unwritable package directory)."""
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    hadoop = sorted(os.path.basename(j) for j in glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")))
+    with open(_LOCAL_FS_SOURCE, "rb") as fh:
+        key = hashlib.sha256(fh.read() + "\0".join(hadoop).encode()).hexdigest()[:16]
+    out = os.path.join(_LOCAL_FS_BUILD, key)
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    why = "no javac on PATH" if javac is None else f"no Hadoop jar in {jars}"
+    if javac and hadoop:
+        try:
+            os.makedirs(_LOCAL_FS_BUILD, exist_ok=True)
+            tmp = tempfile.mkdtemp(dir=_LOCAL_FS_BUILD)
+            try:
+                subprocess.run([javac, "--release", "17", "-cp", os.path.join(jars, "*"), "-d", tmp,
+                                _LOCAL_FS_SOURCE], check=True, capture_output=True, text=True)
+                os.rename(tmp, out)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+        except subprocess.CalledProcessError as exc:
+            why = f"javac failed: {exc.stderr.strip()}"
+        except OSError as exc:
+            why = str(exc)
+        if os.path.isdir(out):  # built here, or by a concurrent process
+            return out
+    _LOG.warning("local files keep Hadoop's stock filesystem, which starts a chmod "
+                 "or readlink process per file: %s", why)
+    return None
+
+
 def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -149,7 +213,15 @@ def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSes
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = dict(_DEFAULTS)
     conf.update(_offheap_conf())
+    classes = local_fs_classes()
+    if classes is None:
+        for k in _LOCAL_FS_KEYS:
+            del conf[k]
     conf.update(overrides)
+    if classes is not None:
+        # the master is local, so the driver's class path is the executors'
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(
+            p for p in (classes, overrides.get("spark.driver.extraClassPath")) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

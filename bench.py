@@ -404,7 +404,8 @@ STAMP_CONF = (
     "spark.master", "spark.driver.memory", "spark.memory.offHeap.enabled",
     "spark.memory.offHeap.size", "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled", "spark.sql.codegen.cache.maxEntries",
-    "spark.python.daemon.module",
+    "spark.python.daemon.module", "spark.hadoop.fs.file.impl",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl",
 )
 
 

@@ -211,6 +211,7 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
             return {"spark.master": "local[4]",
                     "spark.sql.codegen.cache.maxEntries": "4096",
                     "spark.python.daemon.module": "adenhq_hive_spark.worker_daemon",
+                    "spark.hadoop.fs.file.impl": "adenhq_hive_spark.ForkFreeLocalFs$Local",
                     }.get(key, default)
 
     class Spark:
@@ -221,4 +222,6 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
     assert stamp["spark.master"] == "local[4]"
     assert stamp["spark.sql.codegen.cache.maxEntries"] == "4096"
     assert stamp["spark.python.daemon.module"] == "adenhq_hive_spark.worker_daemon"
+    assert stamp["spark.hadoop.fs.file.impl"] == "adenhq_hive_spark.ForkFreeLocalFs$Local"
+    assert stamp["spark.hadoop.fs.AbstractFileSystem.file.impl"] is None
     assert stamp["spark.memory.offHeap.size"] is None

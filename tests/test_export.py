@@ -9,10 +9,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from adenhq_hive_spark.operators.export import (
+    _shard_aggregate,
     shard_manifest,
     verify_shards,
     write_shards,
 )
+from adenhq_hive_spark.operators.text import token_counts, ws_token_count
 
 SF = "/root/testdata/sf0.001"
 
@@ -139,3 +141,20 @@ def test_shard_assignment_is_row_pure(spark):
                    [r.doc_id for r in half.select("doc_id").collect()])
     got = {r.shard: r.n_docs for r in m_half}
     assert got == dict(want)
+
+
+def test_whitespace_token_rules_differ_on_tabs_newlines_and_blanks(spark):
+    """Three whitespace token counts, each pinned on the texts where they
+    disagree: ws_token_count splits on single spaces, the shard
+    aggregate on \\s+ (both drop empty pieces), and token_counts
+    (pl_tokens) splits the trimmed text on \\s+ and keeps the one empty
+    piece of a blank text. A later unification shows up here first."""
+    texts = ["a\tb", "a\nb", ""]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
+    ws = [r[0] for r in df.orderBy("id").select(ws_token_count("text")).collect()]
+    shard = [r.n_tokens for r in _shard_aggregate(df, F.col("id").alias("shard"), "text")
+             .orderBy("shard").collect()]
+    pl = [r.tok_ws for r in token_counts(df).orderBy("id").collect()]
+    assert ws == [1, 1, 0]
+    assert shard == [2, 2, 0]
+    assert pl == [2, 2, 1]

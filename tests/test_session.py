@@ -1,11 +1,15 @@
 """SPARK_GRAFT_OFFHEAP parsing: off words and zero sizes disable the
 off-heap pool, Spark sizes enable it, anything else fails fast. The
 generated-class cache holds a repeated pool of statements. Python
-workers start through the package's worker daemon."""
+workers start through the package's worker daemon. Local files go
+through the package's fork-free filesystem, and only in get_spark
+sessions."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -90,3 +94,38 @@ def test_python_workers_run_the_package_zip_wrapper(spark):
         assert qualname == "reread_when_changed.<locals>.invalidate_caches"
     else:
         assert qualname == "zipimporter.invalidate_caches"
+
+
+def test_get_spark_resolves_local_files_to_the_package_filesystem(spark):
+    """The file:/// FileSystem, and the local FileContext's filesystem that
+    Spark's checkpoint manager writes through, are the package's."""
+    jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    fc = jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf)
+    assert fs.getClass().getName() == "adenhq_hive_spark.ForkFreeLocalFs$Local"
+    assert fc.getDefaultFileSystem().getClass().getName() == "adenhq_hive_spark.ForkFreeLocalFs$Fs"
+
+
+_PLAIN = r"""
+import __spark_entry__
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[8]").config("spark.driver.memory", "1g")
+         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+print(jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf).getClass().getName(),
+      jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf).getDefaultFileSystem()
+      .getClass().getName())
+"""
+
+
+def test_plain_session_keeps_stock_hadoop():
+    """A session a caller of __spark_entry__ builds itself (the untuned
+    local[8] smoke) keeps the local filesystem pyspark resolves on its
+    own, package imported or not."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run([sys.executable, "-c", _PLAIN], cwd=repo, capture_output=True,
+                          text=True, timeout=300)
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.split()[-2:] == [  # Hive's, from the service entry of pyspark's hive-exec
+        "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem", "org.apache.hadoop.fs.local.LocalFs"]

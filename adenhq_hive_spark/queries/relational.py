@@ -1729,18 +1729,19 @@ Q(QuerySpec(
         "appear with zero counts, the shape dashboards need and plain "
         "GROUP BY cannot produce. Single-form portable; depth bounded "
         "(60) well under the engine recursion limit. SURFACE-COVERAGE "
-        "form only: Spark executes the recursion as ~60 sequential "
-        "micro-plans (measured 27x DuckDB at sf1) — for production use "
-        "the one-job twin pl_calendar_fill (sequence()+explode, same "
-        "oracle, identical rows).",
+        "form only: Spark runs the recursion step by step, 430 "
+        "sequential jobs of 616 stages in all (statusTracker count, the "
+        "same at sf0.001 and sf0.01; measured 27x DuckDB at sf1) — for "
+        "production use the 4-job twin pl_calendar_fill "
+        "(sequence()+explode, same oracle, identical rows).",
     engine_sql=_Q86_SQL,
 ))
 
 Q(QuerySpec(
     name="pl_calendar_fill",
     doc="Scale-path twin of q86: the same gap-filled 60-day order "
-        "calendar via sequence()+explode — ONE job instead of 60 "
-        "recursion micro-plans (27x at sf1, see BASELINE). Shares "
+        "calendar via sequence()+explode — 4 jobs of 6 stages instead "
+        "of q86's 430 jobs of 616 stages (27x at sf1, see BASELINE). Shares "
         "q86's recursive oracle, so the hash row pins the two "
         "formulations equal.",
     engine_sql="""

@@ -405,7 +405,7 @@ STAMP_CONF = (
     "spark.memory.offHeap.size", "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled", "spark.sql.codegen.cache.maxEntries",
     "spark.python.daemon.module", "spark.hadoop.fs.file.impl",
-    "spark.hadoop.fs.AbstractFileSystem.file.impl",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl", "spark.driver.extraJavaOptions",
 )
 
 

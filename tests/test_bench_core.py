@@ -212,6 +212,7 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
                     "spark.sql.codegen.cache.maxEntries": "4096",
                     "spark.python.daemon.module": "adenhq_hive_spark.worker_daemon",
                     "spark.hadoop.fs.file.impl": "adenhq_hive_spark.ForkFreeLocalFs$Local",
+                    "spark.driver.extraJavaOptions": "-Xshare:on -XX:SharedArchiveFile=a.jsa",
                     }.get(key, default)
 
     class Spark:
@@ -224,4 +225,5 @@ def test_conf_stamp_reads_each_key_and_marks_unset_ones_none():
     assert stamp["spark.python.daemon.module"] == "adenhq_hive_spark.worker_daemon"
     assert stamp["spark.hadoop.fs.file.impl"] == "adenhq_hive_spark.ForkFreeLocalFs$Local"
     assert stamp["spark.hadoop.fs.AbstractFileSystem.file.impl"] is None
+    assert stamp["spark.driver.extraJavaOptions"] == "-Xshare:on -XX:SharedArchiveFile=a.jsa"
     assert stamp["spark.memory.offHeap.size"] is None

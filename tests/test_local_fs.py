@@ -11,6 +11,7 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -157,18 +158,19 @@ def test_rename_matches_the_stock_session(hadoop, tmp_path, dst):
 
 
 def test_classes_compile_once_per_source_and_need_javac(monkeypatch, tmp_path, caplog):
-    """The first build compiles into a key directory that later builds
-    reuse without javac; with no javac and nothing built, one warning
-    and no classes (get_spark then drops the fs.*file.impl keys)."""
-    monkeypatch.setattr(session, "_LOCAL_FS_BUILD", str(tmp_path / "build"))
-    built = session.local_fs_classes.__wrapped__()
-    assert os.path.isfile(os.path.join(built, "adenhq_hive_spark", "ForkFreeLocalFs$Raw.class"))
+    """The first build compiles into a keyed jar that later builds reuse
+    without javac; with no javac and nothing built, one warning and no
+    jar (get_spark then drops the fs.*file.impl keys)."""
+    monkeypatch.setattr(session, "_JVM_BUILD", str(tmp_path / "build"))
+    built = session.local_fs_jar.__wrapped__()
+    with zipfile.ZipFile(built) as jar:
+        assert "adenhq_hive_spark/ForkFreeLocalFs$Raw.class" in jar.namelist()
     assert os.listdir(tmp_path / "build") == [os.path.basename(built)]
     monkeypatch.setattr(shutil, "which", lambda *args, **kwargs: None)
-    assert session.local_fs_classes.__wrapped__() == built
-    shutil.rmtree(built)
+    assert session.local_fs_jar.__wrapped__() == built
+    os.remove(built)
     with caplog.at_level(logging.WARNING, logger=session.__name__):
-        assert session.local_fs_classes.__wrapped__() is None
+        assert session.local_fs_jar.__wrapped__() is None
     assert [r.getMessage().rsplit(": ", 1)[1] for r in caplog.records] == [
         "no javac on PATH"]
 

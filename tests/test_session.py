@@ -1,9 +1,10 @@
 """SPARK_GRAFT_OFFHEAP parsing: off words and zero sizes disable the
-off-heap pool, Spark sizes enable it, anything else fails fast. The
+off-heap pool, Spark sizes enable it, anything else fails fast; the core
+count and heap are read when get_spark runs and fail fast too. The
 generated-class cache holds a repeated pool of statements. Python
 workers start through the package's worker daemon. Local files go
-through the package's fork-free filesystem, and only in get_spark
-sessions."""
+through the package's fork-free filesystem, whose jar is on the driver's
+and the executors' class paths, and only in get_spark sessions."""
 
 from __future__ import annotations
 
@@ -17,7 +18,8 @@ from pyspark.sql import functions as F
 
 from adenhq_hive_spark.engine import Engine
 from adenhq_hive_spark.queries import all_queries
-from adenhq_hive_spark.session import _offheap_conf, codegen_compile_counter, get_spark
+from adenhq_hive_spark.session import (_launch_conf, _offheap_conf, codegen_compile_counter,
+                                       get_spark, local_fs_jar)
 
 from .conftest import SF_SMOKE
 
@@ -57,6 +59,40 @@ def test_get_spark_rejects_bad_offheap(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_OFFHEAP", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_OFFHEAP"):
         get_spark("offheap-validation")
+
+
+def test_host_settings_are_read_when_get_spark_runs(monkeypatch):
+    """Set after the package was imported, both still reach the launch."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", " 2G ")
+    master, conf = _launch_conf({})
+    assert master == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    assert conf["spark.driver.memory"] == "2g"
+
+
+@pytest.mark.parametrize("name, value", [
+    *(("SPARK_GRAFT_CPUS", v) for v in ("", "0", "-2", "2.5", "four", "4 cores")),
+    *(("SPARK_GRAFT_DRIVER_MEM", v) for v in ("", "0", "0g", "4 g", "1.5g", "-1g", "lots")),
+])
+def test_get_spark_rejects_bad_host_settings(monkeypatch, name, value):
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=name):
+        get_spark("host-validation")
+
+
+def test_the_fs_jar_leads_both_class_paths(spark):
+    """Executors outside the driver's JVM (local-cluster) load the file:
+    classes too; a caller's entries follow the jar on each key."""
+    jar = local_fs_jar()
+    assert jar.endswith(".jar")
+    _, conf = _launch_conf({})
+    assert conf["spark.driver.extraClassPath"] == conf["spark.executor.extraClassPath"] == jar
+    _, conf = _launch_conf({"spark.driver.extraClassPath": "/d.jar",
+                            "spark.executor.extraClassPath": f"/e.jar{os.pathsep}/f.jar"})
+    assert conf["spark.driver.extraClassPath"] == os.pathsep.join((jar, "/d.jar"))
+    assert conf["spark.executor.extraClassPath"] == os.pathsep.join((jar, "/e.jar", "/f.jar"))
+    assert spark.sparkContext.getConf().get("spark.executor.extraClassPath") == jar
 
 
 def test_repeated_pool_reuses_its_compiled_classes(spark):

@@ -83,9 +83,27 @@ _DEFAULTS = {
     # to drain; a genuine OOM still throws once a full GC has run with
     # the locker free. JVM-launch-time only: applies to fresh
     # processes (bench, driver, tests), like spark.driver.memory.
+    #
+    # C2 only for code that gets hot (r13, BASELINE.md "Round 13: JIT
+    # thresholds"). JIT compiling was 61-67% of set-up CPU once the class
+    # archive was mapped. Catalyst's analysis, optimisation and planning,
+    # Janino and the scheduler run each method a few thousand times per
+    # query: enough to cross JDK 17's tier-4 thresholds (5000
+    # invocations, 600 minimum, 15000 invocations plus loops, 40000
+    # back-edges) within seconds, so C2 compiled methods that soon went
+    # cold. At 4x those, generated stage code, shuffle and parquet
+    # decoding still cross them within milliseconds; perfbench's setup_s
+    # fell 14-21% and cpu_ms_per_op 13-23% on every workload. Driver
+    # only: cluster executors are long-lived and run the hot kernels (in
+    # local mode they are this JVM). Not C1 only (-XX:TieredStopAtLevel=1):
+    # that made micro-batches 25-34% slower. A caller's own -XX:Tier4*
+    # option follows these and wins (_launch_conf).
     "spark.driver.extraJavaOptions":
-        "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
-    # same posture per executor on a real cluster (no-op in local mode)
+        "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64 "
+        "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+        "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000",
+    # same GCLocker posture per executor on a real cluster (no-op in
+    # local mode), with the JDK's tier-4 thresholds
     "spark.executor.extraJavaOptions":
         "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
     # Generated-class cache sized to the registry's working set (r13,
@@ -143,10 +161,21 @@ def codegen_compile_counter(spark: SparkSession) -> Callable[[], int]:
     Spark's ``CodegenMetrics`` compilation-time histogram, which grows
     once per generated-class cache miss (driver and, in local mode,
     tasks). The histogram is looked up once, since every package step of
-    a gateway lookup is a round trip; each read is then one call."""
+    a gateway lookup is a round trip; each read is then one call. It
+    reads the driver JVM only: executors outside it are not counted."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     histogram = metrics.METRIC_COMPILATION_TIME()
     return lambda: int(histogram.getCount())
+
+
+def jit_compile_ms(spark: SparkSession) -> Callable[[], int]:
+    """A reader of the milliseconds the JIT compilers have spent so far in
+    this JVM (``CompilationMXBean.getTotalCompilationTime``), C1 and C2
+    together. Like codegen_compile_counter, the bean is looked up once and
+    each read is one call. It reads the driver JVM only: executors
+    outside it are not counted."""
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return lambda: int(bean.getTotalCompilationTime())
 
 
 # Execution memory OFF the GC heap (r12, guide §5). The heavy shuffle
@@ -406,6 +435,10 @@ def _launch_conf(overrides: dict[str, str]) -> tuple[str, dict[str, str]]:
         for k in _LOCAL_FS_KEYS:
             del conf[k]
     conf.update(overrides)
+    # a caller's Java options follow the defaults, and HotSpot keeps the
+    # last occurrence of a flag: one flag can be overridden, none is lost
+    for k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+        conf[k] = " ".join(p for p in (_DEFAULTS[k], overrides.get(k)) if p)
     if jar is not None:
         # executors outside the driver's JVM (local-cluster, a cluster
         # whose nodes share the path) resolve file: through it as well

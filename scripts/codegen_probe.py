@@ -32,17 +32,17 @@ from adenhq_hive_spark.catalog import register_views  # noqa: E402
 from adenhq_hive_spark.engine import Engine  # noqa: E402
 from adenhq_hive_spark.operators.dedup import release_persisted  # noqa: E402
 from adenhq_hive_spark.queries import all_queries  # noqa: E402
-from adenhq_hive_spark.session import codegen_compile_counter, get_spark  # noqa: E402
+from adenhq_hive_spark.session import codegen_compile_counter, get_spark, jit_compile_ms  # noqa: E402
 
 
-def jvm_counters(spark, compiles) -> dict[str, float]:
+def jvm_counters(spark, compiles, jit_ms) -> dict[str, float]:
     mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     pools = [p for p in mf.getMemoryPoolMXBeans()
              if p.getName() == "Metaspace" or p.getName().startswith("CodeHeap")]
     return {
         "compiles": compiles(),
         "classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
-        "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+        "jit_ms": jit_ms(),
         "wall_s": time.perf_counter(),
         "metaspace_codeheap_mb": sum(p.getUsage().getUsed() for p in pools) / 2**20,
     }
@@ -61,7 +61,7 @@ def main() -> None:
     if args.cache:
         overrides["spark.sql.codegen.cache.maxEntries"] = args.cache
     spark = get_spark("codegen_probe", **overrides)
-    compiles = codegen_compile_counter(spark)
+    compiles, jit_ms = codegen_compile_counter(spark), jit_compile_ms(spark)
     specs = all_queries()
     names = args.only.split(",") if args.only else sorted(specs)
     if args.engine:
@@ -73,7 +73,7 @@ def main() -> None:
           f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')}", flush=True)
 
     for p in range(args.passes):
-        before = jvm_counters(spark, compiles)
+        before = jvm_counters(spark, compiles, jit_ms)
         compiled: dict[str, int] = {}
         for name in names:
             c0 = compiles()
@@ -85,7 +85,7 @@ def main() -> None:
                 run_noop(specs[name].run(spark, args.sf_dir))
                 release_persisted()
             compiled[name] = compiles() - c0
-        after = jvm_counters(spark, compiles)
+        after = jvm_counters(spark, compiles, jit_ms)
         line = {k: round(after[k] - before[k], 2) for k in before}
         line["metaspace_codeheap_mb"] = round(after["metaspace_codeheap_mb"], 1)
         print(json.dumps({"pass": p, **line}), flush=True)

@@ -6,7 +6,9 @@ separated instead of conflated).
 Usage: PYTHONPATH=/root/repo python scripts/time_query.py <sf_dir> <name> \
            [runs] [--cache-decompose] [--conf k=v ...]
 Prints one JSON line {"name", "sf_dir", "cold_s", "warm_min_s",
-"runs": [...], "steal_pct": [...], "load_1m"}.
+"runs": [...], "jit_ms": [...], "steal_pct": [...], "load_1m"}, where
+jit_ms is the driver JVM's JIT compile time during each run
+(session.jit_compile_ms).
 
 --cache-decompose adds a final run after dropping the OS page cache
 (echo 3 > /proc/sys/vm/drop_caches): run 0 is cold-JVM+cold-cache, the
@@ -37,30 +39,33 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from adenhq_hive_spark.queries import all_queries
-    from adenhq_hive_spark.session import get_spark
+    from adenhq_hive_spark.session import get_spark, jit_compile_ms
     from bench import measure_spec, min_runs
 
     spark = get_spark(f"time-{name}", **overrides)
     spark.sparkContext.setJobDescription(f"time_query:{name}")
     spec = all_queries()[name]
+    jit = jit_compile_ms(spark)
 
     def one(i, label=""):
         # one measurement per run: each run releases its _materialize'd
         # relations, so a warm run never reuses the previous run's
+        jit0 = jit()
         s = measure_spec(spec, spark, sf_dir, min_runs(1))
+        jits.append(jit() - jit0)
         runs.append(round(s.best, 1))
         steals.append(round(s.steal_of_best, 1))
         print(f"run{i}{label}: {s.best:.1f}s steal {steals[-1]}%",
               file=sys.stderr, flush=True)
 
-    runs, steals = [], []
+    runs, jits, steals = [], [], []
     for i in range(n):
         one(i)
     out = {
         "name": name, "sf_dir": sf_dir,
         "cold_s": runs[0],
         "warm_min_s": min(runs[1:]) if len(runs) > 1 else None,
-        "runs": runs, "steal_pct": steals,
+        "runs": runs, "jit_ms": jits, "steal_pct": steals,
         "load_1m": round(os.getloadavg()[0], 2),
     }
     if decompose:

@@ -4,7 +4,10 @@ count and heap are read when get_spark runs and fail fast too. The
 generated-class cache holds a repeated pool of statements. Python
 workers start through the package's worker daemon. Local files go
 through the package's fork-free filesystem, whose jar is on the driver's
-and the executors' class paths, and only in get_spark sessions."""
+and the executors' class paths, and only in get_spark sessions. A
+caller's Java options follow the defaults; the driver JVM runs with the
+GCLocker posture and 4x JDK 17's tier-4 JIT thresholds, and a plain
+session keeps the JDK's."""
 
 from __future__ import annotations
 
@@ -18,8 +21,9 @@ from pyspark.sql import functions as F
 
 from adenhq_hive_spark.engine import Engine
 from adenhq_hive_spark.queries import all_queries
-from adenhq_hive_spark.session import (_launch_conf, _offheap_conf, codegen_compile_counter,
-                                       get_spark, local_fs_jar)
+from adenhq_hive_spark.session import (_DEFAULTS, _launch_conf, _offheap_conf,
+                                       codegen_compile_counter, get_spark, jit_compile_ms,
+                                       local_fs_jar)
 
 from .conftest import SF_SMOKE
 
@@ -95,6 +99,47 @@ def test_the_fs_jar_leads_both_class_paths(spark):
     assert spark.sparkContext.getConf().get("spark.executor.extraClassPath") == jar
 
 
+@pytest.mark.parametrize("key", ["spark.driver.extraJavaOptions",
+                                 "spark.executor.extraJavaOptions"])
+def test_a_callers_java_options_follow_the_defaults(key):
+    """HotSpot keeps a flag's last occurrence: a caller overrides one
+    flag and keeps every other default (the GCLocker flag needs the
+    diagnostic unlock in front of it)."""
+    _, conf = _launch_conf({})
+    assert conf[key] == _DEFAULTS[key]
+    assert "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64" in conf[key]
+    _, conf = _launch_conf({key: "-Xlog:gc -XX:GCLockerRetryAllocationCount=32"})
+    assert conf[key] == f"{_DEFAULTS[key]} -Xlog:gc -XX:GCLockerRetryAllocationCount=32"
+
+
+# HotSpot option -> value in a get_spark driver JVM, and in a plain one
+# (JDK 17's defaults); the GCLocker count is only set by get_spark.
+_JIT_POSTURE = {
+    "Tier4InvocationThreshold": ("20000", "5000"),
+    "Tier4MinInvocationThreshold": ("2400", "600"),
+    "Tier4CompileThreshold": ("60000", "15000"),
+    "Tier4BackEdgeThreshold": ("160000", "40000"),
+    "GCLockerRetryAllocationCount": ("64", None),
+}
+
+
+def test_the_driver_jvm_runs_the_session_posture(spark):
+    """Read from the live JVM, not from the conf: every flag took effect."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    assert {n: bean.getVMOption(n).getValue() for n in _JIT_POSTURE} == {
+        n: v for n, (v, _) in _JIT_POSTURE.items()}
+
+
+def test_jit_compile_ms_reads_the_drivers_running_total(spark):
+    jit = jit_compile_ms(spark)
+    first = jit()
+    assert isinstance(first, int) and first > 0
+    spark.range(1000).selectExpr("sum(id * 3)").first()
+    assert jit() >= first
+
+
 def test_repeated_pool_reuses_its_compiled_classes(spark):
     """A second pass over the same statements compiles no class. On a
     fresh JVM one pass of this pool at sf0.001 compiles 124 generated
@@ -143,12 +188,17 @@ def test_get_spark_resolves_local_files_to_the_package_filesystem(spark):
 
 
 _PLAIN = r"""
+import sys
+
 import __spark_entry__
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[8]").config("spark.driver.memory", "1g")
          .config("spark.sql.session.timeZone", "UTC").getOrCreate())
 jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print(*(bean.getVMOption(n).getValue() for n in sys.argv[1:]))
 print(jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf).getClass().getName(),
       jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf).getDefaultFileSystem()
       .getClass().getName())
@@ -158,10 +208,13 @@ print(jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf
 def test_plain_session_keeps_stock_hadoop():
     """A session a caller of __spark_entry__ builds itself (the untuned
     local[8] smoke) keeps the local filesystem pyspark resolves on its
-    own, package imported or not."""
+    own, package imported or not, and the JDK's tier-4 JIT thresholds."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    done = subprocess.run([sys.executable, "-c", _PLAIN], cwd=repo, capture_output=True,
+    stock = {n: v for n, (_, v) in _JIT_POSTURE.items() if v}
+    done = subprocess.run([sys.executable, "-c", _PLAIN, *stock], cwd=repo, capture_output=True,
                           text=True, timeout=300)
     assert done.returncode == 0, done.stderr[-3000:]
-    assert done.stdout.split()[-2:] == [  # Hive's, from the service entry of pyspark's hive-exec
+    options, filesystems = done.stdout.splitlines()[-2:]
+    assert options.split() == list(stock.values())
+    assert filesystems.split() == [  # Hive's, from the service entry of pyspark's hive-exec
         "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem", "org.apache.hadoop.fs.local.LocalFs"]

@@ -14,9 +14,10 @@ from __future__ import annotations
 import os
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 TABLES = (
     "region",
@@ -133,7 +134,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Raw read schema for ns-era events files: Spark has no ns timestamp, so
 # with spark.sql.legacy.parquet.nanosAsLong=true the column reads as LongType
-# and load_table converts ns → µs. DuckDB applies the same floor-truncation
+# and read_events converts ns → µs. DuckDB applies the same floor-truncation
 # when casting TIMESTAMP_NS → TIMESTAMP, so both engines see identical µs.
 EVENTS_SCHEMA_NS = T.StructType(
     [
@@ -206,15 +207,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events" and events_ts_unit(path) == "ns":
+    if name == "events":
+        return read_events(spark, spark.read, path)
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
+
+
+def read_events(
+    spark: SparkSession,
+    reader: DataFrameReader | DataStreamReader,
+    path: str,
+    source: str | None = None,
+) -> DataFrame:
+    """The one events read, batch or stream: ``reader`` is ``spark.read``
+    or a configured ``spark.readStream``, ``path`` the events parquet
+    whose footer gives the ts unit, and ``source`` what the reader loads
+    (default ``path``; a file stream watches a directory).
+
+    µs-era files read with the declared schema as they are.  ns-era
+    files read ts as a BIGINT (``nanosAsLong``) and convert it by
+    integer ns→µs floor division, which keeps full precision (a double
+    division at 1.7e18 would not) and matches DuckDB's ns→µs cast.
+    """
+    if events_ts_unit(path) == "ns":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.schema(EVENTS_SCHEMA_NS).parquet(path)
-        # Integer ns→µs floor-division keeps full precision (a double
-        # division at 1.7e18 would not); matches DuckDB's ns→µs cast.
+        raw = reader.schema(EVENTS_SCHEMA_NS).parquet(source or path)
         return raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return spark.read.schema(SCHEMAS[name]).parquet(path)
+        ).select(*SCHEMAS["events"].names)
+    return reader.schema(SCHEMAS["events"]).parquet(source or path)
 
 
 _REGISTERED_MARKER = "spark.spark_graft.registered_sf_dir"

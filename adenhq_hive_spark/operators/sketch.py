@@ -135,7 +135,7 @@ def heavy_hitters(
 ) -> DataFrame:
     """Exact corpus-level heavy-hitter tokens via sketch-then-verify.
 
-    Emits every whitespace token whose occurrence count is at least
+    Emits every ``text.ws_tokens`` token whose occurrence count is at least
     ``min_share_bp`` basis points (1 bp = 1/10000) of all token
     occurrences, with its exact count and integer-floor bp share —
     sorted by (count desc, token).  ``capacity`` must satisfy
@@ -157,12 +157,10 @@ def heavy_hitters(
             f"capacity={capacity} cannot guarantee the {min_share_bp}bp "
             f"threshold: need capacity >= {10_000 // min_share_bp + 1}"
         )
+    from .text import ws_tokens
+
     spark = df.sparkSession
-    toks = df.select(
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-        ).alias("token")
-    )
+    toks = df.select(F.explode(ws_tokens(text_col)).alias("token"))
     # The sketch pass runs over xxhash64(token), not the token string:
     # Arrow then ships fixed 8-byte ints (vs variable-length UTF-8 +
     # offsets) and pandas value_counts on int64 avoids per-row string

@@ -34,14 +34,19 @@ def _marker_hits(text_col: str, markers: list[str]) -> Column:
     )
 
 
-def ws_token_count(text_col: str | Column) -> Column:
-    """Whitespace token count — THE corpus-contract tokenization
+def ws_tokens(text_col: str | Column) -> Column:
+    """Whitespace tokens — THE corpus-contract tokenization
     (single-space split, empty tokens dropped), shared so every
-    operator and its DuckDB oracle (len(list_filter(string_split(...))))
-    count identically; a drifted copy would break result hashes
+    operator and its DuckDB oracle (list_filter(string_split(...)))
+    tokenize identically; a drifted copy would break result hashes
     silently."""
     col = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(F.filter(F.split(col, " "), lambda t: t != ""))
+    return F.filter(F.split(col, " "), lambda t: t != "")
+
+
+def ws_token_count(text_col: str | Column) -> Column:
+    """Whitespace token count: the size of :func:`ws_tokens`."""
+    return F.size(ws_tokens(text_col))
 
 
 def frac4(p: Column, q: Column) -> Column:
@@ -221,10 +226,10 @@ def tfidf_top_terms(
     matches the window formulation exactly via the (-tfidf, term)
     struct sort key.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
     ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(toks).alias("term")
-    ).filter(F.col("term") != "")
+        F.col(id_col).alias("doc"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("term"),
+    )
     tf = ex.groupBy("doc", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = df.agg(F.count("*").alias("n_docs"))
@@ -361,9 +366,7 @@ def unigram_logprob(
 
     Output: (id_col, n_toks, avg_neg_logp).
     """
-    toks = F.explode(
-        F.filter(F.split(F.lower(F.col(text_col)), " "), lambda t: t != "")
-    ).alias("tok")
+    toks = F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok")
     ex = df.select(F.col(id_col), toks)
     freq = ex.groupBy("tok").agg(F.count("*").alias("c"))
     totals = freq.agg(
@@ -617,9 +620,7 @@ def ccnet_buckets(
         lm_predicate = F.col("source").isin(
             "src0", "src1", "src2", "src3", "src4"
         )
-    ts = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda t: t != ""
-    )
+    ts = ws_tokens(F.lower(F.col(text_col)))
     base = df.withColumn("__ts", ts).filter(F.size("__ts") >= 2)
     bi = base.select(
         F.col(id_col),
@@ -737,9 +738,7 @@ def bigram_logprob(
 
     Output: (id_col, n_bigrams, avg_neg_logp), rounded half-even at 4.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = ws_tokens(F.lower(F.col(text_col)))
     with_toks = df.select(F.col(id_col), toks.alias("_t")).filter(
         F.size("_t") >= 2
     )
@@ -918,8 +917,7 @@ def zipf_coverage(
     ks = tuple(sorted(set(int(k) for k in ks)))
     kmax = max(ks)
     toks = df.select(
-        F.explode(F.filter(F.split(F.lower(F.col(text_col)), " "),
-                           lambda t: t != "")).alias("tok")
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("total_tokens"))
@@ -971,8 +969,7 @@ def source_keywords(
     """
     ex = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(F.filter(F.split(F.lower(F.col(text_col)), " "),
-                           lambda t: t != "")).alias("tok"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     tf_s = ex.groupBy("grp", "tok").agg(F.count("*").alias("c_s"))
     tf = tf_s.groupBy("tok").agg(F.sum("c_s").alias("c"))
@@ -1027,10 +1024,10 @@ def feature_hash(
     ``dims``, so the final shuffle is tiny.  Emits sparse rows
     (id_col, dim, weight), only non-zero dims.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
     ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(toks).alias("term")
-    ).filter(F.col("term") != "")
+        F.col(id_col).alias("doc"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("term"),
+    )
     tf = ex.groupBy("doc", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = df.agg(F.count("*").alias("n_docs"))
@@ -1088,9 +1085,7 @@ def pmi_collocations(
     TakeOrderedAndProject keeps the total-ordered top_n
     (pmi desc, a, b).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = ws_tokens(F.lower(F.col(text_col)))
     with_toks = df.select(toks.alias("_t"))
     uni = (
         with_toks.select(F.explode("_t").alias("tok"))

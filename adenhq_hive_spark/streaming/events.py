@@ -25,7 +25,9 @@ equal the batch results on the same data.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import os
+from collections.abc import Callable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
@@ -35,37 +37,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import EVENTS_SCHEMA_NS, SCHEMAS, events_ts_unit
+from ..catalog import read_events
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet with the declared
-    schema; the physical ts unit (ns-era vs µs-era testdata) is detected
-    from the parquet footer, conversion identical to the batch catalog
-    path."""
-    import os
-
-    # The file source monitors a DIRECTORY; glob-filter selects the events
-    # table out of the per-table parquet files in the sf dir.
-    if events_ts_unit(os.path.join(sf_dir, "events.parquet")) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(EVENTS_SCHEMA_NS)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
-    raw = (
-        spark.readStream.schema(SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
+    """File-source stream over the events parquet: the batch catalog's
+    own read (:func:`catalog.read_events`, footer-detected ts unit),
+    one file per trigger.  The file source monitors a DIRECTORY; the
+    glob filter selects the events table out of the sf dir."""
+    reader = (
+        spark.readStream.option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
     )
-    return raw.select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
+    return read_events(
+        spark, reader, os.path.join(sf_dir, "events.parquet"), sf_dir
     )
 
 
@@ -115,8 +100,11 @@ def sliding_counts(
     slide: str = "5 minutes",
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Sliding-window per-type counts (bench/feature tier — excluded from
-    the hash contract by design, SURVEY §2.11 non-goals)."""
+    """Sliding-window per-type counts: PAPER.md §0 layer 3 (streaming
+    runtime), the timer-cadence rollup of the reference's EventBus
+    events.  Batch image: pl_sliding_window (the same window() grouping,
+    DuckDB-checked by window expansion); tests/test_streaming.py pins
+    stream == batch on the same rows."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width, slide).alias("win"), "event_type")
@@ -142,6 +130,119 @@ def session_counts(
             F.col("win.start").alias("session_start"),
             F.col("win.end").alias("session_end"),
             "n_events",
+        )
+    )
+
+
+def _frame(schema: T.StructType, rows: list[tuple]) -> pd.DataFrame:
+    """One output batch of a state function: typed-empty (object
+    columns, which Arrow casts to ``schema``) when there are no rows,
+    else one column per schema field, in schema order."""
+    if not rows:
+        return pd.DataFrame(
+            {c.name: pd.Series(dtype="object") for c in schema}
+        )
+    return pd.DataFrame(
+        {c.name: [r[i] for r in rows] for i, c in enumerate(schema)}
+    )
+
+
+def _combine(
+    df: DataFrame,
+    keys: list[str],
+    ddl: str,
+    derive: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
+) -> DataFrame:
+    """Map-side combine before the shuffle to keyed state: a STATELESS
+    ``mapInPandas`` folds each Arrow batch to one ``(*keys, cnt)`` row
+    per distinct key (``derive`` first adds computed key columns;
+    ``ddl`` types the keys).  The state task for a hot key then gets
+    distinct keys per batch instead of raw rows (BASELINE.md "Round 10
+    (second session): the skewed STREAMING regime measured", 1.18-2.05x
+    over shuffling rows).  The merges downstream are count-weighted, so
+    the grouping cannot change their result."""
+
+    def reduce_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            if derive is not None:
+                pdf = derive(pdf)
+            out = (
+                pdf.groupby(keys, as_index=False, sort=False)
+                .size()
+                .rename(columns={"size": "cnt"})
+            )
+            yield out[[*keys, "cnt"]]
+
+    return df.mapInPandas(reduce_part, f"{ddl}, cnt long")
+
+
+def _fold_day_counts(open_days: dict[str, int], pdf: pd.DataFrame) -> None:
+    """Add a batch's per-day row counts to the open-day buffer."""
+    for day, c in pdf["day"].astype(str).value_counts().items():
+        open_days[day] = open_days.get(day, 0) + int(c)
+
+
+def _close_days(
+    days: DataFrame,
+    out_schema: T.StructType,
+    state_schema: T.StructType,
+    init: tuple,
+    score: Callable[[Any, tuple, list], tuple[tuple, list[tuple]]],
+    fold: Callable[[dict, pd.DataFrame], None] = _fold_day_counts,
+) -> DataFrame:
+    """The day-closing core of the per-key daily streams
+    (anomaly_stream, cusum_stream, hist_quantile_stream).
+
+    ``days`` carries the key ``event_type``, ``day`` and whatever
+    ``fold`` reads.  Per key the state is the operator's running fields
+    (``init`` before the key's first row) followed by a JSON buffer of
+    the still-open days, which ``fold(open_days, pdf)`` grows (default:
+    per-day row counts).  A day closes when a strictly later day arrives
+    for its key (a per-key watermark by data progress, the right bound
+    for a source that replays in order); the newest day stays open, so
+    every emitted row is final and the operator never revises.  Each
+    trigger pops every older day, oldest first, and hands their buffers
+    to ``score(key, running, closed) -> (running, tails)``: one output
+    row ``(key, day, *tail)`` per closed day.
+
+    A NULL ts would become the day 'NaT', which sorts AFTER every ISO
+    date and would hold the newest-open-day slot forever (real days all
+    close, the NaT bucket never drains), so those rows are dropped.
+    """
+
+    def update(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        *running, open_json = state.get if state.exists else (*init, "{}")
+        open_days: dict[str, Any] = json.loads(open_json)
+        for pdf in pdfs:
+            fold(open_days, pdf)
+        closing: list[str] = []
+        if open_days:
+            newest = max(open_days)
+            closing = sorted(d for d in open_days if d < newest)
+        running, tails = score(
+            key[0], tuple(running), [open_days.pop(d) for d in closing]
+        )
+        state.update((*running, json.dumps(open_days)))
+        yield _frame(out_schema, [
+            (key[0], pd.Timestamp(d).date(), *t)
+            for d, t in zip(closing, tails)
+        ])
+
+    return (
+        days.filter(F.col("day").isNotNull())
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -178,9 +279,7 @@ def running_user_state(stream: DataFrame) -> DataFrame:
             n += len(pdf)
             total += float(pdf["value"].sum())
         state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-        )
+        yield _frame(_USER_STATE_OUT, [(key[0], n, round(total, 4))])
 
     return (
         stream.select("user_id", "value")
@@ -246,7 +345,9 @@ def dedup_stream(stream: DataFrame, keys: list[str] | None = None,
     """Streaming exact dedup: drop re-delivered events by key within the
     watermark horizon (the ingest-dedup tier of an LLM pipeline — at-
     least-once sources become effectively-once). State for a key is kept
-    until the watermark passes it, so memory is bounded."""
+    until the watermark passes it, so memory is bounded.  PAPER.md §0
+    layer 3 (streaming runtime): the at-least-once delivery of its
+    EventBus and entry-point triggers."""
     return stream.withWatermark("ts", watermark).dropDuplicates(
         keys or ["event_id"]
     )
@@ -258,7 +359,8 @@ def purchase_click_join(
     """Stream-stream inner join with an event-time range: each purchase
     joins clicks of the same user within the preceding ``horizon``
     (the streaming image of the as-of/attribution join; state on both
-    sides bounded by watermark + range condition)."""
+    sides bounded by watermark + range condition).  PAPER.md §0 layer 3
+    (streaming runtime): two subscribed event streams joined by key."""
     p = (
         purchases.withWatermark("ts", "30 minutes")
         .select(
@@ -311,7 +413,9 @@ def stateful_sessions(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
     event arrives after the gap → the finished session is emitted
     immediately; (b) the event-time watermark passes last_ts + gap →
     the timeout fires and the pending session is emitted. State per user
-    is O(1) (start, last, count).
+    is O(1) (start, last, count).  PAPER.md §0 layer 3 (streaming
+    runtime): the ExecutionStream lifecycle as keyed state with
+    timeouts.
     """
     import datetime as _dt
 
@@ -330,9 +434,8 @@ def stateful_sessions(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
         if state.hasTimedOut:
             start, last, n = state.get
             state.remove()
-            yield pd.DataFrame(
-                {"user_id": [user_id], "session_start": [_dtv(start)],
-                 "session_end": [_dtv(last)], "n_events": [n]}
+            yield _frame(
+                _SESSION_OUT, [(user_id, _dtv(start), _dtv(last), n)]
             )
             return
         ts_list = []
@@ -340,14 +443,10 @@ def stateful_sessions(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
             ts_list.extend(_us(t) for t in pdf["ts"])
         ts_list.sort()
         start, last, n = state.get if state.exists else (None, None, 0)
-        out = {"user_id": [], "session_start": [], "session_end": [],
-               "n_events": []}
+        rows = []
         for t in ts_list:
             if last is not None and t - last > gap_us:
-                out["user_id"].append(user_id)
-                out["session_start"].append(_dtv(start))
-                out["session_end"].append(_dtv(last))
-                out["n_events"].append(n)
+                rows.append((user_id, _dtv(start), _dtv(last), n))
                 start, last, n = t, t, 1
             elif start is None:
                 start, last, n = t, t, 1
@@ -355,7 +454,7 @@ def stateful_sessions(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
                 last, n = t, n + 1
         state.update((start, last, n))
         state.setTimeoutTimestamp((last + gap_us) // 1000)  # epoch millis
-        yield pd.DataFrame(out)
+        yield _frame(_SESSION_OUT, rows)
 
     return (
         stream.select("user_id", "ts")
@@ -399,82 +498,41 @@ def anomaly_stream(stream: DataFrame, k: int = 2) -> DataFrame:
     ``(n*x - S1)^2 * (n-1) >= k^2 * n * (n*S2 - S1^2)`` over the PRIOR
     running sums — no floating stddev in the state or the decision.
 
-    State per key: running (n, S1, S2) over CLOSED days plus a JSON
-    buffer of still-open day counts. A day closes when a strictly later
-    day arrives for that key (a per-key watermark by data progress, the
-    right bound for a source that replays in order); the newest day stays
-    open, so every emitted flag is final — the operator never revises.
-    Output mode append-compatible: one row per (key, closed day).
+    State per key: running (n, S1, S2) over CLOSED days plus the JSON
+    buffer of still-open day counts of the day-closing core
+    (:func:`_close_days`): a day closes when a strictly later day
+    arrives for that key, so every emitted flag is final.  Output mode
+    append-compatible: one row per (key, closed day).
 
     Scale: state is three BIGINTs + a small JSON per key; the wide work
     is the groupBy(event_type) shuffle of raw events — at petabyte
     volume, pre-aggregate per (key, day) in the micro-batch before the
     stateful stage (same two-level shape as the batch op).
     """
-    import json
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, s1, s2, open_json = (
-            state.get if state.exists else (0, 0, 0, "{}")
-        )
-        open_days: dict[str, int] = json.loads(open_json)
-        for pdf in pdfs:
-            per_day = pdf["day"].astype(str).value_counts()
-            for day, c in per_day.items():
-                open_days[day] = open_days.get(day, 0) + int(c)
-        out_rows = []
-        if open_days:
-            newest = max(open_days)
-            for day in sorted(d for d in open_days if d < newest):
-                x = open_days.pop(day)
-                dev = n * x - s1
-                varnum = n * s2 - s1 * s1
-                # unlike the batch op, x is NOT in the prior sums, so a
-                # zero-variance history with x off the constant is an
-                # infinite-z anomaly, not a vacuous case
-                flag = bool(
-                    n > 1
-                    and (
-                        (varnum == 0 and dev != 0)
-                        or dev * dev * (n - 1) >= k * k * n * varnum > 0
-                    )
+    def score(key, running, closed):
+        n, s1, s2 = running
+        tails = []
+        for x in closed:
+            dev = n * x - s1
+            varnum = n * s2 - s1 * s1
+            # unlike the batch op, x is NOT in the prior sums, so a
+            # zero-variance history with x off the constant is an
+            # infinite-z anomaly, not a vacuous case
+            flag = bool(
+                n > 1
+                and (
+                    (varnum == 0 and dev != 0)
+                    or dev * dev * (n - 1) >= k * k * n * varnum > 0
                 )
-                out_rows.append((key[0], day, x, n, flag))
-                n, s1, s2 = n + 1, s1 + x, s2 + x * x
-        state.update((n, s1, s2, json.dumps(open_days)))
-        if not out_rows:
-            yield pd.DataFrame(
-                {c.name: pd.Series(dtype="object") for c in _ANOMALY_OUT}
             )
-            return
-        yield pd.DataFrame(
-            {
-                "event_type": [r[0] for r in out_rows],
-                "day": [pd.Timestamp(r[1]).date() for r in out_rows],
-                "n_events": [r[2] for r in out_rows],
-                "n_days_prior": [r[3] for r in out_rows],
-                "is_anomaly": [r[4] for r in out_rows],
-            }
-        )
+            tails.append((x, n, flag))
+            n, s1, s2 = n + 1, s1 + x, s2 + x * x
+        return (n, s1, s2), tails
 
-    return (
-        stream.select("event_type", F.to_date("ts").alias("day"))
-        # a null ts would become the string 'NaT', which sorts AFTER
-        # every ISO date and would permanently hold the "newest open
-        # day" slot (real days all close, the NaT bucket never drains)
-        .filter(F.col("day").isNotNull())
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_ANOMALY_OUT,
-            stateStructType=_ANOMALY_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _close_days(
+        stream.select("event_type", F.to_date("ts").alias("day")),
+        _ANOMALY_OUT, _ANOMALY_STATE, (0, 0, 0), score,
     )
 
 
@@ -548,10 +606,9 @@ def contract_gate_stream(
     foreachBatch (the contract aggregates need a full batch view);
     both sinks are epoch-partitioned with dynamic partition overwrite,
     so at-least-once retries replace their own epoch rather than
-    duplicating rows. Returns the DataStreamWriter.
+    duplicating rows.  PAPER.md §0 layer 4 (sinks), fed by the layer-3
+    stream.  Returns the DataStreamWriter.
     """
-    import json as _json
-
     from ..operators.contract import validate_contract
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
@@ -561,7 +618,7 @@ def contract_gate_stream(
         if not ok:
             out = out.withColumn(
                 "contract_report",
-                F.lit(_json.dumps(
+                F.lit(json.dumps(
                     {r.rule: r.n_violations for r in report if not r.ok}
                 )),
             )
@@ -639,11 +696,10 @@ def heavy_hitters_stream(
     text_col: str = "text",
     capacity: int = 1024,
     n_buckets: int = 16,
-    pre_reduce: bool = True,
 ) -> DataFrame:
     """Streaming twin of :func:`operators.sketch.heavy_hitters`: a
     continuously-maintained Misra-Gries candidate sketch over the token
-    stream of arriving documents.
+    stream of arriving documents (the same ``text.ws_tokens`` tokens).
 
     Tokens hash to one of ``n_buckets`` state keys (xxhash64 pmod), so
     sketch maintenance parallelizes across buckets AND every occurrence
@@ -661,49 +717,25 @@ def heavy_hitters_stream(
     State per bucket: a JSON counter map (bounded by capacity) + the
     bucket's exact token total.
 
-    ``pre_reduce`` (default) runs map-side combine before the shuffle
-    to state: a stateless ``mapInPandas`` folds each source partition's
-    token occurrences to (bucket, token, cnt), so the state task for a
-    bucket receives distinct-tokens-per-partition rows instead of raw
-    occurrences — the hot-token bucket (one token at 50% of the stream
-    maps to ONE bucket by design) stops being a row funnel.  MG merge
-    is count-weighted, so folding occurrences into counts before the
-    merge preserves the sketch guarantee exactly (same total, same
-    increments, different grouping — Agarwal et al. mergeability).
-    ``pre_reduce=False`` keeps the row-shuffling plan as the
-    measurement twin.
+    Map-side combine (:func:`_combine`) folds each source partition's
+    token occurrences to (bucket, token, cnt) before the shuffle to
+    state, so the hot-token bucket (one token at 50% of the stream maps
+    to ONE bucket by design) is not a row funnel.  MG merge is
+    count-weighted, so folding occurrences into counts first preserves
+    the sketch guarantee exactly (same total, same increments,
+    different grouping — Agarwal et al. mergeability).
     """
-    import json
-
     from ..operators.sketch import mg_merge
+    from ..operators.text import ws_tokens
 
     toks = doc_stream.select(
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-        ).alias("token")
+        F.explode(ws_tokens(text_col)).alias("token")
     ).select(
         "token",
         F.pmod(F.xxhash64("token"), F.lit(n_buckets))
         .cast("int")
         .alias("bucket"),
     )
-
-    if pre_reduce:
-        def reduce_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out = (
-                    pdf.groupby(["bucket", "token"], as_index=False,
-                                sort=False)
-                    .size()
-                    .rename(columns={"size": "cnt"})
-                )
-                yield out[["bucket", "token", "cnt"]]
-
-        toks = toks.mapInPandas(
-            reduce_part, "bucket int, token string, cnt long"
-        )
 
     def update(
         key: tuple[Any, ...],
@@ -717,24 +749,17 @@ def heavy_hitters_stream(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            if "cnt" in pdf.columns:  # pre-reduced (token, cnt)
-                batch = pdf.groupby("token")["cnt"].sum()
-                total += int(batch.sum())
-            else:
-                batch = pdf["token"].value_counts()
-                total += len(pdf)
+            batch = pdf.groupby("token")["cnt"].sum()
+            total += int(batch.sum())
             sk = mg_merge(sk, batch, capacity)
         state.update((json.dumps({k: int(v) for k, v in sk.items()}), total))
-        yield pd.DataFrame(
-            {
-                "bucket": [key[0]] * len(sk),
-                "token": list(sk.index),
-                "mg_count": [int(v) for v in sk.values],
-                "bucket_total": [total] * len(sk),
-            }
+        yield _frame(
+            _HH_OUT, [(key[0], t, int(c), total) for t, c in sk.items()]
         )
 
-    return toks.groupBy("bucket").applyInPandasWithState(
+    return _combine(
+        toks, ["bucket", "token"], "bucket int, token string"
+    ).groupBy("bucket").applyInPandasWithState(
         update,
         outputStructType=_HH_OUT,
         stateStructType=_HH_STATE,
@@ -755,7 +780,8 @@ def distinct_users_stream(
     merge is commutative, so micro-batch boundaries cannot change the
     estimate — the batch twin computed on the same rows yields the
     IDENTICAL number (pinned in tests), making this one of the few
-    approximate operators with exact stream/batch parity.
+    approximate operators with exact stream/batch parity.  PAPER.md §0
+    layer 3 (streaming runtime) feeding layer 5 (run analytics).
     """
     return (
         stream.withWatermark("ts", watermark)
@@ -808,10 +834,10 @@ def span_scrub_stream(
     long-running stream must not accumulate never-released cached
     plans.
 
-    Returns the DataStreamWriter (caller starts it).
+    PAPER.md §0 layer 3 (streaming runtime) carrying the LLM-data
+    pipeline's span dedup to ingest time.  Returns the DataStreamWriter
+    (caller starts it).
     """
-    import os
-
     from ..operators.dedup import (
         build_gram_postings,
         dedup_spans_incremental,
@@ -876,13 +902,14 @@ def cusum_stream(
     the textbook ONLINE CUSUM (Page 1954 is inherently sequential — the
     batch op's retrospective mean/sd become an explicit IN-CONTROL
     target (mean, sd) here, which is exactly how a production control
-    chart is parameterized).
+    chart is parameterized).  PAPER.md §0 layer 3 (streaming runtime)
+    running layer 5's performance-pattern analysis online.
 
     Per key the state is the two quantized cumulative sums (sp6, sn6 —
     BIGINTs, the batch op's exact-integer discipline: z quantizes to
     ROUND(z*1e6) before any accumulation, so a replay reproduces the
-    stream bit-for-bit) plus the open-day buffer of the anomaly_stream
-    day-closing contract: a day closes when a strictly later day
+    stream bit-for-bit) plus the open-day buffer of the day-closing
+    core (:func:`_close_days`): a day closes when a strictly later day
     arrives for its key, every emitted row is final, and a NULL ts
     never wedges the newest-open-day slot.
 
@@ -906,8 +933,6 @@ def cusum_stream(
     per (key, day) in the micro-batch before the stateful stage at
     high volume (same note as anomaly_stream).
     """
-    import json
-
     if targets is None and target_sd is None:
         raise ValueError("provide target_mean/target_sd or targets")
     if (target_mean is None) != (target_sd is None):
@@ -931,82 +956,38 @@ def cusum_stream(
     k6 = int(round(slack * 1_000_000))
     h6 = int(round(threshold * 1_000_000))
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        sp6, sn6, open_json = (
-            state.get if state.exists else (0, 0, "{}")
-        )
-        open_days: dict[str, int] = json.loads(open_json)
-        for pdf in pdfs:
-            per_day = pdf["day"].astype(str).value_counts()
-            for day, c in per_day.items():
-                open_days[day] = open_days.get(day, 0) + int(c)
-        tgt = per_key.get(str(key[0]))
+    def score(key, running, closed):
+        sp6, sn6 = running
+        tgt = per_key.get(str(key))
         if tgt is None and target_sd is not None:
             tgt = (target_mean, target_sd)
-        out_rows = []
-        if open_days:
-            newest = max(open_days)
-            for day in sorted(d for d in open_days if d < newest):
-                x = open_days.pop(day)
-                if tgt is None:
-                    # fleet mode, unknown key: report the day closed
-                    # but never score it against another key's target
-                    out_rows.append((
-                        key[0], day, x, 0.0, 0.0, False, False,
-                    ))
-                    continue
-                # HALF_UP quantization, matching the batch twin's
-                # F.round (java BigDecimal HALF_UP on the shortest
-                # decimal repr of the double) — Python round() is
-                # half-even and diverges by one 1e-6 step on exact
-                # dyadic ties like 0.0078125, breaking the documented
-                # bit-for-bit batch parity
-                z = (x - tgt[0]) / tgt[1]
-                z6 = int(
-                    Decimal(repr(z)).quantize(
-                        Decimal("0.000001"), rounding=ROUND_HALF_UP
-                    ).scaleb(6)
-                )
-                sp6 = max(0, sp6 + z6 - k6)
-                sn6 = max(0, sn6 + (-z6) - k6)
-                out_rows.append((
-                    key[0], day, x,
-                    sp6 / 1e6, sn6 / 1e6,
-                    sp6 > h6, sn6 > h6,
-                ))
-        state.update((sp6, sn6, json.dumps(open_days)))
-        if not out_rows:
-            yield pd.DataFrame(
-                {c.name: pd.Series(dtype="object") for c in _CUSUM_OUT}
+        tails = []
+        for x in closed:
+            if tgt is None:
+                # fleet mode, unknown key: report the day closed
+                # but never score it against another key's target
+                tails.append((x, 0.0, 0.0, False, False))
+                continue
+            # HALF_UP quantization, matching the batch twin's
+            # F.round (java BigDecimal HALF_UP on the shortest
+            # decimal repr of the double) — Python round() is
+            # half-even and diverges by one 1e-6 step on exact
+            # dyadic ties like 0.0078125, breaking the documented
+            # bit-for-bit batch parity
+            z = (x - tgt[0]) / tgt[1]
+            z6 = int(
+                Decimal(repr(z)).quantize(
+                    Decimal("0.000001"), rounding=ROUND_HALF_UP
+                ).scaleb(6)
             )
-            return
-        yield pd.DataFrame(
-            {
-                "event_type": [r[0] for r in out_rows],
-                "day": [pd.Timestamp(r[1]).date() for r in out_rows],
-                "x": [r[2] for r in out_rows],
-                "s_pos_r6": [r[3] for r in out_rows],
-                "s_neg_r6": [r[4] for r in out_rows],
-                "alarm_pos": [r[5] for r in out_rows],
-                "alarm_neg": [r[6] for r in out_rows],
-            }
-        )
+            sp6 = max(0, sp6 + z6 - k6)
+            sn6 = max(0, sn6 + (-z6) - k6)
+            tails.append((x, sp6 / 1e6, sn6 / 1e6, sp6 > h6, sn6 > h6))
+        return (sp6, sn6), tails
 
-    return (
-        stream.select("event_type", F.to_date("ts").alias("day"))
-        .filter(F.col("day").isNotNull())  # the anomaly_stream NaT guard
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_CUSUM_OUT,
-            stateStructType=_CUSUM_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _close_days(
+        stream.select("event_type", F.to_date("ts").alias("day")),
+        _CUSUM_OUT, _CUSUM_STATE, (0, 0), score,
     )
 
 
@@ -1025,15 +1006,6 @@ _HISTQ_STATE = T.StructType([
 ])
 
 
-def _hdr_bucket(v: int) -> int:
-    """Python mirror of operators.sketch.hist_bucket_sql — bit-identical
-    for non-negative longs (bit_length == length(bin(v)) for v >= 1)."""
-    if v <= 15:
-        return v
-    s = v.bit_length() - 4
-    return s * 8 + (v >> s)
-
-
 def _hdr_lb(b: int) -> int:
     """Python mirror of operators.sketch.hist_bucket_lb_sql."""
     if b <= 15:
@@ -1042,8 +1014,9 @@ def _hdr_lb(b: int) -> int:
 
 
 def _hdr_bucket_np(v):
-    """Vectorized ``_hdr_bucket`` — bit-exact for non-negative int64
-    (bit_length via 6-step binary shift, no float log2 edge cases)."""
+    """HDR bucket of non-negative int64 values, vectorized: the numpy
+    mirror of operators.sketch.hist_bucket_sql, bit-exact (bit_length
+    via a 6-step binary shift, no float log2 edge cases)."""
     import numpy as np
 
     v = np.asarray(v, dtype=np.int64)
@@ -1062,7 +1035,6 @@ def _hdr_bucket_np(v):
 def hist_quantile_stream(
     stream: DataFrame,
     percentiles: tuple[int, ...] = (50, 90, 99),
-    pre_reduce: bool = True,
 ) -> DataFrame:
     """Streaming twin of :func:`operators.sketch.hist_quantiles`: a
     RUNNING per-key HDR log-histogram over event values, emitting
@@ -1073,11 +1045,11 @@ def hist_quantile_stream(
 
     Per key the state is the running {bucket: count} histogram (at
     most ~500 entries regardless of volume — the same constant-state
-    bound as the batch sketch) plus the anomaly_stream day-closing
-    buffer of per-open-day bucket counts: a day closes when a strictly
-    later day arrives for its key, its buckets merge into the running
-    histogram, and one final row per closed day reports the estimates
-    over every value seen through that day.
+    bound as the batch sketch) plus the day-closing core's buffer
+    (:func:`_close_days`) of per-open-day bucket counts: a day closes
+    when a strictly later day arrives for its key, its buckets merge
+    into the running histogram, and one final row per closed day
+    reports the estimates over every value seen through that day.
 
     estimate(p) = lower bound of the first bucket whose cumulative
     count reaches ceil(p*n/100) (clamped >= 1) — always <= the exact
@@ -1089,21 +1061,17 @@ def hist_quantile_stream(
     equal hist_quantiles() over the batch image of days <= D
     (tests/test_streaming.py).
 
-    Scale: state is O(buckets) per key.  With ``pre_reduce`` (default)
-    a STATELESS ``mapInPandas`` stage runs map-side combine before the
-    shuffle to state: each source partition folds its rows to
-    (event_type, day, bucket, cnt) — vectorized bucketing + one pandas
-    groupby — so the stateful task for a key receives at most
-    partitions x open-days x ~500 bucket rows per trigger instead of
-    the key's raw row volume.  That is THE hot-key defense for keyed
-    streaming state: a key carrying 50% of the stream no longer
-    funnels 50% of the rows through one state task (the combine
-    happens wherever the rows already are), it funnels a constant-size
-    sketch delta.  ``pre_reduce=False`` keeps the row-shuffling plan
-    as the measurement twin (scripts/bench_skew_streaming.py).
+    Scale: state is O(buckets) per key.  Map-side combine
+    (:func:`_combine`) folds each source partition to (event_type,
+    day, bucket, cnt) — vectorized bucketing + one pandas groupby —
+    so the stateful task for a key receives at most partitions x
+    open-days x ~500 bucket rows per trigger instead of the key's raw
+    row volume.  That is THE hot-key defense for keyed streaming
+    state: a key carrying 50% of the stream no longer funnels 50% of
+    the rows through one state task, it funnels a constant-size sketch
+    delta (BASELINE.md "Round 10 (second session): the skewed STREAMING
+    regime measured").
     """
-    import json
-
     pcts = tuple(int(p) for p in percentiles)
     if not pcts or any(p < 1 or p > 100 for p in pcts):
         raise ValueError("percentiles must be in 1..100")
@@ -1112,112 +1080,47 @@ def hist_quantile_stream(
             "exactly three percentiles (the p50/p90/p99 output shape)"
         )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        hist_json, open_json = (
-            state.get if state.exists else ("{}", "{}")
-        )
-        hist: dict[str, int] = json.loads(hist_json)
-        open_days: dict[str, dict[str, int]] = json.loads(open_json)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            if "cnt" in pdf.columns:  # pre-reduced (day, bucket, cnt)
-                days = pdf["day"].astype(str).to_numpy()
-                for day, b, c in zip(
-                    days, pdf["bucket"].to_numpy(), pdf["cnt"].to_numpy()
-                ):
-                    d = open_days.setdefault(day, {})
-                    b = str(int(b))
-                    d[b] = d.get(b, 0) + int(c)
-                continue
-            vals = pdf["v"].to_numpy()
-            days = pdf["day"].astype(str).to_numpy()
-            for day, v in zip(days, vals):
-                b = str(_hdr_bucket(int(v)))
-                d = open_days.setdefault(day, {})
-                d[b] = d.get(b, 0) + 1
-        out_rows = []
-        if open_days:
-            newest = max(open_days)
-            for day in sorted(d for d in open_days if d < newest):
-                for b, c in open_days.pop(day).items():
-                    hist[b] = hist.get(b, 0) + c
-                n = sum(hist.values())
-                cum = 0
-                ests: dict[int, int] = {}
-                want = {p: max((p * n + 99) // 100, 1) for p in pcts}
-                for b in sorted(hist, key=int):
-                    cum += hist[b]
-                    for p in pcts:
-                        if p not in ests and cum >= want[p]:
-                            ests[p] = _hdr_lb(int(b))
-                out_rows.append(
-                    (key[0], day, n, ests[pcts[0]], ests[pcts[1]],
-                     ests[pcts[2]])
-                )
-        state.update((json.dumps(hist), json.dumps(open_days)))
-        if not out_rows:
-            yield pd.DataFrame(
-                {c.name: pd.Series(dtype="object") for c in _HISTQ_OUT}
-            )
-            return
-        yield pd.DataFrame(
-            {
-                "event_type": [r[0] for r in out_rows],
-                "day": [pd.Timestamp(r[1]).date() for r in out_rows],
-                "n": [r[2] for r in out_rows],
-                "p50": [r[3] for r in out_rows],
-                "p90": [r[4] for r in out_rows],
-                "p99": [r[5] for r in out_rows],
-            }
-        )
+    def fold(open_days: dict[str, dict[str, int]], pdf: pd.DataFrame) -> None:
+        days = pdf["day"].astype(str).to_numpy()
+        for day, b, c in zip(
+            days, pdf["bucket"].to_numpy(), pdf["cnt"].to_numpy()
+        ):
+            d = open_days.setdefault(day, {})
+            b = str(int(b))
+            d[b] = d.get(b, 0) + int(c)
 
-    base = stream.select(
+    def score(key, running, closed):
+        hist: dict[str, int] = json.loads(running[0])
+        tails = []
+        for buckets in closed:
+            for b, c in buckets.items():
+                hist[b] = hist.get(b, 0) + c
+            n = sum(hist.values())
+            cum = 0
+            ests: dict[int, int] = {}
+            want = {p: max((p * n + 99) // 100, 1) for p in pcts}
+            for b in sorted(hist, key=int):
+                cum += hist[b]
+                for p in pcts:
+                    if p not in ests and cum >= want[p]:
+                        ests[p] = _hdr_lb(int(b))
+            tails.append((n, *(ests[p] for p in pcts)))
+        return (json.dumps(hist),), tails
+
+    values = stream.select(
         "event_type",
         F.to_date("ts").alias("day"),
         F.col("value").cast("long").alias("v"),
-    ).filter(
-        F.col("day").isNotNull()
-        & F.col("v").isNotNull()
-        & (F.col("v") >= 0)
+    ).filter(F.col("v").isNotNull() & (F.col("v") >= 0))
+    combined = _combine(
+        values, ["event_type", "day", "bucket"],
+        "event_type string, day date, bucket int",
+        derive=lambda pdf: pdf.assign(
+            bucket=_hdr_bucket_np(pdf["v"].to_numpy()).astype("int32")
+        ),
     )
-
-    if pre_reduce:
-        def reduce_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.assign(
-                    bucket=_hdr_bucket_np(pdf["v"].to_numpy()).astype("int32")
-                )
-                out = (
-                    pdf.groupby(
-                        ["event_type", "day", "bucket"],
-                        as_index=False, sort=False,
-                    )
-                    .size()
-                    .rename(columns={"size": "cnt"})
-                )
-                yield out[["event_type", "day", "bucket", "cnt"]]
-
-        base = base.mapInPandas(
-            reduce_part,
-            "event_type string, day date, bucket int, cnt long",
-        )
-
-    return (
-        base.groupBy("event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_HISTQ_OUT,
-            stateStructType=_HISTQ_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _close_days(
+        combined, _HISTQ_OUT, _HISTQ_STATE, ("{}",), score, fold
     )
 
 
@@ -1267,16 +1170,10 @@ def toolcall_assembly_stream(
     makes drain-style harnesses (``processAllAvailable`` /
     availableNow catch-up runs) never observe completion — there the
     residue is one ~30-byte tombstone per finished request, freed with
-    the checkpoint. Fragments pre-shuffle on req_id only — no
-    pre_reduce tier here because fragment order matters and
-    per-request volume is tiny.
+    the checkpoint. Fragments pre-shuffle on req_id only — no map-side
+    combine here because fragment order matters and per-request volume
+    is tiny.
     """
-    import json
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {c.name: pd.Series(dtype="object") for c in _TOOLCALL_OUT}
-        )
 
     def update(
         key: tuple[Any, ...],
@@ -1285,7 +1182,7 @@ def toolcall_assembly_stream(
     ) -> Iterator[pd.DataFrame]:
         if finished_ttl_ms is not None and state.hasTimedOut:
             state.remove()
-            yield _empty()
+            yield _frame(_TOOLCALL_OUT, [])
             return
 
         def _arm() -> None:
@@ -1301,7 +1198,7 @@ def toolcall_assembly_stream(
             # when one is configured)
             state.update((json.dumps({"__finished__": True}),))
             _arm()
-            yield _empty()
+            yield _frame(_TOOLCALL_OUT, [])
             return
         for pdf in pdfs:
             for r in pdf.itertuples(index=False):
@@ -1321,7 +1218,7 @@ def toolcall_assembly_stream(
         if not done:
             state.update((json.dumps(acc),))
             _arm()
-            yield _empty()
+            yield _frame(_TOOLCALL_OUT, [])
             return
         rows = []
         for idx in sorted(acc, key=int):
@@ -1333,17 +1230,7 @@ def toolcall_assembly_stream(
                          slot["name"] or None, joined, len(slot["frags"])))
         state.update((json.dumps({"__finished__": True}),))
         _arm()
-        if not rows:
-            yield _empty()
-            return
-        yield pd.DataFrame({
-            "req_id": [r[0] for r in rows],
-            "tool_idx": [r[1] for r in rows],
-            "call_id": [r[2] for r in rows],
-            "tool_name": [r[3] for r in rows],
-            "tool_input": [r[4] for r in rows],
-            "n_frags": [r[5] for r in rows],
-        })
+        yield _frame(_TOOLCALL_OUT, rows)
 
     assembled = stream.groupBy("req_id").applyInPandasWithState(
         update,

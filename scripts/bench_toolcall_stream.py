@@ -8,7 +8,7 @@ key). Two corpora, same total rows:
 - skewed:  ONE request carries ~50% of all fragments (a runaway
   generation), the rest uniform
 
-There is deliberately NO pre_reduce arm: fragment assembly is
+There is deliberately NO map-side combine arm: fragment assembly is
 order-sensitive (chunk_idx sort inside the state fold) and emits only
 on the finish marker, so a map-side combine cannot fold fragments
 without replicating the whole accumulator per partition — the

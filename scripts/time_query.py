@@ -8,7 +8,8 @@ Usage: PYTHONPATH=/root/repo python scripts/time_query.py <sf_dir> <name> \
 Prints one JSON line {"name", "sf_dir", "cold_s", "warm_min_s",
 "runs": [...], "jit_ms": [...], "steal_pct": [...], "load_1m"}, where
 jit_ms is the driver JVM's JIT compile time during each run
-(session.jit_compile_ms).
+(session.jit_compile_ms). Seconds are rounded to 3 decimals (ms), so a
+sub-second entry can show a 10% change.
 
 --cache-decompose adds a final run after dropping the OS page cache
 (echo 3 > /proc/sys/vm/drop_caches): run 0 is cold-JVM+cold-cache, the
@@ -53,9 +54,9 @@ def main() -> None:
         jit0 = jit()
         s = measure_spec(spec, spark, sf_dir, min_runs(1))
         jits.append(jit() - jit0)
-        runs.append(round(s.best, 1))
+        runs.append(round(s.best, 3))
         steals.append(round(s.steal_of_best, 1))
-        print(f"run{i}{label}: {s.best:.1f}s steal {steals[-1]}%",
+        print(f"run{i}{label}: {s.best:.3f}s steal {steals[-1]}%",
               file=sys.stderr, flush=True)
 
     runs, jits, steals = [], [], []
@@ -73,8 +74,8 @@ def main() -> None:
             f.write("3\n")
         one(n, " (warm JVM, dropped page cache)")
         out["warm_cold_s"] = runs[-1]
-        out["io_share_s"] = round(runs[-1] - out["warm_min_s"], 1)
-        out["jit_share_s"] = round(out["cold_s"] - runs[-1], 1)
+        out["io_share_s"] = round(runs[-1] - out["warm_min_s"], 3)
+        out["jit_share_s"] = round(out["cold_s"] - runs[-1], 3)
     print(json.dumps(out), flush=True)
 
 

@@ -119,6 +119,24 @@ def test_events_ts_unit_detection_ns_and_us(spark, tmp_path):
     for d in (us_dir, ns_dir):
         row = load_table(spark, str(d), "events").collect()[0]
         assert str(row.ts) == "2024-03-01 12:00:00", (d, row.ts)
+    # the stream reads through the same catalog function
+    from adenhq_hive_spark.streaming.events import (
+        read_event_stream,
+        run_to_completion,
+    )
+
+    for d in (us_dir, ns_dir):
+        q = run_to_completion(
+            read_event_stream(spark, str(d)),
+            f"ts_unit_{d.name}",
+            str(tmp_path / f"ck_{d.name}"),
+            output_mode="append",
+        )
+        try:
+            row = spark.sql(f"SELECT * FROM ts_unit_{d.name}").collect()[0]
+        finally:
+            q.stop()
+        assert str(row.ts) == "2024-03-01 12:00:00", (d, row.ts)
 
 
 def test_concurrent_query_execution(spark):

@@ -1470,55 +1470,34 @@ def test_hist_quantile_stream_rejects_bad_percentiles(spark, stream):
         hist_quantile_stream(stream, percentiles=(50, 99))
 
 
-def test_hdr_bucket_np_matches_scalar():
-    """The vectorized bucket used by the pre-reduce stage must be
-    bit-exact with the scalar mirror across the whole long range the
-    scalar accepts (0..2^62, boundaries included)."""
+def test_hdr_bucket_helpers_match_batch_sql(spark):
+    """The stream's vectorized bucket (map-side combine) and its bucket
+    lower bound must be bit-exact with the batch twin's SQL fragments,
+    sketch.hist_bucket_sql / hist_bucket_lb_sql evaluated by Spark,
+    across 0..2^62 with every power-of-two boundary."""
     import numpy as np
 
-    from adenhq_hive_spark.streaming.events import _hdr_bucket, _hdr_bucket_np
+    from adenhq_hive_spark.operators.sketch import (
+        hist_bucket_lb_sql,
+        hist_bucket_sql,
+    )
+    from adenhq_hive_spark.streaming.events import _hdr_bucket_np, _hdr_lb
 
     vals = list(range(0, 600))
     for e in range(4, 62):
         vals += [2**e - 1, 2**e, 2**e + 1]
     rng = np.random.default_rng(7)
     vals += [int(x) for x in rng.integers(0, 2**62, size=2000)]
-    arr = np.array(vals, dtype=np.int64)
-    got = _hdr_bucket_np(arr)
-    want = np.array([_hdr_bucket(int(v)) for v in vals], dtype=np.int64)
-    assert (got == want).all()
-
-
-def test_hist_quantile_stream_pre_reduce_twin_equality(
-    spark, stream, tmp_path
-):
-    """Map-side combine must be INVISIBLE in the result: the pre-reduced
-    plan (mapInPandas fold to (day, bucket, cnt) before state) and the
-    row-shuffling plan emit identical closed-day rows — histogram counts
-    are exact, so grouping increments differently cannot change them."""
-    from adenhq_hive_spark.streaming.events import (
-        hist_quantile_stream,
-        run_to_completion,
+    rows = (
+        spark.createDataFrame(list(enumerate(vals)), "i long, v long")
+        .selectExpr("i", f"{hist_bucket_sql('v')} AS bucket")
+        .selectExpr("i", "bucket", f"{hist_bucket_lb_sql('bucket')} AS lb")
+        .orderBy("i")
+        .collect()
     )
-
-    out = {}
-    for mode, pre in (("pre", True), ("raw", False)):
-        q = run_to_completion(
-            hist_quantile_stream(stream, pre_reduce=pre),
-            f"histq_{mode}_tbl",
-            str(tmp_path / f"ck_histq_{mode}"),
-            output_mode="update",
-        )
-        try:
-            rows = spark.sql(f"SELECT * FROM histq_{mode}_tbl").collect()
-        finally:
-            q.stop()
-        out[mode] = sorted(
-            (r.event_type, str(r.day), r.n, r.p50, r.p90, r.p99)
-            for r in rows
-        )
-    assert out["pre"] == out["raw"]
-    assert len(out["pre"]) > 5
+    got = _hdr_bucket_np(np.array(vals, dtype=np.int64))
+    assert [int(b) for b in got] == [r.bucket for r in rows]
+    assert [_hdr_lb(r.bucket) for r in rows] == [r.lb for r in rows]
 
 
 def test_write_shards_stream_restart_matches_batch_manifest(spark, tmp_path):

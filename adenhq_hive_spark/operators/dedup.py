@@ -1,20 +1,41 @@
 """Deduplication tiers for LLM training-data pipelines (driver north star).
 
-Four tiers, all DataFrame-native and deterministic:
+Tiers, all DataFrame-native and deterministic:
 
-1. exact           — content-hash groupBy (one shuffle on the hash).
-2. ngram_jaccard   — exact set-similarity on word n-gram shingles via a
-                     shingle inverted index (posting-list pair expansion:
-                     pairs that share at least one shingle), then
-                     |A∩B| / |A∪B|.
-3. minhash_lsh     — MinHash signatures (xxhash64 with H seeds) + banding;
-                     only same-band-bucket pairs are candidates, then exact
-                     jaccard verification on the candidates. The scale
-                     path: candidate generation cost is bucket-local.
-4. simhash         — 64-bit SimHash per doc computed JVM-side with
-                     higher-order array lambdas; near-dup = small hamming
-                     distance, banded on 4×16-bit chunks for candidate
-                     generation.
+- exact            — content-hash groupBy (:func:`dedup_exact`).
+- shingle index    — exact set measures on word k-gram shingles through a
+                     shingle inverted index: :func:`ngram_jaccard_pairs`
+                     (|A∩B| / |A∪B|), :func:`containment_pairs`
+                     (|A∩B| / |A|), :func:`dedup_incremental` (new docs
+                     against a corpus index) and the census operators
+                     :func:`hot_shingles` / :func:`shingle_novelty`.
+- minhash_lsh      — MinHash signatures + banding; only same-bucket pairs
+                     are candidates, verified with the exact jaccard:
+                     :func:`minhash_lsh_pairs` (xxhash64) and
+                     :func:`minhash_lsh_pairs_portable` (md5 family
+                     DuckDB evaluates identically).
+- simhash          — SimHash per doc, near-dup = small hamming distance,
+                     banded on 4 chunks (:func:`simhash_pairs`).
+- edit distance    — the exact confirm tier over jaccard candidates
+                     (:func:`editdist_verify`).
+- spans            — duplicated word spans, linear, no pair join
+                     (:func:`duplicated_spans`, :func:`scrub_spans`,
+                     :func:`span_witnesses`, :func:`dedup_spans_incremental`).
+- clusters         — pairs resolved into clusters and keep-policies
+                     (:func:`connected_components`, :func:`dup_clusters`,
+                     :func:`cluster_capped_dedup`, :func:`cluster_best_rep`,
+                     :func:`cross_source_dup_matrix`).
+
+One helper per near-dup idea; each tier keeps only its hash family, its
+band key and its measure:
+
+- :func:`_shingle_sets`  — the materialized (id, sh) shingle-set stage;
+- :func:`_drop_hot`      — the hot-key cap, counted before any posting
+                           list is built;
+- :func:`_posting_pairs` — ids grouped per key, expanded to ordered
+                           (id_a, id_b) pairs;
+- :func:`_verify_jaccard` — distinct candidates verified on their full
+                           shingle sets.
 
 Scale notes: every tier shuffles on content-derived keys (hash / shingle /
 band bucket), never on doc_id ranges, so hot documents don't skew a fixed
@@ -93,50 +114,92 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _ordered_pairs(postings: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """Expand sorted posting arrays into ordered (id_a, id_b) pair rows
-    via TWO pipelined Generates (posexplode -> slice -> explode) instead
-    of one flatten(transform(...)) expression.
+def _posting_pairs(keyed: DataFrame, *keys: str) -> DataFrame:
+    """The posting-pair expansion of every candidate tier: group the
+    ``id`` of ``keyed`` per ``keys`` (a shingle, a band bucket) into a
+    sorted posting list and expand it to ordered (id_a, id_b) rows, one
+    per pair and shared key.
 
-    Same pairs in the same order, but the flatten form materializes ALL
-    d(d-1)/2 pair structs of one posting row as a single contiguous
-    array before its explode — at sf10 a boilerplate shingle shared by
-    ~16k of 500k docs produced ~1 GB humongous allocations that
-    GCLocker-thrashed the JVM (BASELINE.md round-7 sf10 table, the
-    pl_dedup_incremental wall).  The two-stage form's peak per generated
-    row is O(d) (the posting array itself); the d² pair rows stream
-    through the stage without ever co-existing in memory.
+    The expansion is TWO pipelined Generates (posexplode -> slice ->
+    explode), not one flatten(transform(...)) expression: same pairs in
+    the same order, but the flatten form materializes ALL d(d-1)/2 pair
+    structs of one posting row as a single contiguous array before its
+    explode — at sf10 a boilerplate shingle shared by ~16k of 500k docs
+    produced ~1 GB humongous allocations that GCLocker-thrashed the JVM
+    (BASELINE.md round-7 sf10 table, the pl_dedup_incremental wall).
+    The two-stage form's peak per generated row is O(d) (the posting
+    array itself); the d² pair rows stream through the stage without
+    ever co-existing in memory.
     """
     return (
-        postings.filter(F.size(ids_col) > 1)
-        .select(F.col(ids_col), F.posexplode(ids_col).alias("_i", "id_a"))
+        keyed.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(F.col("ids"), F.posexplode("ids").alias("_i", "id_a"))
         .select(
             "id_a",
             F.explode(
                 F.slice(
-                    F.col(ids_col),
+                    F.col("ids"),
                     F.col("_i") + F.lit(2),
-                    F.size(ids_col) - F.col("_i") - F.lit(1),
+                    F.size("ids") - F.col("_i") - F.lit(1),
                 )
             ).alias("id_b"),
         )
     )
 
 
-def exact_duplicate_clusters(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-duplicate clusters: md5 content key → (hash, count, keeper).
+def _drop_hot(rows: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """The hot-key cap: drop the ``rows`` whose ``key`` occurs in more
+    than ``max_df`` rows (all rows when ``max_df`` is None).
 
-    Keeps the minimum id as the canonical representative (deterministic).
-    """
+    A key in ``d`` rows expands to O(d²) pairs, so one boilerplate
+    shingle shared by a million documents would dominate the shuffle.
+    The count comes first (a map-side-combined count per key, the hot
+    keys broadcast into an anti-join), so a hot key's id list is never
+    built. Shingle sets are distinct per doc, so a shingle's count is
+    its document frequency. Callers drop hot keys from CANDIDATE
+    generation only and verify on the full sets, so a reported value
+    never changes; only pairs that overlap in hot keys alone are
+    missed."""
+    if max_df is None:
+        return rows
+    hot = (
+        rows.groupBy(key)
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select(key)
+    )
+    return rows.join(F.broadcast(hot), key, "left_anti")
+
+
+def _with_sets(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(id_a, id_b) candidates joined to both docs' full sets, as
+    ``sh_a`` / ``sh_b``; ``sets`` holds (id, set) columns."""
+    id_col, set_col = sets.columns
+    return cand.join(
+        sets.withColumnsRenamed({id_col: "id_a", set_col: "sh_a"}), "id_a"
+    ).join(sets.withColumnsRenamed({id_col: "id_b", set_col: "sh_b"}), "id_b")
+
+
+def _verify_jaccard(
+    pairs: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of the distinct candidate ``pairs`` whose
+    full-set jaccard passes: ``round(|A∩B| / |A∪B|, 4) >= threshold``.
+
+    The batch tiers compare the ROUNDED value, the one they report.
+    :func:`dedup_incremental`'s corpus probe keeps its own rule: it
+    compares the UNROUNDED ratio of shared-posting counts, as no value
+    is reported there. The pl_dedup_incremental oracle mirrors both
+    rules, so neither may move to the other."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min(id_col).alias("keep_id"),
-        )
-        .filter(F.col("n") > 1)
+        _with_sets(pairs.dropDuplicates(["id_a", "id_b"]), sets)
+        .withColumn("jaccard", F.round(inter / union, 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -165,6 +228,23 @@ def _shingles(text_col: str, k: int = 3) -> F.Column:
     return F.array_distinct(word_ngrams(F.col(text_col), k))
 
 
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """(id, sh) distinct-shingle sets, materialized once: the sizes, the
+    postings and the verify step all read them. The scan is spread
+    first, so shingle construction and the map side of every downstream
+    aggregate run in the scan stage (spreading a narrow scan measured
+    2.3x at sf0.1)."""
+    from ..catalog import spread_small_scan
+
+    return _materialize(
+        spread_small_scan(df).select(
+            F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -172,62 +252,27 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    cache_shingles: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every pair sharing a shingle.
 
-    Inverted-index join: explode shingles → self-join on shingle with
-    id_a < id_b → per-pair intersection count; union size from per-doc
-    shingle counts. Pairs sharing zero shingles (jaccard 0) never
-    materialize.
+    Inverted-index join: posting lists per shingle expanded to ordered
+    in-group pairs (faster than an explode×explode self-join: shingles
+    are computed once and there is one fewer shuffle) → per-pair
+    intersection count; union size from per-doc shingle counts. Pairs
+    sharing zero shingles (jaccard 0) never materialize.
 
-    ``max_shingle_df`` is the scale knob: a shingle appearing in ``d``
-    documents generates O(d²) join rows, so one boilerplate phrase shared
-    by a million documents would dominate the shuffle. With the cap set,
-    shingles above the document-frequency cap are dropped from CANDIDATE
-    generation only — surviving pairs are still verified with their full
-    shingle sets, so reported jaccard values stay exact; only pairs whose
-    overlap is exclusively ultra-common shingles (low-signal pairs) can
-    be missed. Leave None for exhaustive-exact (the oracle-checked mode).
+    ``max_shingle_df`` is the scale knob (:func:`_drop_hot`): shingles in
+    more documents are dropped from CANDIDATE generation, and the
+    surviving pairs are verified on their full shingle sets
+    (:func:`_verify_jaccard`), so reported jaccard values stay exact.
+    Leave None for exhaustive-exact (the oracle-checked mode).
     """
-    from ..catalog import spread_small_scan
-
-    # shingle construction + the map-side of every downstream agg run in
-    # the SCAN stage (spreading a narrow scan measured 2.3x at sf0.1)
-    sh = spread_small_scan(df).select(
-        F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
-    )
-    if cache_shingles:
-        # materialize shingles once instead of recomputing per branch
-        # (sizes / postings / verification) — same lineage tradeoff as
-        # minhash_lsh_pairs(cache_signatures=True)
-        sh = _materialize(sh)
-    sizes = sh.select("id", F.size("sh").alias("n_sh"))
+    sh = _shingle_sets(df, text_col, id_col, k)
     ex = sh.select("id", F.explode("sh").alias("shingle"))
-    # Posting-list formulation (faster than an explode×explode self-join:
-    # shingles are computed once and there is one fewer shuffle): group
-    # doc ids per shingle, expand ordered in-group pairs JVM-side.
-    postings = ex.groupBy("shingle").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    )
+    pairs = _posting_pairs(_drop_hot(ex, "shingle", max_shingle_df), "shingle")
     if max_shingle_df is not None:
-        postings = postings.filter(F.size("ids") <= max_shingle_df)
-    pairs = _ordered_pairs(postings)
-    if max_shingle_df is not None:
-        # candidates only; verify with the FULL shingle sets so the cap
-        # never changes a reported jaccard value
-        cand = pairs.dropDuplicates(["id_a", "id_b"])
-        with_sets = (
-            cand.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        )
-        inter_sz = F.size(F.array_intersect("sh_a", "sh_b"))
-        union_sz = F.size(F.array_union("sh_a", "sh_b"))
-        return (
-            with_sets.withColumn("jaccard", F.round(inter_sz / union_sz, 4))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return _verify_jaccard(pairs, sh, threshold)
+    sizes = sh.select("id", F.size("sh").alias("n_sh"))
     inter = pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter"))
     return (
         inter.join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
@@ -281,7 +326,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 16,
     threshold: float = 0.5,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified with exact jaccard.
 
@@ -290,17 +334,12 @@ def minhash_lsh_pairs(
     pairs; each candidate is then verified with the true shingle jaccard, so
     the output has no false positives — LSH only bounds recall.
 
-    ``cache_signatures`` materializes the signature stage once instead of
-    recomputing it in the banding and both verification branches (~1.5x
-    end-to-end). With a reliable checkpoint dir configured on the session
-    the materialization survives executor loss (the cluster default);
-    without one it is a localCheckpoint — faster, but executor loss fails
-    the job. Set False to keep pure lineage.
+    The signature stage is materialized once (:func:`_materialize`)
+    instead of being recomputed in the banding and both verification
+    joins (~1.5x end-to-end).
     """
     rows = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
-    if cache_signatures:
-        sig = _materialize(sig)
+    sig = _materialize(minhash_signatures(df, text_col, id_col, k, num_hashes))
 
     band_entries = sig.select(
         "id",
@@ -321,24 +360,12 @@ def minhash_lsh_pairs(
             )
         ).alias("band", "bucket"),
     )
-    # posting-list pair expansion per (band, bucket) — signatures are
-    # computed once; the heavy shingle arrays join in only for the
-    # verification step, after candidate dedup
-    postings = band_entries.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    )
-    cand = _ordered_pairs(postings).dropDuplicates(["id_a", "id_b"])
-    sh = sig.select("id", "sh")
-    with_sets = (
-        cand.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        with_sets.withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    # signatures are computed once; the heavy shingle arrays join in
+    # only for the verification step, after candidate dedup
+    return _verify_jaccard(
+        _posting_pairs(band_entries, "band", "bucket"),
+        sig.select("id", "sh"),
+        threshold,
     )
 
 
@@ -743,23 +770,7 @@ def minhash_lsh_pairs_portable(
     bands = sigs.select(
         "id", F.posexplode(band_keys).alias("band", "key")
     )
-    postings = bands.groupBy("band", "key").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    )
-    cand = _ordered_pairs(postings).dropDuplicates(["id_a", "id_b"])
-    with_sets = cand.join(
-        sh.withColumnsRenamed({"id": "id_a", "shs": "sh_a"}), "id_a"
-    ).join(sh.withColumnsRenamed({"id": "id_b", "shs": "sh_b"}), "id_b")
-    jac = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b"))
-        / F.size(F.array_union("sh_a", "sh_b")),
-        4,
-    )
-    return (
-        with_sets.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(_posting_pairs(bands, "band", "key"), sh, threshold)
 
 
 def build_shingle_postings(
@@ -776,31 +787,15 @@ def build_shingle_postings(
 
     At scale, write this bucketed by ``shingle`` (the
     save_trigram_index pattern) so each batch's probe join is
-    shuffle-free on the corpus side, and maintain it per batch with
-    :func:`update_shingle_postings` — the delta merge reads only the
-    new documents."""
+    shuffle-free on the corpus side. Posting rows are per-(shingle,
+    doc), so the index grows by appending the new documents' rows —
+    :func:`~adenhq_hive_spark.streaming.events.postings_maintain_stream`
+    does that per micro-batch and reads only the new documents."""
     sh = df.select(
         F.col(id_col).alias("cid"), _shingles(text_col, k).alias("csh")
     )
     return sh.select(
         "cid", F.size("csh").alias("n_b"), F.explode("csh").alias("shingle")
-    )
-
-
-def update_shingle_postings(
-    postings: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """Delta-maintain the :func:`build_shingle_postings` index: shingle
-    only the new batch and append — posting rows are per-(shingle, doc),
-    so a merge is a plain union (no per-key regroup; re-feeding the same
-    batch is the caller's idempotence contract, as with
-    update_trigram_postings)."""
-    return postings.unionByName(
-        build_shingle_postings(new_docs, text_col, id_col, k)
     )
 
 
@@ -830,14 +825,15 @@ def dedup_incremental(
     Per-batch corpus cost: with the defaults the corpus is re-shingled
     (and re-hashed) every call — fine for one-shot use, wrong for a
     continuously-growing 100 TB corpus. Pass ``corpus_postings`` (a
-    persisted :func:`build_shingle_postings` table, delta-maintained via
-    :func:`update_shingle_postings`) and ``corpus_hashes`` (the distinct
+    persisted :func:`build_shingle_postings` table, appended to per batch
+    by ``streaming.events.postings_maintain_stream``) and
+    ``corpus_hashes`` (the distinct
     md5 content hashes, one ``_h`` string column, trivially
     delta-maintained) and the batch never touches the corpus text at
     all — the probe reads index rows only.
 
-    ``max_shingle_df`` is the hot-key cap (the batch tier's contract,
-    :func:`ngram_jaccard_pairs`): boilerplate shingles above the
+    ``max_shingle_df`` is the hot-key cap (:func:`_drop_hot`, counted
+    over the corpus postings): boilerplate shingles above the
     document-frequency cap are excluded from CANDIDATE generation, and
     surviving (new, corpus) candidates are verified with exact shared
     counts over the UNCAPPED postings restricted to candidate corpus
@@ -867,40 +863,29 @@ def dedup_incremental(
     # nA + nB − |A∩B| — no array-carrying verification join (the skinny
     # count formulation, same as the batch tier; the array-join variant
     # measured 108 s on DuckDB at sf0.1 vs 13 s here even before this)
-    if max_shingle_df is None:
-        shared = (
-            new_ex.join(corpus_postings, "shingle")
-            .groupBy("id", "cid")
-            .agg(F.count("*").alias("n_shared"), F.min("n_b").alias("n_b"))
-        )
-    else:
+    probe, cand = corpus_postings, None
+    if max_shingle_df is not None:
         # candidates from the CAPPED postings (bounds the hot-key join
         # fan-out), exact verify over uncapped postings of candidate
         # corpus docs only — cost ∝ candidates, never corpus
-        hot = (
-            corpus_postings.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("shingle")
-        )
-        capped = corpus_postings.join(
-            F.broadcast(hot), "shingle", "left_anti"
-        )
         cand = (
-            new_ex.join(capped, "shingle")
+            new_ex.join(_drop_hot(corpus_postings, "shingle", max_shingle_df),
+                        "shingle")
             .select("id", "cid")
             .distinct()
         )
-        postings_cand = corpus_postings.join(
+        probe = corpus_postings.join(
             cand.select("cid").distinct(), "cid", "left_semi"
         )
-        shared = (
-            new_ex.join(postings_cand, "shingle")
-            .groupBy("id", "cid")
-            .agg(F.count("*").alias("n_shared"), F.min("n_b").alias("n_b"))
-            .join(cand, ["id", "cid"], "left_semi")
-        )
+    shared = (
+        new_ex.join(probe, "shingle")
+        .groupBy("id", "cid")
+        .agg(F.count("*").alias("n_shared"), F.min("n_b").alias("n_b"))
+    )
+    if cand is not None:
+        shared = shared.join(cand, ["id", "cid"], "left_semi")
     sizes_new = new_sh.select("id", F.size("sh").alias("n_a"))
+    # the UNROUNDED ratio: the corpus probe's rule (see _verify_jaccard)
     near_corpus = (
         shared.join(sizes_new, "id")
         .filter(
@@ -1223,56 +1208,24 @@ def containment_pairs(
     Emits (id_sub, id_sup, containment): id_sub's shingle set is
     ``containment``-covered by id_sup's.  Values exact (frac4 half-up).
     """
-    from ..catalog import spread_small_scan
+    from .text import frac4
 
-    sh = spread_small_scan(df).select(
-        F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
-    )
-    sh = _materialize(sh)
+    sh = _shingle_sets(df, text_col, id_col, k)
     sizes = sh.select("id", F.size("sh").alias("n_sh")).filter(
         F.col("n_sh") >= min_shingles
     )
     ex = sh.select("id", F.explode("sh").alias("shingle"))
-    postings = ex.groupBy("shingle").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    )
-    if max_shingle_df is not None:
-        postings = postings.filter(F.size("ids") <= max_shingle_df)
-    from .text import frac4
-
-    if max_shingle_df is not None:
-        # candidates only; verify with the FULL shingle sets so the cap
-        # never changes a reported containment value (the
-        # ngram_jaccard_pairs capped-branch contract)
-        cand = _ordered_pairs(postings).dropDuplicates(["id_a", "id_b"])
-        cand = cand.union(
-            cand.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    pairs = _posting_pairs(_drop_hot(ex, "shingle", max_shingle_df), "shingle")
+    if max_shingle_df is None:
+        inter = pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter"))
+    else:
+        # candidates only: the intersection of the FULL shingle sets, so
+        # the cap never changes a reported containment value
+        inter = _with_sets(pairs.dropDuplicates(["id_a", "id_b"]), sh).select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("n_inter"),
         )
-        with_sets = (
-            cand.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .join(sizes.select(F.col("id").alias("id_a")), "id_a")
-            .join(sizes.select(F.col("id").alias("id_b")), "id_b")
-        )
-        return (
-            with_sets.withColumn(
-                "containment",
-                frac4(
-                    F.size(F.array_intersect("sh_a", "sh_b")), F.size("sh_a")
-                ),
-            )
-            .filter(F.col("containment") >= threshold)
-            .select(
-                F.col("id_a").alias("id_sub"),
-                F.col("id_b").alias("id_sup"),
-                "containment",
-            )
-        )
-    inter = (
-        _ordered_pairs(postings)
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
     # both directions from the one intersection table (no second join
     # pass): unordered (a < b) pair -> the two ordered candidate rows
     both = inter.union(
@@ -1312,14 +1265,9 @@ def shingle_novelty(
     Emits (id_col, n_sh, n_shared, novelty) with frac4-exact values;
     docs with zero shingles report novelty 1.0.
     """
-    from ..catalog import spread_small_scan
-
     from .text import frac4
 
-    sh = spread_small_scan(df).select(
-        F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
-    )
-    sh = _materialize(sh)
+    sh = _shingle_sets(df, text_col, id_col, k)
     ex = sh.select("id", F.explode("sh").alias("shingle"))
     dfreq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
     shared = (
@@ -1528,30 +1476,6 @@ def build_gram_postings(
         )
         .groupBy("gram")
         .agg(F.count("*").alias("gdf"))
-    )
-
-
-def update_gram_postings(
-    postings: DataFrame,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-) -> DataFrame:
-    """Merge a new batch into the gram postings: distinct-doc counts add
-    because batch ids are disjoint from corpus ids (the ingest
-    contract).  Proven equal to a full rebuild in tests — the
-    delta-maintain path for a continuously-growing corpus."""
-    delta = build_gram_postings(batch, text_col, id_col, k)
-    return (
-        postings.withColumnsRenamed({"gdf": "gdf_a"})
-        .join(delta.withColumnsRenamed({"gdf": "gdf_b"}), "gram", "full")
-        .select(
-            "gram",
-            (
-                F.coalesce("gdf_a", F.lit(0)) + F.coalesce("gdf_b", F.lit(0))
-            ).alias("gdf"),
-        )
     )
 
 

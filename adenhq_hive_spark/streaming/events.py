@@ -637,7 +637,7 @@ def postings_maintain_stream(
     """Ingest-time inverted-index maintenance: each arriving document
     batch's (shingle, cid, n_b) posting rows are appended to a persisted
     shingle-postings index (operators/dedup.build_shingle_postings) —
-    the streaming twin of update_shingle_postings, and the piece that
+    the live delta path of that index, and the piece that
     keeps :func:`~adenhq_hive_spark.operators.dedup.dedup_incremental`'s
     ``corpus_postings`` current WITHOUT ever re-reading corpus text.
 

@@ -10,7 +10,6 @@ import pytest
 from adenhq_hive_spark.catalog import load_table
 from adenhq_hive_spark.operators.dedup import (
     dedup_exact,
-    exact_duplicate_clusters,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -41,13 +40,6 @@ def _mini_docs(spark):
         (5, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_exact_clusters(spark):
-    clusters = exact_duplicate_clusters(_mini_docs(spark)).collect()
-    assert len(clusters) == 1
-    assert clusters[0].n == 3
-    assert clusters[0].keep_id == 1
 
 
 def test_dedup_exact_keeps_min_id(spark):
@@ -99,18 +91,15 @@ def test_materialize_uses_reliable_checkpoint_when_configured(spark, tmp_path):
     from adenhq_hive_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    baseline = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, cache_shingles=False).collect())
-    )
-    ck = str(tmp_path / "reliable_ck")
     jsc = spark.sparkContext._jsc.sc()
     prev = jsc.getCheckpointDir()  # Option[String] — restore on exit
+    assert not prev.isDefined()
+    # baseline: the same call with no checkpoint dir (persist mode)
+    baseline = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
+    ck = str(tmp_path / "reliable_ck")
     spark.sparkContext.setCheckpointDir(ck)
     try:
-        got = sorted(
-            map(tuple,
-                ngram_jaccard_pairs(docs, cache_shingles=True).collect())
-        )
+        got = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
     finally:
         # the spark fixture is session-scoped: leaving the checkpoint
         # dir set flips _materialize into checkpoint mode for EVERY
@@ -244,7 +233,6 @@ def test_dedup_incremental_prebuilt_postings_path(spark):
     from adenhq_hive_spark.operators.dedup import (
         build_shingle_postings,
         dedup_incremental,
-        update_shingle_postings,
     )
 
     from .conftest import SF_SMOKE
@@ -271,13 +259,6 @@ def test_dedup_incremental_prebuilt_postings_path(spark):
     ).count()
     strict = len(want)
     assert loose >= strict
-    # delta-maintained index == full rebuild over the grown corpus
-    half = corpus.filter("doc_id % 2 = 0")
-    rest = corpus.filter("doc_id % 2 != 0")
-    merged = update_shingle_postings(build_shingle_postings(half), rest)
-    full = build_shingle_postings(corpus)
-    assert merged.exceptAll(full).count() == 0
-    assert full.exceptAll(merged).count() == 0
 
 
 def test_dedup_incremental_hot_shingle_cap(spark):
@@ -513,6 +494,87 @@ def test_containment_hot_shingle_cap_keeps_values_exact(spark):
         assert uncapped[(r.id_sub, r.id_sup)] == r.containment
 
 
+# Word sets (k=1 shingles). h1/h2 are the hot keys (df 9); every other
+# word is in at most 3 docs. Jaccard 0.5 sits exactly on the threshold
+# (3,4; 10,11; 12,13, the last a within-batch pair of dedup_incremental);
+# 4/7 and 2/3 need the round; 10 and 11 overlap only in the hot keys,
+# so a cap of 3 loses them.
+_CAP_DOCS = {
+    1: "h1 h2 a b", 2: "h1 h2 a c", 3: "h1 h2 p q", 4: "h1 h2 p r s",
+    5: "a b c d", 6: "p q t", 7: "h1 h2 u v", 8: "h1 h2 u v w",
+    9: "h1 h2 u v x y", 10: "h1 h2 m", 11: "h1 h2 n", 12: "e f g",
+    13: "e f g k l o",
+}
+_CORPUS_IDS = (1, 3, 5, 7, 10)
+
+
+def _cap_jaccard(df, cap):
+    from adenhq_hive_spark.operators.dedup import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(df, k=1, threshold=0.5, max_shingle_df=cap)
+
+
+def _cap_containment(df, cap):
+    from adenhq_hive_spark.operators.dedup import containment_pairs
+
+    return containment_pairs(
+        df, k=1, threshold=0.5, min_shingles=2, max_shingle_df=cap
+    )
+
+
+def _cap_incremental(df, cap):
+    from adenhq_hive_spark.operators.dedup import dedup_incremental
+
+    corpus = df.filter(df.doc_id.isin(*_CORPUS_IDS))
+    new = df.filter(~df.doc_id.isin(*_CORPUS_IDS))
+    return dedup_incremental(
+        new, corpus, k=1, threshold=0.5, max_shingle_df=cap
+    )
+
+
+@pytest.mark.parametrize(
+    "run, key",
+    [
+        (_cap_jaccard, ("id_a", "id_b")),
+        (_cap_containment, ("id_sub", "id_sup")),
+        (_cap_incremental, ("doc_id",)),
+    ],
+    ids=["ngram_jaccard_pairs", "containment_pairs", "dedup_incremental"],
+)
+def test_capped_branch_matches_uncapped(spark, run, key):
+    """The capped branch (count-first hot-key cap + full-set verify)
+    against the uncapped one: a cap at or above the largest shingle df
+    returns exactly the uncapped rows; a binding cap drops rows but
+    never changes a reported value."""
+    from adenhq_hive_spark.normalize import result_hash
+
+    df = spark.createDataFrame(
+        sorted(_CAP_DOCS.items()), "doc_id long, text string"
+    )
+
+    def rows(out):
+        return out.columns, [tuple(r) for r in out.collect()]
+
+    uncapped = rows(run(df, None))
+    assert uncapped[1], "the fixture must yield rows"
+    for cap in (9, 50):  # 9 = the df of h1/h2, the largest
+        assert result_hash(*rows(run(df, cap)), strict=True) == result_hash(
+            *uncapped, strict=True
+        )
+
+    def by_key(cols_rows):
+        cols, rs = cols_rows
+        at = [cols.index(c) for c in key]
+        return {tuple(r[i] for i in at): r for r in rs}
+
+    want, got = by_key(uncapped), by_key(rows(run(df, 3)))
+    assert got.keys() != want.keys(), "a cap of 3 must bind"
+    if len(key) == 2:  # pair tiers: the cap only drops candidates
+        assert got.keys() < want.keys()
+    for k in got.keys() & want.keys():
+        assert got[k] == want[k]
+
+
 # ---- shingle_novelty ------------------------------------------------------
 
 
@@ -705,25 +767,6 @@ def test_span_incremental_equals_full_restricted(spark):
     )
     # and the batch-vs-batch duplicate was actually exercised
     assert incr.filter("doc_id = 12").count() >= 1
-
-
-def test_update_gram_postings_equals_rebuild(spark):
-    from adenhq_hive_spark.operators.dedup import (
-        build_gram_postings,
-        update_gram_postings,
-    )
-
-    a = spark.createDataFrame(
-        [(1, _words("x", 6)), (2, _words("x", 6))], "doc_id long, text string"
-    )
-    b = spark.createDataFrame(
-        [(3, _words("x", 6) + " " + _words("y", 5))], "doc_id long, text string"
-    )
-    merged = update_gram_postings(build_gram_postings(a), b)
-    rebuilt = build_gram_postings(a.unionByName(b))
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, rebuilt.collect())
-    )
 
 
 def test_span_witness_points_at_the_sharing_doc(spark):

@@ -312,3 +312,50 @@ def _scan_width(plan) -> int | None:
     if None in widths:
         return None
     return sum(widths) if cls == "UnionExec" else max(widths)
+
+
+_PYTHON_EVAL = "org.apache.spark.sql.execution.python.PythonSQLMetrics"
+
+
+def python_eval_census(df: DataFrame) -> tuple[int, int]:
+    """(Python eval nodes, the most of them on one root-to-leaf path of
+    one stage) in ``df``'s physical plan as planned.
+
+    A task gives each Python eval node it runs its own worker process,
+    all alive at once, so the second number is the workers one task of
+    the worst stage holds. A stage ends at an exchange; a cached
+    relation's plan is walked once, as a stage of its own; a reused
+    exchange is counted where it was first planned. Nothing runs."""
+    metrics = df.sparkSession._jvm.java.lang.Class.forName(_PYTHON_EVAL)
+    identity = df.sparkSession._jvm.java.lang.System.identityHashCode
+    stages, cached, nodes, longest = [df._jdf.queryExecution().executedPlan()], set(), 0, 0
+
+    def chain(plan) -> int:
+        nonlocal nodes
+        cls = plan.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return chain(plan.executedPlan())
+        if cls in ("ShuffleExchangeExec", "BroadcastExchangeExec"):
+            stages.append(plan.child())
+            return 0
+        if cls.endswith("QueryStageExec"):
+            stages.append(plan.plan())
+            return 0
+        if cls == "ReusedExchangeExec":
+            return 0
+        if cls == "InMemoryTableScanExec":
+            relation = identity(plan.relation().cacheBuilder())
+            if relation not in cached:
+                cached.add(relation)
+                stages.append(plan.relation().cachedPlan())
+            return 0
+        kids = plan.children()
+        below = max((chain(kids.apply(i)) for i in range(kids.size())), default=0)
+        if metrics.isInstance(plan):
+            nodes += 1
+            return below + 1
+        return below
+
+    while stages:
+        longest = max(longest, chain(stages.pop()))
+    return nodes, longest

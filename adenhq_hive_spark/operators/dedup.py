@@ -31,7 +31,8 @@ band key and its measure:
 
 - :func:`_shingle_sets`  — the materialized (id, sh) shingle-set stage;
 - :func:`_drop_hot`      — the hot-key cap, counted before any posting
-                           list is built;
+                           list is built (:func:`_hot_keys`; the trigram
+                           and winnowing indexes in search.py share it);
 - :func:`_posting_pairs` — ids grouped per key, expanded to ordered
                            (id_a, id_b) pairs;
 - :func:`_verify_jaccard` — distinct candidates verified on their full
@@ -149,9 +150,25 @@ def _posting_pairs(keyed: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-def _drop_hot(rows: DataFrame, key: str, max_df: int | None) -> DataFrame:
+def _hot_keys(rows: DataFrame, key: str, is_hot: F.Column) -> DataFrame:
+    """The ``key`` values of ``rows`` for which the aggregate ``is_hot``
+    holds, e.g. ``F.count("*") > max_df``: one map-side-combined
+    aggregate per key, so no id list is built to decide it."""
+    return (
+        rows.groupBy(key).agg(is_hot.alias("_hot")).filter("_hot").select(key)
+    )
+
+
+def _drop_hot(
+    rows: DataFrame,
+    key: str,
+    max_df: int | None = None,
+    hot: DataFrame | None = None,
+) -> DataFrame:
     """The hot-key cap: drop the ``rows`` whose ``key`` occurs in more
-    than ``max_df`` rows (all rows when ``max_df`` is None).
+    than ``max_df`` rows (all rows when ``max_df`` is None), or whose
+    key is in ``hot``, the keys a caller counted with :func:`_hot_keys`
+    because it keeps them (the trigram postings' tombstones).
 
     A key in ``d`` rows expands to O(d²) pairs, so one boilerplate
     shingle shared by a million documents would dominate the shuffle.
@@ -162,14 +179,10 @@ def _drop_hot(rows: DataFrame, key: str, max_df: int | None) -> DataFrame:
     generation only and verify on the full sets, so a reported value
     never changes; only pairs that overlap in hot keys alone are
     missed."""
-    if max_df is None:
-        return rows
-    hot = (
-        rows.groupBy(key)
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") > max_df)
-        .select(key)
-    )
+    if hot is None:
+        if max_df is None:
+            return rows
+        hot = _hot_keys(rows, key, F.count("*") > max_df)
     return rows.join(F.broadcast(hot), key, "left_anti")
 
 

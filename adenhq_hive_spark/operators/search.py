@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _drop_hot, _hot_keys
 from .sketch import _hash32
 
 
@@ -70,10 +71,9 @@ def build_trigram_postings(
         )
     # two-pass cap: a skinny map-side-partial count first, so the
     # unbounded collect_list never materializes for a hot key
-    dfreq = exploded.groupBy("trigram").agg(F.count("*").alias("_df"))
-    hot_keys = dfreq.filter(F.col("_df") > max_trigram_df).select("trigram")
+    hot_keys = _hot_keys(exploded, "trigram", F.count("*") > max_trigram_df)
     live = (
-        exploded.join(F.broadcast(hot_keys), "trigram", "left_anti")
+        _drop_hot(exploded, "trigram", hot=hot_keys)
         .groupBy("trigram")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
         .withColumn("hot", F.lit(False))
@@ -400,18 +400,10 @@ def update_trigram_postings(
     both = postings.unionByName(delta)
     id_type = postings.schema["ids"].dataType.simpleString()
     # pass 1 — integers only: merged size + sticky hot flag per trigram
-    hot_expr = F.col("any_hot")
+    is_hot = F.max("hot")
     if max_trigram_df is not None:
-        hot_expr = hot_expr | (F.col("n_total") > max_trigram_df)
-    status = (
-        both.groupBy("trigram")
-        .agg(
-            F.sum(F.size("ids")).alias("n_total"),
-            F.max("hot").alias("any_hot"),
-        )
-        .select("trigram", hot_expr.alias("hot"))
-    )
-    hot_keys = status.filter(F.col("hot")).select("trigram")
+        is_hot = is_hot | (F.sum(F.size("ids")) > max_trigram_df)
+    hot_keys = _hot_keys(both, "trigram", is_hot)
     tombstones = hot_keys.select(
         "trigram",
         F.array().cast(id_type).alias("ids"),
@@ -419,7 +411,7 @@ def update_trigram_postings(
     )
     # pass 2 — id arrays, cool keys only (every merged list ≤ cap)
     cool = (
-        both.join(F.broadcast(hot_keys), "trigram", "left_anti")
+        _drop_hot(both, "trigram", hot=hot_keys)
         .groupBy("trigram")
         .agg(F.array_sort(F.flatten(F.collect_list("ids"))).alias("ids"))
         .withColumn("hot", F.lit(False))
@@ -615,14 +607,7 @@ def winnow_overlap_pairs(
     """
     fps = winnow_fingerprints(df, k=k, w=w, text_col=text_col,
                               id_col=id_col)
-    if max_fp_df is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_fp_df)
-            .select("fp")
-        )
-        fps = fps.join(F.broadcast(hot), "fp", "left_anti")
+    fps = _drop_hot(fps, "fp", max_fp_df)
     a = fps.select(F.col(id_col).alias("id_a"), "fp")
     b = fps.select(F.col(id_col).alias("id_b"), "fp")
     return (

@@ -20,8 +20,9 @@ One ANN core: each idea has one private helper that every tier shares —
 ``_batch_topk`` (bucket-mate / Arrow-batch top-k), ``_top_cells`` (IVF
 probes), ``_require_integral`` (id/label guard), ``_collect_capped``
 (driver-capped collect), ``_ordered_sample`` (training sample),
-``_nearest_centroid`` / ``_pq_assign`` (PQ kernel), ``_adc_tables``
-(ADC lookup tables) and ``_read_books`` (codebook reader).
+``_nearest_centroid`` / ``_pq_assign`` (PQ kernel), ``_adc_tables`` /
+``_adc_frames`` (ADC lookup tables and one batch's gather) and
+``_read_books`` (codebook reader).
 
 Determinism: projection matrices and k-means seeds come from numpy
 ``default_rng(seed)``; every ranking tie is broken by id.
@@ -413,16 +414,24 @@ def ivf_cosine_topk(
         mat = np.array(list(series), dtype=np.float64)
         return mat @ bc.value.T
 
-    @F.pandas_udf("int")
-    def nearest(vcol: pd.Series) -> pd.Series:
-        return pd.Series(np.argmax(scores_of(vcol), axis=1).astype(np.int32))
+    def assign_cells(it):
+        for pdf in it:
+            if len(pdf):
+                cell = np.argmax(scores_of(pdf["cand_id_v"]), axis=1)
+                yield pdf.assign(centroid_id=cell.astype(np.int32))
 
     @F.pandas_udf("array<int>")
     def probe_list(vcol: pd.Series) -> pd.Series:
         order = _top_cells(scores_of(vcol), n_probe)
         return pd.Series(order.astype(np.int32).tolist())
 
-    postings = v.withColumn("centroid_id", nearest("cand_id_v"))
+    # one mapInPandas, not a pandas_udf column: Catalyst would copy the
+    # call into the join key's inferred isnotnull filter and assign
+    # every vector twice
+    postings = v.mapInPandas(
+        assign_cells,
+        ", ".join(f"{c} {t}" for c, t in v.dtypes) + ", centroid_id int",
+    )
     probes = q.withColumn("centroid_id", F.explode(probe_list("query_id_v")))
     return _bucket_topk(postings, probes, "centroid_id", k)
 
@@ -1026,8 +1035,7 @@ def pq_cosine_topk(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     qids, qmat = collected
 
-    codes_df = _pq_encode(v, books)
-    scored = _pq_adc_scores(codes_df, qids, qmat, books)
+    scored = _pq_adc_scores(v, qids, qmat, books)
     return _rank_topk(scored, k, refine, v, q)
 
 
@@ -1230,34 +1238,58 @@ def _adc_tables(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
     )
 
 
+def _adc_frames(
+    cand_ids: np.ndarray,
+    codes: np.ndarray,
+    qids: np.ndarray,
+    tables: np.ndarray,
+    qdotc: np.ndarray | None = None,
+):
+    """(query_id, cand_id, cosine) frames, one per query, of candidates
+    ``cand_ids`` with PQ ``codes`` (n, m) against the ADC ``tables`` of
+    the queries ``qids``: the gather sum_j tables[q, j, codes[:, j]],
+    plus the query's ``qdotc`` (IVFPQ's q·cell) where given, rounded to
+    4 places. Self-matches are dropped."""
+    arange = np.arange(codes.shape[1])
+    for qi, qid in enumerate(qids):
+        s = tables[qi][arange[None, :], codes].sum(axis=1)
+        if qdotc is not None:
+            s = s + qdotc[qi]
+        keep = cand_ids != qid
+        if keep.any():
+            yield pd.DataFrame({
+                "query_id": np.full(int(keep.sum()), qid, dtype=np.int64),
+                "cand_id": cand_ids[keep],
+                "cosine": np.round(s[keep], 4),
+            })
+
+
 def _pq_adc_scores(
-    codes_df: DataFrame, qids: np.ndarray, qmat: np.ndarray, books: np.ndarray
+    df: DataFrame, qids: np.ndarray, qmat: np.ndarray, books: np.ndarray
 ) -> DataFrame:
-    """ADC scoring of stored codes against broadcast per-query lookup
-    tables ((n_queries, m, n_codes) partial dots — tiny); one
-    vectorized numpy gather per Arrow batch. Self-matches excluded."""
+    """ADC scoring against broadcast per-query lookup tables
+    ((n_queries, m, n_codes) partial dots — tiny); one vectorized numpy
+    gather per Arrow batch (:func:`_adc_frames`). ``df`` holds stored
+    ``codes``, or the unit vectors ``cand_id_v``, which each batch
+    encodes in the same pass: one Python worker, no codes column."""
     tabs = _adc_tables(qmat, books)
-    bt = codes_df.sparkSession.sparkContext.broadcast((qids, tabs))
+    bt = df.sparkSession.sparkContext.broadcast((qids, tabs, books))
 
     def score_batches(it):
-        ids, tables = bt.value
+        ids, tables, bks = bt.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            arange = np.arange(codes.shape[1])
-            for qi, qid in enumerate(ids):
-                # gather: sum_j tables[qi, j, codes[:, j]]
-                s = tables[qi][arange[None, :], codes].sum(axis=1)
-                yield pd.DataFrame({
-                    "query_id": np.full(len(pdf), qid, dtype=np.int64),
-                    "cand_id": pdf["cand_id"].to_numpy(),
-                    "cosine": np.round(s, 4),
-                })
+            if "codes" in pdf:
+                codes = np.array(list(pdf["codes"]), dtype=np.int64)
+            else:
+                mat = np.array(list(pdf["cand_id_v"]), dtype=np.float64)
+                codes = _pq_assign(mat, bks)[0]
+            yield from _adc_frames(pdf["cand_id"].to_numpy(), codes, ids, tables)
 
-    return codes_df.mapInPandas(
+    return df.mapInPandas(
         score_batches, "query_id long, cand_id long, cosine double"
-    ).filter(F.col("cand_id") != F.col("query_id"))
+    )
 
 
 def save_pq_index(
@@ -1404,7 +1436,7 @@ def ivfpq_cosine_topk(
 
     Build: coarse spherical k-means on a bounded deterministic sample;
     every vector assigned to its nearest centroid and its RESIDUAL
-    (v - centroid) PQ-encoded in the same Arrow pass — residual
+    (v - centroid) PQ-encoded in the Arrow pass that scores it — residual
     encoding is what makes the composite beat flat PQ: residuals are
     small and centered, so the same code budget quantizes them finer.
 
@@ -1431,25 +1463,6 @@ def ivfpq_cosine_topk(
     coarse = _train_spherical_kmeans(sample, n_centroids, seed)
     assign = np.argmax(sample @ coarse.T, axis=1)
     books = _train_pq_codebooks(sample - coarse[assign], m, n_codes, seed)
-    bc = spark.sparkContext.broadcast((coarse, books))
-
-    def encode_batches(it):
-        C, B = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf["cand_id_v"]), dtype=np.float64)
-            cell = np.argmax(mat @ C.T, axis=1)
-            codes, _ = _pq_assign(mat - C[cell], B)
-            yield pd.DataFrame({
-                "cand_id": pdf["cand_id"].to_numpy(),
-                "cell": cell.astype(np.int32),
-                "codes": list(codes.tolist()),
-            })
-
-    codes_df = v.mapInPandas(
-        encode_batches, "cand_id long, cell int, codes array<int>"
-    )
 
     collected = _pq_collect_queries(q, max_queries, "ivfpq_cosine_topk")
     if collected is None:
@@ -1457,42 +1470,36 @@ def ivfpq_cosine_topk(
     qids, qmat = collected
     # per-query ADC tables over RESIDUAL codebooks (cell-independent)
     tabs = _adc_tables(qmat, books)
-    # probed cells per query by q·c desc (centroid-id tie-break)
+    # probed cells per query by q·c desc (centroid-id tie-break), and
+    # per cell its probing queries' rows and q·c
     qc = qmat @ coarse.T                      # (nq, n_centroids)
-    order = _top_cells(qc, n_probe)
-    probe_rows = [
-        (int(qids[i]), int(c), float(qc[i, c]))
-        for i in range(len(qids))
-        for c in order[i]
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, qdotc double"
-    )
-    qidx = {int(qid): i for i, qid in enumerate(qids)}
-    bt = spark.sparkContext.broadcast((qidx, tabs))
-
-    joined = codes_df.join(F.broadcast(probes), "cell").filter(
-        F.col("cand_id") != F.col("query_id")
-    )
+    probing = _top_cells(qc, n_probe)
+    probes = {}
+    for c in np.unique(probing):
+        rows = np.nonzero((probing == c).any(axis=1))[0]
+        probes[int(c)] = (qids[rows], rows, qc[rows, c])
+    bc = spark.sparkContext.broadcast((coarse, books, tabs, probes))
 
     def score_batches(it):
-        idx, tables = bt.value
+        # assign, encode the residual and score the probing queries in
+        # one Arrow pass: one Python worker per task
+        C, B, tables, by_cell = bc.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            qi = pdf["query_id"].map(idx).to_numpy(dtype=np.int64)
-            arange = np.arange(codes.shape[1])
-            # per-row gather from that row's own query table
-            s = tables[qi[:, None], arange[None, :], codes].sum(axis=1)
-            s = s + pdf["qdotc"].to_numpy()
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy(),
-                "cand_id": pdf["cand_id"].to_numpy(),
-                "cosine": np.round(s, 4),
-            })
+            mat = np.array(list(pdf["cand_id_v"]), dtype=np.float64)
+            cell = np.argmax(mat @ C.T, axis=1)
+            codes, _ = _pq_assign(mat - C[cell], B)
+            ids = pdf["cand_id"].to_numpy()
+            for c in np.unique(cell):
+                if int(c) in by_cell:
+                    qs, rows, qdotc = by_cell[int(c)]
+                    inc = cell == c
+                    yield from _adc_frames(
+                        ids[inc], codes[inc], qs, tables[rows], qdotc
+                    )
 
-    scored = joined.select("query_id", "cand_id", "codes", "qdotc").mapInPandas(
+    scored = v.mapInPandas(
         score_batches, "query_id long, cand_id long, cosine double"
     )
     return _rank_topk(scored, k, refine, v, q)

@@ -8865,11 +8865,15 @@ def _graph_agent_loop(spark, sf):
     Loop control is a per-iteration count() on the shrinking pending
     relation — the driver-side event-loop heartbeat, bounded by the
     attempt cap (3 actions total); every per-row transformation stays
-    a lazy DataFrame op.  The whole loop is deterministic, so the
-    DuckDB oracle replays it as a 3-way unrolled CASE cascade and the
-    driver row carries a full hash.
+    a lazy DataFrame op.  Each attempt's verdicts are materialized
+    once: Catalyst copies a pandas-UDF call into every filter it pushes
+    below it, so both branches and the next attempt would each judge
+    again, two Python workers per task.  The whole loop is
+    deterministic, so the DuckDB oracle replays it as a 3-way unrolled
+    CASE cascade and the driver row carries a full hash.
     """
     from ..functions.llm import judge_udf
+    from ..operators.dedup import _materialize
     from ..plans.graph import EdgeSpec, GraphRunner, GraphSpec, NodeSpec
 
     judge = judge_udf("heuristic", min_chars=120)
@@ -8883,13 +8887,13 @@ def _graph_agent_loop(spark, sf):
         a = memory["attempt"] + 1
         memory["attempt"] = a
         k = 15 * (2 ** (a - 1))
-        judged = pending.select(
+        judged = _materialize(pending.select(
             "doc_id",
             "text",
             F.concat_ws(
                 " ", F.slice(F.split(F.col("text"), " "), 1, k)
             ).alias("draft"),
-        ).withColumn("verdict", judge(F.col("draft")))
+        ).withColumn("verdict", judge(F.col("draft"))))
         resolved = judged.filter(
             (F.col("verdict") != "RETRY") | F.lit(a >= 3)
         ).select(
@@ -8916,8 +8920,6 @@ def _graph_agent_loop(spark, sf):
         # its child first, which would run the judge_udf ArrowEvalPython
         # cascade twice (r12 range-sampling audit; per-run persist,
         # released between queries)
-        from ..operators.dedup import _materialize
-
         return _materialize(done).orderBy("doc_id")
 
     g = GraphSpec(

@@ -277,6 +277,11 @@ def _compressed_oops(memory: str) -> bool:
     return int(size.group(1)) * 1024 ** unit < 32 * 1024 ** 3
 
 
+#: Driver options that can start a JFR recording, which a JVM mapping
+#: the class archive does not survive.
+_JFR_KEYS = ("spark.driver.extraJavaOptions", "spark.driver.defaultJavaOptions")
+
+
 # Class-data sharing (r13, BASELINE.md "Round 13: CDS archive"). Every
 # driver JVM used to load and verify the same classes from jars (13,625
 # in a minimal session's list), inside the ~23 s of CPU a session start
@@ -293,13 +298,22 @@ def class_archive(conf: dict[str, str]) -> tuple[str, str | None] | None:
     build, the launch class path (each jar's path, size and mtime, the
     conf directory) and the compressed-oops mode. None, after one warning,
     where that class path holds a non-empty directory, which the JVM will
-    not archive, or the archive directory cannot be made.
+    not archive, where the driver's Java options start a JFR recording,
+    or where the archive directory cannot be made.
 
     The launcher puts the conf directory on the class path. A stock
     distribution's holds only ``*.template`` files, which an empty
     directory reads the same, so an unset ``SPARK_CONF_DIR`` is pointed
     at an empty package directory; real config keeps the caller's and
     loses the archive."""
+    jfr = [k for k in _JFR_KEYS if "-XX:StartFlightRecording" in conf.get(k, "")]
+    if jfr:
+        # JDK 17 dies with SIGSEGV in KlassFactory::
+        # check_shared_class_file_load_hook on the first query of a JVM
+        # that records while it maps the archive; -Xshare:off runs
+        _LOG.warning("JVM classes load without a class-data archive: %s starts a JFR "
+                     "recording, which crashes a JVM that maps one", jfr[0])
+        return None
     home = _find_spark_home()
     conf_dir, launch_conf_dir = os.environ.get("SPARK_CONF_DIR"), None
     try:

@@ -15,6 +15,14 @@ lambda variables, ``x_12`` -> ``x``): they depend on what ran earlier in
 the JVM. The warehouse directory lies in the checkout, so it reads
 ``<warehouse>``. Two checkouts' dumps over the same entries, each in one
 JVM, then compare with a plain ``diff``.
+
+After each plan one line reads ``python: nodes=N max_chain=M``
+(``catalog.python_eval_census``, the walker of
+tests/test_plan_shapes.py's one-Python-evaluation-per-stage rule): the
+Python eval nodes of the plan and the most of them one stage stacks on
+one path, i.e. the Python workers one of its tasks holds at once.
+``grep -E '^[a-z0-9_]+: '`` over an ``all`` dump pairs each entry's
+header with that line: the census.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ import sys
 
 from bench import HEADLINE
 
+from adenhq_hive_spark.catalog import python_eval_census
 from adenhq_hive_spark.operators.dedup import release_persisted
 from adenhq_hive_spark.queries import all_queries
 from adenhq_hive_spark.session import get_spark
@@ -56,6 +65,7 @@ def main() -> None:
         try:
             df = specs[name].run(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            plan += "\npython: nodes={} max_chain={}".format(*python_eval_census(df))
         except Exception as exc:  # keep going: the dump shows the failure
             plan = f"ERROR {type(exc).__name__}: {str(exc)[:200]!r}"
         finally:

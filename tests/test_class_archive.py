@@ -19,15 +19,17 @@ from adenhq_hive_spark import session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# argv: archive directory, class-load log. The log names where each class
-# came from: "source: shared objects file" for one read from an archive.
+# argv: archive directory, class-load log, further driver Java options.
+# The log names where each class came from: "source: shared objects file"
+# for one read from an archive.
 _SESSION = r"""
 import sys
 from adenhq_hive_spark import session
 
 session._CDS_DIR = sys.argv[1]
 spark = session.get_spark("class-archive", **{
-    "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={sys.argv[2]}"})
+    "spark.driver.extraJavaOptions": " ".join([f"-Xlog:class+load=info:file={sys.argv[2]}",
+                                               *sys.argv[3:]])})
 print(spark.range(10).selectExpr("sum(id)").first()[0])
 """
 _ENV = dict(os.environ, PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
@@ -36,8 +38,9 @@ _ENV = dict(os.environ, PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.
 _WARNING = "the JVM did not start with the class-data archive"
 
 
-def _popen(cds, log) -> subprocess.Popen:
-    return subprocess.Popen([sys.executable, "-c", _SESSION, str(cds), str(log)], env=_ENV,
+def _popen(cds, log, *java_options, script=_SESSION) -> subprocess.Popen:
+    return subprocess.Popen([sys.executable, "-c", script, str(cds), str(log), *java_options],
+                            env=_ENV, cwd=os.path.dirname(log),
                             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
 
 
@@ -119,6 +122,37 @@ def test_a_rejected_archive_is_reported_once_and_replaced(first_pair, tmp_path):
     assert os.path.getsize(cds / name) > 1 << 20
     _finish(_popen(cds, tmp_path / "rebuilt.log"))
     assert _mapped(tmp_path / "rebuilt.log")
+
+
+def test_a_jfr_recording_neither_maps_nor_records_the_archive(first_pair, tmp_path):
+    """A JVM that maps the archive and records JFR dies with SIGSEGV on
+    its first query and leaves the recording empty. Such a launch warns
+    once, loads its classes from jars, leaves the archive directory as
+    it was, and writes its recording as its JVM exits."""
+    cds, _, _ = first_pair
+    before = {n: os.stat(cds / n).st_mtime_ns for n in os.listdir(cds)}
+    recording = tmp_path / "session.jfr"
+    script = _SESSION + r"""
+from pyspark import SparkContext
+
+gateway = SparkContext._gateway
+gateway.shutdown()
+gateway.proc.stdin.close()  # the JVM exits on EOF and writes the recording
+gateway.proc.wait(timeout=120)
+"""
+    err = _finish(_popen(cds, tmp_path / "jfr.log",
+                         f"-XX:StartFlightRecording=filename={recording}", script=script))
+    assert err.count("starts a JFR recording") == 1, err[-3000:]
+    assert not _mapped(tmp_path / "jfr.log")
+    assert {n: os.stat(cds / n).st_mtime_ns for n in os.listdir(cds)} == before
+    assert os.path.getsize(recording) > 0
+
+
+@pytest.mark.parametrize("key", session._JFR_KEYS)
+def test_a_jfr_option_in_either_driver_key_skips_the_archive(key, caplog):
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert session.class_archive({key: "-Xss4m -XX:StartFlightRecording=filename=x.jfr"}) is None
+    assert [key in r.getMessage() for r in caplog.records] == [True]
 
 
 @pytest.mark.parametrize("memory, coops", [

@@ -510,3 +510,35 @@ def test_agent_loop_feedback_edges_and_verdict_contract(spark):
     # attempt 1 rarely accepts — {2, 3} is the expected shape)
     attempts = {r.n_attempts for r in out}
     assert max(attempts) >= 2 and len(attempts) >= 2
+
+
+def test_agent_loop_judges_each_pending_row_once(spark, monkeypatch):
+    """The judge sees exactly the pending rows of each attempt: every
+    document, then the RETRY rows of attempts 1 and 2, so a document
+    resolved on attempt n is judged n times. A provider callable counts
+    the rows it is given through an accumulator, and applies the
+    heuristic rule, so the rows stay the registered entry's."""
+    from adenhq_hive_spark.functions import llm
+    from adenhq_hive_spark.queries import all_queries
+
+    seen = spark.sparkContext.accumulator(0)
+    judge_udf = llm.judge_udf
+
+    def counting_judge(provider="heuristic", min_chars=20):
+        def verdicts(texts):
+            seen.add(len(texts))
+            return [
+                "RETRY" if len(t.strip()) < min_chars
+                else "ESCALATE" if any(m in t.lower() for m in ("i cannot", "error:", "traceback"))
+                else "ACCEPT"
+                for t in texts
+            ]
+
+        return judge_udf(verdicts, min_chars)
+
+    spec = all_queries()["pl_graph_agent_loop"]
+    expected = spec.run(spark, SF_SMOKE).collect()
+    monkeypatch.setattr(llm, "judge_udf", counting_judge)
+    out = spec.run(spark, SF_SMOKE).collect()
+    assert out == expected
+    assert seen.value == sum(r.n_attempts for r in out)
